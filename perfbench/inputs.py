@@ -33,7 +33,7 @@ N_FILES = 8
 
 @dataclass(frozen=True)
 class Sizes:
-    reference_rows: int = 10_000
+    reference_rows: int = 30_000
     first_call_rows: int = 20_000
     first_call_infer_rows: int = 4_000
     warmup_rows: int = 2_000

@@ -283,6 +283,5 @@ class RssPeak:
 
     @property
     def mb(self) -> float:
-        """Summed over the processes alive at the last sample: the Python
-        workers of earlier, stopped sessions never ran beside these."""
+        """Summed over the processes alive at the last sample."""
         return sum(self.peaks[pid] for pid in self.alive) / 1024.0

@@ -8,14 +8,14 @@ Run from the repository root:
 One run is one fresh process with one client thread in a closed loop on
 ``local[<nproc>]``. It
 
-1. writes the workload's seeded inputs and computes their oracle results
-   (single-threaded pandas or DuckDB; cached per seed in the scratch
-   directory) before any clock starts;
-2. starts the session ``SETUPS`` times — ``get_spark`` → first
-   Python-worker job — stopping the previous one in between (the first
-   start also pays the imports and the JVM launch), then makes one
-   warm-up pass; ``setup_s`` is the median session start plus the
-   warm-up pass;
+1. has a child process write the set-up's seeded inputs and compute
+   their oracle results (single-threaded pandas or DuckDB; cached per
+   seed in the scratch directory), so that this process has imported
+   nothing but the standard library when the set-up clock starts;
+2. sets up once, as a user's fresh process does: imports (numpy,
+   pandas, pyarrow, pyspark, the library) → ``get_spark`` (JVM launch)
+   → first Python-worker job → one warm-up pass; ``setup_s`` is that
+   whole span;
 3. runs measured passes until their summed time reaches ``--seconds``
    (at least ``MIN_PASSES``), writing every op's result with
    ``sources.write_parquet`` and checking it against its oracle.
@@ -25,8 +25,8 @@ with the metrics BENCHMARK.json declares: the end-to-end ones with
 ``--trace 0``, the per-layer ones with ``--trace 1`` (traced and
 untraced passes then alternate). The line before it names the full
 record and carries per-op median latencies. A wrong result or a raised
-exception makes the run exit with code 1. ``--smoke`` runs tiny inputs
-with one set-up, for the self-tests. All files go to
+exception makes the run exit with code 1. ``--smoke`` runs tiny inputs,
+for the self-tests. All files go to
 ``.perfbench_scratch/`` under the repository root; LAYERS.md maps each
 per-layer metric to the end-to-end metric it moves.
 """
@@ -49,9 +49,10 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 SCRATCH = ROOT / ".perfbench_scratch"
 
-SETUPS = 3
 MIN_PASSES = 2
 DRIVER_MEMORY = "2g"
+# workloads.WORKLOADS, named here so that parsing the arguments imports nothing
+WORKLOADS = ("corpus_pipeline", "first_call", "reference_udf")
 
 
 def _isolate_scratch(scratch: Path) -> None:
@@ -60,6 +61,9 @@ def _isolate_scratch(scratch: Path) -> None:
     shutil.rmtree(tmp, ignore_errors=True)  # the session's temp files of earlier runs
     tmp.mkdir(parents=True)
     os.environ["TMPDIR"] = str(tmp)
+    # The library's default spark.local.dir is a shared directory under
+    # /dev/shm; a run may write only inside its checkout, so shuffle and
+    # spill files go to scratch (LAYERS.md bounds what this costs).
     os.environ["SPARK_GRAFT_LOCAL_DIR"] = str(scratch / "spark-local")
     # the launcher JVM and the driver JVM: no /tmp/hsperfdata, temp files in scratch
     os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
@@ -156,12 +160,13 @@ class Run:
 
     # -- set-up ------------------------------------------------------------
 
-    def start_session(self, t0: float) -> dict:
-        """get_spark → first Python-worker job; ``t0`` is when set-up began."""
+    def start_session(self) -> dict:
+        """get_spark → first Python-worker job."""
         from pandarallel_spark import get_spark
 
         from probes import Tracer
 
+        t0 = time.perf_counter()
         spark = get_spark(
             "perfbench", cpus=os.cpu_count(), driver_memory=DRIVER_MEMORY,
             extra_conf=_spark_conf(self.scratch),
@@ -246,34 +251,27 @@ def _environment() -> dict:
     }
 
 
-def _session_s(sessions: list[dict]) -> float:
-    return _median([s["start_s"] + s["first_python_job_s"] for s in sessions])
-
-
-def end_to_end_metrics(
-    sessions: list[dict], warmup_s: float, passes: list[dict], rss_mb: float
-) -> dict[str, float]:
+def end_to_end_metrics(setup: dict, passes: list[dict]) -> dict[str, float]:
     return {
-        "setup_s": _session_s(sessions) + warmup_s,
+        "setup_s": setup["total_s"],
         "rows_per_s": passes[0]["rows"] / _median([p["wall_s"] for p in passes]),
         "op_p50_s": _median([v for p in passes for v in p["op_s"].values()]),
-        "peak_rss_mb": rss_mb,
     }
 
 
-def layer_metrics(sessions: list[dict], warmup_s: float, passes: list[dict]) -> dict[str, float]:
-    """Per-layer metrics: session medians and the warm-up pass, then
-    medians over the traced passes of per-pass sums over their ops."""
+def layer_metrics(setup: dict, passes: list[dict], rss_mb: float) -> dict[str, float]:
+    """Per-layer metrics: the parts of the set-up, then medians over the
+    traced passes of per-pass sums over their ops."""
     from probes import TRACE_KEYS
 
     traced = [p for p in passes if p["traced"]]
     untraced = [p for p in passes if not p["traced"]]
-    out = {f"session.{k}": _median([s[k] for s in sessions]) for k in ("start_s", "first_python_job_s")}
-    out["session.warmup_s"] = warmup_s
+    out = {f"session.{k}": setup[k] for k in ("import_s", "start_s", "first_python_job_s", "warmup_s")}
     for key in TRACE_KEYS:
         out[key] = _median([sum(t.metrics[key] for t in p["traces"]) for p in traced])
     for key in ("host.busy_frac", "host.steal_frac"):
         out[key] = _median([p["host"][key] for p in passes])
+    out["peak_rss_mb"] = rss_mb
     out["reference.oracle_s"] = _median([p["oracle_s"] for p in passes])
     out["trace.overhead_s"] = _median([p["wall_s"] for p in traced]) - _median(
         [p["wall_s"] for p in untraced]
@@ -287,35 +285,46 @@ def declared_metrics(trace: bool) -> dict[str, str]:
     return {m["name"]: m["unit"] for m in spec["per_layer" if trace else "end_to_end"]}
 
 
+def prepare(workload_name: str, seed: int, scratch: Path, smoke: bool) -> None:
+    """Write the set-up's inputs and oracle results (in a child process)."""
+    proc = subprocess.run(
+        [sys.executable, __file__, "--prepare", "--workload", workload_name,
+         "--seed", str(seed), "--seconds", "0", *(["--smoke"] if smoke else [])],
+        cwd=ROOT,
+    )
+    if proc.returncode:
+        raise RuntimeError(f"preparing the inputs failed with code {proc.returncode}")
+
+
 def measure(
     workload_name: str, seed: int, seconds: float, trace: bool,
-    scratch: Path = SCRATCH, sizes=None, setups_n: int = SETUPS,
+    scratch: Path = SCRATCH, smoke: bool = False,
 ) -> tuple[dict, dict]:
-    """One benchmark run; returns the result line's object and the record."""
-    import inputs
-    import workloads
-
+    """One benchmark run; returns the result line's object and the record.
+    Call it before anything imports numpy, pandas, pyarrow or pyspark:
+    those imports are part of the set-up it measures."""
     timeline = {"start": time.time()}
-    wl = workloads.WORKLOADS[workload_name](scratch, seed, sizes or inputs.SIZES)
-    warmup = wl.warmup_pass()
+    prepare(workload_name, seed, scratch, smoke)
     timeline["inputs_ready"] = time.time()
-    run = Run(wl, scratch)
 
-    # set-up clock starts here: the imports below are the library's cost
+    # set-up clock: everything a user's fresh process pays before its
+    # first warm call, from the first import of the library's stack
     t0 = time.perf_counter()
     import pyspark.cloudpickle as cloudpickle
 
+    import inputs
     import pandarallel_spark  # noqa: F401
+    import workloads
 
     # benchmark UDFs live outside the shipped package: pickle them by value
     cloudpickle.register_pickle_by_value(workloads)
-    sessions = []
-    for k in range(setups_n):
-        if k:
-            run.stop_session()
-            t0 = time.perf_counter()
-        sessions.append(run.start_session(t0))
-    warmup_s = run.run_pass(warmup, "warmup", traced=False)["wall_s"]
+    wl = workloads.WORKLOADS[workload_name](scratch, seed, inputs.SMOKE_SIZES if smoke else inputs.SIZES)
+    warmup = wl.warmup_pass()  # cached by ``prepare``: reads files only
+    run = Run(wl, scratch)
+    setup = {"import_s": time.perf_counter() - t0}
+    setup.update(run.start_session())
+    setup["warmup_s"] = run.run_pass(warmup, "warmup", traced=False)["wall_s"]
+    setup["total_s"] = time.perf_counter() - t0
     timeline["setup_done"] = time.time()
 
     passes: list[dict] = []
@@ -330,16 +339,15 @@ def measure(
     run.stop_session()
 
     if trace:
-        metrics = layer_metrics(sessions, warmup_s, passes)
+        metrics = layer_metrics(setup, passes, run.rss.mb)
     else:
-        metrics = end_to_end_metrics(sessions, warmup_s, passes, run.rss.mb)
+        metrics = end_to_end_metrics(setup, passes)
     record = {
         "workload": workload_name,
         "seed": seed,
         "trace": int(trace),
         "environment": _environment(),
-        "sessions": sessions,
-        "warmup_s": warmup_s,
+        "setup": setup,
         "passes": [{k: v for k, v in p.items() if k != "traces"} for p in passes],
         "ops": {
             f"op.{op.name}_s": _median([p["op_s"][op.name] for p in passes if op.name in p["op_s"]])
@@ -372,7 +380,8 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--smoke", action="store_true", help="tiny inputs, one session start")
+    ap.add_argument("--smoke", action="store_true", help="tiny inputs, for the self-tests")
+    ap.add_argument("--prepare", action="store_true", help=argparse.SUPPRESS)
     args = ap.parse_args(argv)
 
     for needed in ("pandarallel_spark/__init__.py", "BENCHMARK.json"):
@@ -380,18 +389,20 @@ def main(argv=None) -> int:
             print(f"perfbench: {needed} not found under {ROOT}", file=sys.stderr)
             return 2
     sys.path.insert(0, str(ROOT))
-    import inputs
-    import workloads
+    if args.workload not in WORKLOADS:
+        ap.error(f"--workload must be one of {WORKLOADS}")
+    scratch = SCRATCH / "smoke" if args.smoke else SCRATCH
+    if args.prepare:
+        import inputs
+        import workloads
 
-    if args.workload not in workloads.WORKLOADS:
-        ap.error(f"--workload must be one of {sorted(workloads.WORKLOADS)}")
-    scratch, sizes, setups_n = SCRATCH, inputs.SIZES, SETUPS
-    if args.smoke:
-        scratch, sizes, setups_n = SCRATCH / "smoke", inputs.SMOKE_SIZES, 1
+        sizes = inputs.SMOKE_SIZES if args.smoke else inputs.SIZES
+        workloads.WORKLOADS[args.workload](scratch, args.seed, sizes).warmup_pass()
+        return 0
     _isolate_scratch(scratch)
     try:
         result, record = measure(
-            args.workload, args.seed, args.seconds, bool(args.trace), scratch, sizes, setups_n
+            args.workload, args.seed, args.seconds, bool(args.trace), scratch, args.smoke
         )
     finally:
         _shutdown_jvm()

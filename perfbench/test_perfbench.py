@@ -37,6 +37,7 @@ def test_benchmark_json_shape():
     assert 2 <= len(names) <= 8
     assert all(set(w) == {"name", "why"} and len(w["why"]) <= 200 for w in SPEC["workloads"])
     assert set(names) <= set(workloads.WORKLOADS)
+    assert set(run.WORKLOADS) == set(workloads.WORKLOADS)
     metrics = SPEC["end_to_end"] + SPEC["per_layer"]
     all_names = names + [m["name"] for m in metrics]
     assert len(all_names) == len(set(all_names))
@@ -63,10 +64,10 @@ def _fake_pass(traced: bool) -> dict:
 
 
 def test_computed_metrics_are_the_declared_ones():
-    sessions = [{"start_s": 1.0, "first_python_job_s": 1.0}] * 3
-    e2e = run.end_to_end_metrics(sessions, 1.0, [_fake_pass(False)] * 2, 100.0)
+    setup = {"import_s": 1.0, "start_s": 1.0, "first_python_job_s": 1.0, "warmup_s": 1.0, "total_s": 4.0}
+    e2e = run.end_to_end_metrics(setup, [_fake_pass(False)] * 2)
     assert set(e2e) == set(run.declared_metrics(trace=False))
-    layers = run.layer_metrics(sessions, 1.0, [_fake_pass(True), _fake_pass(False)])
+    layers = run.layer_metrics(setup, [_fake_pass(True), _fake_pass(False)], 100.0)
     assert set(layers) == set(run.declared_metrics(trace=True))
 
 

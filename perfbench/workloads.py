@@ -191,6 +191,14 @@ def row_scaled(row):
 # -- workloads --------------------------------------------------------------
 
 
+def parallelize(*args, **kwargs):
+    """The library's facade, imported at the first call: preparing the
+    inputs in a child process must not import the library."""
+    from pandarallel_spark import parallelize
+
+    return parallelize(*args, **kwargs)
+
+
 class Workload:
     """A workload hands out passes: ``warmup_pass()`` for the set-up and
     ``measured_pass(k)`` for the ``k``-th measured pass."""
@@ -223,12 +231,13 @@ class ReferenceUdf(Workload):
 
     @cached_property
     def _pass(self) -> Pass:
-        from pandarallel_spark import parallelize
-
         n = self.sizes.reference_rows
-        pdf = inputs.reference_frame(self.seed, 0, n)
-        path = str(inputs.write_once(self.in_dir / f"n{n}", lambda p: inputs.write_frame(pdf, p)))
-        wants, oracle_s = _cached(self.oracle_dir / f"n{n}.pkl", lambda: self._oracle(pdf))
+
+        def pdf():
+            return inputs.reference_frame(self.seed, 0, n)
+
+        path = str(inputs.write_once(self.in_dir / f"n{n}", lambda p: inputs.write_frame(pdf(), p)))
+        wants, oracle_s = _cached(self.oracle_dir / f"n{n}.pkl", lambda: self._oracle(pdf()))
         full = "idx bigint, a bigint, b double, x double, g300 bigint, g30k bigint, result double"
 
         def read(spark):
@@ -301,8 +310,6 @@ class FirstCall(Workload):
 
     def _make_pass(self, tag: str, stream: int, n: int) -> Pass:
         """One never-read file per op; files of op ``i`` use ``stream + i``."""
-        from pandarallel_spark import parallelize
-
         n_infer = min(n, self.sizes.first_call_infer_rows)
         makes = {
             "rolling_mean": lambda i: inputs.series_frame(self.seed, i, n),
