@@ -19,8 +19,10 @@ Design rules (see SURVEY.md §4):
 
 from pandarallel_spark.engine import Engine, parallelize
 from pandarallel_spark.progress import spark_progress
-from pandarallel_spark.session import get_spark
+from pandarallel_spark.session import _patch_worker_zipimport, get_spark
 
 __version__ = "0.1.0"
+
+_patch_worker_zipimport()
 
 __all__ = ["Engine", "parallelize", "get_spark", "spark_progress", "__version__"]

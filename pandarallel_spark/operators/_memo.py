@@ -163,6 +163,16 @@ def coarse_group_count(spark, factor: int = 4, cap: int = 65536) -> int:
     return max(1, min(factor * shuffle_partitions(spark), cap))
 
 
+def fresh_column(df: DataFrame, base: str) -> str:
+    """``base``, suffixed with ``_`` until no column of ``df`` has that
+    name (case-insensitively, as Spark resolves by default), so a
+    temporary column never replaces and then drops a user column."""
+    taken = {c.lower() for c in df.columns}
+    while base.lower() in taken:
+        base += "_"
+    return base
+
+
 def memo_put(memo: dict, key, val, cap: int = 16) -> None:
     """Insert with bounded-FIFO eviction (oldest insertion first)."""
     while len(memo) >= cap:

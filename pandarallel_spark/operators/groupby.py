@@ -153,17 +153,19 @@ def grouped_apply(
         "aggregates (map-side partial, never a whole group in Python)",
     )
 
-    def apply_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def group_row(key: tuple, pdf: pd.DataFrame) -> dict:
+        """scalar/series modes: one output row per group."""
         res = func(pdf, *args, **kwargs)
+        row = dict(zip(keys, key))
         if mode == "scalar":
-            row = dict(zip(keys, key))
             row[value_names[0]] = res
-            return pd.DataFrame([row], columns=out_names)
-        if mode == "series":
-            row = dict(zip(keys, key))
+        else:
             row.update({str(i): v for i, v in res.items()})
-            return pd.DataFrame([row], columns=out_names)
-        out = res.copy()
+        return row
+
+    def group_frame(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        """frame mode: the func's frame with missing key columns added."""
+        out = func(pdf, *args, **kwargs).copy()
         for k, v in zip(keys, key):
             if k not in out.columns:
                 out[k] = v
@@ -187,40 +189,23 @@ def grouped_apply(
     # grouping.
     from pyspark.sql import functions as F
 
-    from pandarallel_spark.operators._memo import coarse_group_count
+    from pandarallel_spark.operators._memo import coarse_group_count, fresh_column
 
     n_buckets = coarse_group_count(df.sparkSession)
+    bkt_col = fresh_column(df, "__gb_bkt__")
 
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop(columns="__gb_bkt__")
+        groups = (
+            (key if isinstance(key, tuple) else (key,), g.reset_index(drop=True))
+            for key, g in pdf.drop(columns=bkt_col).groupby(keys, sort=False, dropna=False)
+        )
         if mode == "frame":
-            outs = []
-            for key, g in pdf.groupby(keys, sort=False, dropna=False):
-                if not isinstance(key, tuple):
-                    key = (key,)
-                outs.append(apply_fn(key, g.reset_index(drop=True)))
-            if not outs:
-                return pd.DataFrame(columns=out_names)
-            return pd.concat(outs, ignore_index=True)
-        # scalar/series: one output ROW per group — accumulate dicts
-        # and build ONE frame per bucket (30k single-row frames +
-        # concat measured ~2× the remaining per-group cost)
-        rows = []
-        for key, g in pdf.groupby(keys, sort=False, dropna=False):
-            if not isinstance(key, tuple):
-                key = (key,)
-            res = func(g.reset_index(drop=True), *args, **kwargs)
-            row = dict(zip(keys, key))
-            if mode == "scalar":
-                row[value_names[0]] = res
-            else:
-                row.update({str(i): v for i, v in res.items()})
-            rows.append(row)
-        return pd.DataFrame(rows, columns=out_names)
+            outs = [group_frame(k, g) for k, g in groups]
+            return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(columns=out_names)
+        # scalar/series: accumulate row dicts and build ONE frame per
+        # bucket (30k single-row frames + concat measured ~2× the
+        # remaining per-group cost)
+        return pd.DataFrame([group_row(k, g) for k, g in groups], columns=out_names)
 
     bkt = F.pmod(F.xxhash64(*keys), F.lit(n_buckets))
-    return (
-        df.withColumn("__gb_bkt__", bkt)
-        .groupBy("__gb_bkt__")
-        .applyInPandas(per_bucket, schema)
-    )
+    return df.withColumn(bkt_col, bkt).groupBy(bkt_col).applyInPandas(per_bucket, schema)

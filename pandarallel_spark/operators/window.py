@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 from pandarallel_spark.operators._memo import (
     constant_partition_key,
     eager_build_guard,
+    fresh_column,
     memo_put,
     plan_data_key,
     shuffle_partitions,
@@ -2477,12 +2478,11 @@ def _grouped_pandas_window(
 
     n_buckets = max(2, shuffle_partitions(df.sparkSession) * 4)
     bkt = F.pmod(F.hash(*keys), F.lit(n_buckets))
+    bkt_col = fresh_column(df, "__gbkt__")
     return (
-        df.withColumn("__gbkt__", bkt)
-        .groupBy("__gbkt__")
-        .applyInPandas(
-            lambda pdf: per_bucket(pdf.drop(columns="__gbkt__")), out_schema
-        )
+        df.withColumn(bkt_col, bkt)
+        .groupBy(bkt_col)
+        .applyInPandas(lambda pdf: per_bucket(pdf.drop(columns=bkt_col)), out_schema)
     )
 
 

@@ -14,13 +14,30 @@ Scale notes (targets a 1000-executor cluster even though tests run
 - AQE is always on: runtime partition coalescing, skew-join splitting.
 - Arrow batch size bounds per-batch memory for pandas UDFs so a 100 TB
   scan never materializes unbounded batches in a Python worker.
+
+Per-task worker cost: before every task a PySpark Python worker calls
+``importlib.invalidate_caches()`` (``pyspark/worker_util.py``,
+``setup_spark_files``). On CPython 3.10-3.12 that makes every live
+``zipimporter`` re-read its whole archive directory; a reused worker
+holds ~20 of them (pyspark.zip once per imported sub-package, the
+spark-core jar, py4j, this package's shipped zip), ~27k entries that
+cost 0.20-0.23 s of worker CPU per task — most of a small UDF task.
+CPython 3.13 made the re-read lazy. ``_patch_worker_zipimport`` (run
+once per worker process when this package is imported there, as
+unpickling a library UDF does) swaps in a ``zipimporter``
+invalidation that re-reads an archive only when its
+``(st_mtime_ns, st_size)`` changed since that importer last read it,
+so a rewritten zip is still picked up. It never touches the driver
+process or CPython >= 3.13 and has no option.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -47,6 +64,53 @@ def _local_dir() -> str | None:
         os.makedirs(d, exist_ok=True)
         return d
     return None
+
+
+# CPython's eager invalidation: re-reads the archive's directory
+_ZIP_REREAD = zipimport.zipimporter.invalidate_caches
+
+
+def _archive_stamp(archive: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+def _zip_invalidate_if_changed(self: zipimport.zipimporter) -> None:
+    """``zipimporter.invalidate_caches`` that skips the directory
+    re-read when the archive is unchanged since this importer read it."""
+    stamp = _archive_stamp(self.archive)
+    if stamp is not None and getattr(self, "_read_stamp", None) == stamp:
+        return
+    _ZIP_REREAD(self)
+    self._read_stamp = stamp
+
+
+def _patch_worker_zipimport() -> bool:
+    """Install ``_zip_invalidate_if_changed`` in a PySpark worker on
+    CPython < 3.13 (see the module docstring); a no-op anywhere else.
+    Returns whether the patch is in place."""
+    if sys.implementation.name != "cpython" or sys.version_info >= (3, 13):
+        return False
+    try:
+        from pyspark.core.files import SparkFiles
+    except ImportError:  # Spark Connect-only client: never a worker
+        return False
+    if not SparkFiles._is_running_on_worker:
+        return False
+    zi = zipimport.zipimporter
+    if zi.invalidate_caches is not _zip_invalidate_if_changed:
+        # the flag is set just before this task's invalidate_caches(),
+        # so every live importer has read its archive since: stamp them
+        # rather than pay one more full re-read
+        for finder in list(sys.path_importer_cache.values()):
+            if isinstance(finder, zi):
+                finder._read_stamp = _archive_stamp(finder.archive)
+        zi.invalidate_caches = _zip_invalidate_if_changed
+    return True
+
 
 _PKG_ZIP: str | None = None
 _SHIPPED_CONTEXTS: set[str] = set()

@@ -118,10 +118,23 @@ _SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    matched = set()
     for item in items:
         name = getattr(item, "originalname", None) or item.name.split("[")[0]
         if (item.fspath.basename, name) in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+            matched.add((item.fspath.basename, name))
+    # a renamed test would silently drop out of the list and run in the
+    # default suite again: every entry for a fully collected file must
+    # match. Files named with a ``::`` node id were collected in part.
+    partial = {os.path.basename(a.split("::")[0]) for a in config.args if "::" in a}
+    collected = {item.fspath.basename for item in items} - partial
+    dead = sorted(e for e in _SLOW_TESTS - matched if e[0] in collected)
+    if dead:
+        raise pytest.UsageError(
+            "_SLOW_TESTS entries match no collected test: "
+            + ", ".join(f"{f}::{n}" for f, n in dead)
+        )
 
 
 @pytest.fixture(scope="session")

@@ -195,3 +195,19 @@ def test_grouped_apply_coarse_bucketing_is_group_count_invariant(
         # incl. the NULL-keyed ones)
         if mode == "scalar":
             assert len(results[0]) == 5
+
+
+def test_grouped_apply_keeps_user_column_named_like_bucket(spark):
+    """The coarse-bucket temp column takes a name no user column has: a
+    user column called ``__gb_bkt__`` reaches ``func`` intact."""
+    from pandarallel_spark.operators import groupby as gb
+
+    pdf = pd.DataFrame({"k": [1, 1, 2, 3, 3, 3], "__gb_bkt__": [10.0, 20.0, 30.0, 1.0, 2.0, 3.0]})
+    got = (
+        gb.grouped_apply(
+            spark.createDataFrame(pdf), "k", lambda g: float(g["__gb_bkt__"].sum()),
+            schema="k long, result double", mode="scalar",
+        )
+        .toPandas().sort_values("k").reset_index(drop=True)
+    )
+    assert got["result"].tolist() == [30.0, 30.0, 6.0]

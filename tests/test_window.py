@@ -2196,3 +2196,19 @@ def test_ewm_times_positional_validates_halflife(spark):
             parallelize(sdf, order_by="idx").series("x").ewm(
                 halflife=bad, times="ts"
             ).mean()
+
+
+def test_grouped_window_udf_keeps_user_column_named_like_bucket(spark, pdf):
+    """The grouped-UDF window's temp bucket column takes a name no user
+    column has: a user column called ``__gbkt__`` passes through."""
+    from pandarallel_spark.operators.window import expanding_apply
+
+    src = pdf.assign(__gbkt__=pdf["idx"] * 2)
+    out = expanding_apply(
+        spark.createDataFrame(src), "b", lambda w: w.sum(), "idx",
+        partition_by=["a"], output_col="r",
+    ).toPandas().sort_values("idx").reset_index(drop=True)
+    assert out.columns.tolist() == [*src.columns, "r"]
+    assert (out["__gbkt__"] == out["idx"] * 2).all()
+    expected = src.groupby("a").b.expanding().sum().reset_index(level=0).sort_index()["b"]
+    np.testing.assert_allclose(out["r"], expected.to_numpy())
