@@ -25,6 +25,16 @@ from pyspark.sql import DataFrame
 STRICT_LAZY_CONF = "spark.pandarallel_spark.strictLazy"
 
 
+def strict_lazy(spark) -> bool:
+    """Whether the session forbids Spark jobs at plan-build time
+    (``spark.pandarallel_spark.strictLazy``); an unreadable conf means
+    not strict."""
+    try:
+        return str(spark.conf.get(STRICT_LAZY_CONF, "false")).lower() == "true"
+    except Exception:  # noqa: BLE001 — unreadable conf: not strict
+        return False
+
+
 def eager_build_guard(spark, what: str, skip_hint: str) -> None:
     """Raise under strict-lazy mode instead of running a build-time job.
 
@@ -34,16 +44,17 @@ def eager_build_guard(spark, what: str, skip_hint: str) -> None:
     bucket boundaries). That is the right engineering for interactive
     use, but a pipeline that constructs plans against a busy or stopped
     session should be able to forbid surprise cluster work: set
-    ``spark.conf.set("spark.pandarallel_spark.strictLazy", "true")``
-    and every such site raises ``RuntimeError`` naming the job and the
-    explicit argument that skips it. Memo HITS never trigger the guard
-    (nothing runs); only a build that would actually launch a job does.
+    ``spark.conf.set("spark.pandarallel_spark.strictLazy", "true")``.
+    Global range-bucket windows (builtin halo rolling, expanding, time
+    rolling, the ewm carry scans) then fall back to their lazy
+    single-partition plan — halo rolling, the time-rolling UDF and the
+    ewm scans warn ``SINGLE-PARTITION`` — and every other build-time
+    job site calls this guard, which raises ``RuntimeError``
+    naming the job and the explicit argument that skips it. Memo HITS
+    never trigger either (nothing runs); only a build that would
+    actually launch a job does.
     """
-    try:
-        flag = spark.conf.get(STRICT_LAZY_CONF, "false")
-    except Exception:  # noqa: BLE001 — unreadable conf: not strict
-        return
-    if str(flag).lower() == "true":
+    if strict_lazy(spark):
         raise RuntimeError(
             f"strictLazy is set and building this plan would run an eager "
             f"Spark job ({what}). {skip_hint}"
@@ -86,11 +97,7 @@ def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
         # keeps the lazy localCheckpoint — the caller opted into strict
         # laziness first, and the fault-tolerance opt-in only governs
         # the sites that were already eager.
-        try:
-            strict = str(spark.conf.get(STRICT_LAZY_CONF, "false")).lower()
-        except Exception:  # noqa: BLE001 — unreadable conf: not strict
-            strict = "false"
-        if strict == "true":
+        if strict_lazy(spark):
             return df.localCheckpoint(eager=False)
     if spark.sparkContext.getCheckpointDir() is None:
         raise RuntimeError(

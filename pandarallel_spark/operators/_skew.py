@@ -46,9 +46,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pandarallel_spark.operators._memo import (
-    STRICT_LAZY_CONF,
     memo_put,
     plan_data_key,
+    strict_lazy,
 )
 
 GROUP_SKEW_BOUND_CONF = "spark.pandarallel_spark.groupSkew.rowBound"
@@ -83,11 +83,8 @@ def warn_on_group_skew(
     if bound <= 0 or fraction <= 0:
         return None
     fraction = min(fraction, 1.0)
-    try:
-        if str(spark.conf.get(STRICT_LAZY_CONF, "false")).lower() == "true":
-            return None  # advisory probe: skip, don't raise
-    except Exception:  # noqa: BLE001 — unreadable conf: not strict
-        pass
+    if strict_lazy(spark):
+        return None  # advisory probe: skip, don't raise
     key = plan_data_key(df, tuple(keys), round(fraction, 6))
     if key is None:
         return None  # no stable data identity to memoize → skip

@@ -37,11 +37,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pandarallel_spark.operators._memo import (
-    STRICT_LAZY_CONF,
     coarse_group_count,
     eager_build_guard,
     memo_put,
     plan_data_key,
+    strict_lazy,
     truncate_lineage,
 )
 from pandarallel_spark.operators.text import fingerprint, tokens
@@ -99,11 +99,8 @@ def resolve_broadcast_candidates(
     if setting != "auto":
         return bool(setting)
     spark = candidates.sparkSession
-    try:
-        if str(spark.conf.get(STRICT_LAZY_CONF, "false")).lower() == "true":
-            return False
-    except Exception:  # noqa: BLE001 — unreadable conf: not strict
-        pass
+    if strict_lazy(spark):
+        return False
     try:
         cap = int(spark.conf.get(_CANDIDATE_BC_CAP_CONF,
                                  str(_CANDIDATE_BC_CAP_DEFAULT)))

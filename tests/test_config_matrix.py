@@ -72,8 +72,10 @@ def test_rolling_center(spark):
 
 # ---------------------------------------------------------------------------
 # strictLazy: every eager build-time job site must raise (not run) under
-# spark.pandarallel_spark.strictLazy=true, and every site's documented
-# escape hatch must build cleanly under the same flag.
+# spark.pandarallel_spark.strictLazy=true, or — for global range-bucket
+# windows — fall back to the lazy single-partition plan with a warning,
+# and every site's documented escape hatch must build cleanly under the
+# same flag.
 # ---------------------------------------------------------------------------
 
 
@@ -180,47 +182,55 @@ def test_strict_lazy_dim_inference(strict, tmp_path):
 
 
 def test_strict_lazy_global_ewm(strict, tmp_path):
+    """A cold global ewm build under strictLazy takes the lazy
+    single-partition stock-pandas plan, like the other global
+    range-bucket windows: it warns SINGLE-PARTITION, building it
+    launches no Spark job, and the result matches pandas."""
     import numpy as np
 
-    from pandarallel_spark.operators.window import ewm_mean
+    from pandarallel_spark.operators.window import (
+        ewm_mean,
+        ewm_mean_times,
+        ewm_moment,
+        ewm_sum,
+    )
 
     pdf = pd.DataFrame(
         {"idx": np.arange(300, dtype="int64"),
          "x": np.random.default_rng(3).random(300)}
     )
     sdf = _parquet(strict, tmp_path, "ewm", pdf)
-    with pytest.raises(RuntimeError, match="strictLazy.*ewm"):
-        ewm_mean(sdf, "x", "idx", alpha=0.4)
-    # global ewm var (r7): same guard on its moment-seed build; the
-    # adjust=False form never builds (single-partition scan)
-    from pandarallel_spark.operators.window import ewm_moment
-
-    with pytest.raises(RuntimeError, match="strictLazy.*ewm var"):
-        ewm_moment(sdf, "x", "idx", "var", alpha=0.4)
-    ewm_moment(sdf, "x", "idx", "var", alpha=0.4, adjust=False)
-    # escape hatches named in the error: grouped path is fully lazy;
-    # single-partition path skips the build jobs
-    ewm_mean(sdf.withColumn("k", sdf.idx % 3), "x", "idx",
-             alpha=0.4, partition_by=["k"])
-    ewm_moment(sdf.withColumn("k", sdf.idx % 3), "x", "idx", "std",
-               alpha=0.4, partition_by=["k"])
-    # global ewm sum (r7): same guard on its linear-fold seed build
-    from pandarallel_spark.operators.window import ewm_sum
-
-    with pytest.raises(RuntimeError, match="strictLazy.*ewm-sum"):
-        ewm_sum(sdf, "x", "idx", alpha=0.4)
-    ewm_sum(sdf.withColumn("k", sdf.idx % 3), "x", "idx",
-            alpha=0.4, partition_by=["k"])
-    # global times-ewm (late r7): same guard on its wall-clock seed build
-    from pandarallel_spark.operators.window import ewm_mean_times
-
     tp = pd.DataFrame(
         {"ts": pd.date_range("2024-01-01", periods=300, freq="min"),
          "x": np.random.default_rng(5).random(300)}
     )
     tdf = _parquet(strict, tmp_path, "ewmt", tp)
-    with pytest.raises(RuntimeError, match="strictLazy.*times-ewm"):
-        ewm_mean_times(tdf, "x", "ts", "1h")
+    tracker = strict.sparkContext.statusTracker()
+    for build, expected, key in (
+        (lambda: ewm_mean(sdf, "x", "idx", alpha=0.4, output_col="r"),
+         pdf.x.ewm(alpha=0.4).mean(), "idx"),
+        (lambda: ewm_moment(sdf, "x", "idx", "var", alpha=0.4, output_col="r"),
+         pdf.x.ewm(alpha=0.4).var(), "idx"),
+        (lambda: ewm_sum(sdf, "x", "idx", alpha=0.4, output_col="r"),
+         pdf.x.ewm(alpha=0.4).sum(), "idx"),
+        (lambda: ewm_mean_times(tdf, "x", "ts", "1h", output_col="r"),
+         tp.x.ewm(halflife=pd.Timedelta("1h"), times=tp.ts).mean(), "ts"),
+    ):
+        before = tracker.getJobIdsForGroup(None)
+        with pytest.warns(UserWarning, match="SINGLE-PARTITION"):
+            out = build()
+        assert tracker.getJobIdsForGroup(None) == before
+        got = out.toPandas().sort_values(key)["r"].to_numpy(dtype="float64")
+        np.testing.assert_allclose(got, expected.to_numpy(), rtol=1e-12)
+    # the adjust=False var form never builds (single-partition scan)
+    ewm_moment(sdf, "x", "idx", "var", alpha=0.4, adjust=False)
+    # the grouped path is fully lazy
+    ewm_mean(sdf.withColumn("k", sdf.idx % 3), "x", "idx",
+             alpha=0.4, partition_by=["k"])
+    ewm_moment(sdf.withColumn("k", sdf.idx % 3), "x", "idx", "std",
+               alpha=0.4, partition_by=["k"])
+    ewm_sum(sdf.withColumn("k", sdf.idx % 3), "x", "idx",
+            alpha=0.4, partition_by=["k"])
     ewm_mean_times(
         tdf.withColumn("k", tdf.x > 0.5), "x", "ts", "1h", partition_by=["k"]
     )

@@ -2212,3 +2212,48 @@ def test_grouped_window_udf_keeps_user_column_named_like_bucket(spark, pdf):
     assert (out["__gbkt__"] == out["idx"] * 2).all()
     expected = src.groupby("a").b.expanding().sum().reset_index(level=0).sort_index()["b"]
     np.testing.assert_allclose(out["r"], expected.to_numpy())
+
+
+@pytest.mark.parametrize(
+    "op", ["ewm_mean", "ewm_sum", "ewm_var", "ewm_mean_times", "expanding_sum"]
+)
+def test_global_scan_keeps_user_column_named_like_bucket(spark, pdf, op):
+    """The global ewm carry scans and the global expanding carry take a
+    bucket column name no user column has: a user column called
+    ``__bkt__`` passes through and the results still match pandas."""
+    from pandarallel_spark.operators import window as W
+
+    src = pdf.assign(
+        ts=pd.Timestamp("2024-01-01") + pd.to_timedelta(pdf["idx"] * 7, unit="min"),
+        __bkt__=777,
+    )
+    sdf = spark.createDataFrame(src)
+    s = src["b"]
+    out, expected = {
+        "ewm_mean": lambda: (
+            W.ewm_mean(sdf, "b", "idx", alpha=0.3, output_col="r"),
+            s.ewm(alpha=0.3).mean(),
+        ),
+        "ewm_sum": lambda: (
+            W.ewm_sum(sdf, "b", "idx", alpha=0.3, output_col="r"),
+            s.ewm(alpha=0.3).sum(),
+        ),
+        "ewm_var": lambda: (
+            W.ewm_moment(sdf, "b", "idx", "var", alpha=0.3, output_col="r"),
+            s.ewm(alpha=0.3).var(),
+        ),
+        "ewm_mean_times": lambda: (
+            W.ewm_mean_times(sdf, "b", "ts", "1h", output_col="r"),
+            s.ewm(halflife=pd.Timedelta("1h"), times=src["ts"]).mean(),
+        ),
+        "expanding_sum": lambda: (
+            W.expanding_apply(sdf, "b", "sum", "idx", output_col="r"),
+            s.expanding().sum(),
+        ),
+    }[op]()
+    out = out.toPandas().sort_values("idx").reset_index(drop=True)
+    assert out.columns.tolist() == [*src.columns, "r"]
+    assert (out["__bkt__"] == 777).all()
+    np.testing.assert_allclose(
+        out["r"], expected.to_numpy(), rtol=1e-7, atol=1e-12
+    )
