@@ -45,11 +45,11 @@ def eager_build_guard(spark, what: str, skip_hint: str) -> None:
     use, but a pipeline that constructs plans against a busy or stopped
     session should be able to forbid surprise cluster work: set
     ``spark.conf.set("spark.pandarallel_spark.strictLazy", "true")``.
-    Global range-bucket windows (builtin halo rolling, expanding, time
-    rolling, the ewm carry scans) then fall back to their lazy
-    single-partition plan — halo rolling, the time-rolling UDF and the
-    ewm scans warn ``SINGLE-PARTITION`` — and every other build-time
-    job site calls this guard, which raises ``RuntimeError``
+    Global range-bucket windows (halo rolling — builtin and UDF —
+    expanding, time rolling, the ewm carry scans) then fall back to
+    their lazy single-partition plan and warn ``SINGLE-PARTITION``;
+    every other build-time job site (e.g. the global as-of join's
+    boundary sampling) calls this guard, which raises ``RuntimeError``
     naming the job and the explicit argument that skips it. Memo HITS
     never trigger either (nothing runs); only a build that would
     actually launch a job does.

@@ -79,7 +79,7 @@ def asof_join(
     ``on=None`` (or ``[]``) is the GLOBAL as-of — ``pd.merge_asof``
     without ``by=``, the most common pandas call shape. A naive keyed
     window would run single-partition; instead the union is
-    range-bucketed on the timestamp (literal ``approxQuantile``
+    range-bucketed on the timestamp (literal sampled-quantile
     boundaries, same machinery as the halo rolling in
     operators/window.py) and each bucket's cross-boundary match is a
     per-bucket CARRY row: the last/first right row of the preceding/
@@ -255,9 +255,9 @@ def _global_asof_buckets(
     Returns ``(unioned', has_carry)``. When ``has_carry`` the frame
     carries three extra columns:
 
-    - ``__bkt__`` — range-bucket id from literal ``approxQuantile``
-      boundaries over the timestamp (``bucket_assignment_expr``, shared
-      with the halo rolling). NULL/NaN left timestamps route to bucket
+    - ``__bkt__`` — range-bucket id from literal sampled-quantile
+      boundaries over the timestamp (``window.range_boundaries``,
+      shared with the range-bucket windows). NULL/NaN left timestamps route to bucket
       ``-1`` (→ NULL match); NULL/NaN right timestamps are dropped.
       Ties always share a bucket (monotone map), so cross-bucket carry
       rows are strictly earlier/later in ts than every row they serve.
@@ -286,36 +286,24 @@ def _global_asof_buckets(
     n_parts = shuffle_partitions(spark)
 
     if orderable and n_parts > 1:
-        if isinstance(ts_type, T.NumericType):
-            t_num = t.cast("double")
-        else:
-            t_num = t.cast("timestamp").cast("double")
         n_buckets = max(2, min(1024, n_parts * 8))
         key = plan_data_key(unioned, "__global_asof__", n_buckets)
         memo = _ASOF_MEMO.get(key) if key is not None else None
         if memo is None:
             eager_build_guard(
                 spark,
-                "global as-of bucket boundary sampling (one approxQuantile job)",
+                "global as-of bucket boundary sampling (one quantile-sketch job)",
                 "Pass equi-keys via on=, set spark.sql.shuffle.partitions=1 "
                 "for the single-partition path, or build this join once "
                 "outside strict-lazy scope (boundaries are memoized per "
                 "plan+data).",
             )
-            probs = [i / n_buckets for i in range(n_buckets + 1)]
-            qs = (
-                unioned.filter(~bad)
-                .select(t_num.alias("__q__"))
-                .approxQuantile("__q__", probs, 1.0 / n_buckets)
-            )
-            vlo, vhi = (qs[0], qs[-1]) if qs else (float("nan"), float("nan"))
-            memo = {"bnds": sorted(set(qs[1:-1])), "vlo": vlo, "vhi": vhi}
+            from pandarallel_spark.operators.window import range_boundaries
+
+            memo = range_boundaries(unioned.filter(~bad), "__t__", n_buckets)
             if key is not None:
                 memo_put(_ASOF_MEMO, key, memo)
-        from pandarallel_spark.operators.window import bucket_assignment_expr
-
-        bnds = memo["bnds"]
-        bexpr = bucket_assignment_expr(t_num, bnds, memo["vlo"], memo["vhi"])
+        bnds, bexpr = memo["bnds"], memo["bexpr"]
     else:
         bnds, bexpr = [], F.lit(0)
 

@@ -22,7 +22,7 @@ Scale notes:
   ``Window.orderBy`` (total order). Instead it runs the reference's own
   overlap-chunk design (``series_rolling.py:16,47`` over-reads
   ``window`` rows per chunk and drops them post-compute) as a Spark
-  plan: range-bucket on the order column (approxQuantile boundaries),
+  plan: range-bucket on the order column (sampled quantile boundaries),
   duplicate each bucket's tail ``window-1`` rows into the next bucket
   as halo, run pandas rolling per bucket, drop halo rows. Linear, one
   shuffle, parallel in the bucket count.
@@ -40,7 +40,6 @@ from pyspark.sql import types as T
 
 from pandarallel_spark.operators._memo import (
     constant_partition_key,
-    eager_build_guard,
     fresh_column,
     memo_put,
     plan_data_key,
@@ -48,7 +47,8 @@ from pandarallel_spark.operators._memo import (
     strict_lazy,
 )
 
-# _halo_rolling memo: plan_data_key(df, ord, col, ix, n, frame) →
+# _halo_rolling memo: plan_data_key(df, ord, col, ix, pair, n, frame,
+# temp column names) →
 # {"bexpr": bucket-assignment Column, "ctx": per-bucket boundary context
 # rows, "ctx_union": context rows as a small pandas frame for the JVM
 # path, "ctx_sdf"/"ctx_bc": their Spark-side forms}. Bounded FIFO;
@@ -56,6 +56,9 @@ from pandarallel_spark.operators._memo import (
 # plan fragment. Keys include the input FILE LIST, so overwriting the
 # same path with new data misses the memo (see _memo.plan_data_key).
 _HALO_MEMO: dict = {}
+
+# order-column types range buckets can sample (as a numeric view)
+_ORDERABLE = (T.NumericType, T.DateType, T.TimestampType, T.TimestampNTZType)
 
 # symbolic-window memo: (plan key items..., func digest) → gated Column
 # or None ("tried, not expressible") — the validation probe is a small
@@ -112,15 +115,17 @@ def _symbolic_rolling_expr(
     closed: str | None,
     lo: int,
     hi: int,
+    bkt: str,
 ) -> Column | None:
     """Try to express ``func`` as a gated JVM window expression over
-    per-bucket lag/lead slots; validate numerically against pandas on a
-    64-row probe (NaN included) before accepting. Returns None when the
-    func isn't slot-arithmetic or the probe disagrees beyond float ulp
-    tolerance (``vectorize=False`` callers never get here — they keep
-    strict pandas bit parity on the Python path)."""
+    lag/lead slots within each bucket (column ``bkt``); validate
+    numerically against pandas on a 64-row probe (NaN included) before
+    accepting. Returns None when the func isn't slot-arithmetic or the
+    probe disagrees beyond float ulp tolerance (``vectorize=False``
+    callers never get here — they keep strict pandas bit parity on the
+    Python path)."""
     n_slots = hi - lo + 1
-    over = Window.partitionBy("__bkt__").orderBy(F.col(ord_col))
+    over = Window.partitionBy(bkt).orderBy(F.col(ord_col))
     framed = over.rowsBetween(lo, hi)
     col_d = F.col(col).cast("double")
     try:
@@ -151,7 +156,7 @@ def _symbolic_rolling_expr(
         vals = rng.standard_normal(64)
         vals[37] = np.nan
         probe = pd.DataFrame(
-            {ord_col: np.arange(64, dtype="int64"), col: vals, "__bkt__": 0}
+            {ord_col: np.arange(64, dtype="int64"), col: vals, bkt: 0}
         )
         exp = (
             probe[col]
@@ -814,6 +819,57 @@ def _minp0_sum_fix(result: Column, func, min_periods) -> Column:
     return result
 
 
+def _gated_builtin(
+    df: DataFrame, col: str, func: str, spec, min_periods: int,
+    args: dict | None, *, offset_frames: bool = False,
+) -> Column:
+    """Builtin window aggregate ``func`` of ``col`` over ``spec`` with
+    pandas' missing-value rules (probed, pandas 2.2): the aggregate
+    SKIPS NaN (a NaN in frame must not poison a Spark SUM/AVG) and the
+    ``min_periods`` gate counts non-NaN observations — except count,
+    whose gate counts frame ROWS (pandas counts NaN rows toward
+    min_periods there; NaN/NULL are one missing concept here).
+    Time-offset frames (``offset_frames``) can be empty, and pandas
+    leaves empty frames NaN: count's gate floors at one row, and with
+    ``min_periods=0`` the other aggs need one frame row. cov/corr carry
+    their own pairwise-complete gate (floored at 1 for offset frames).
+    """
+    if func in ("cov", "corr"):
+        minp = max(min_periods, 1) if offset_frames else min_periods
+        return _pairwise_over(func, col, spec, minp, args)
+    v = F.col(col)
+    if isinstance(df.schema[col].dataType, (T.DoubleType, T.FloatType)):
+        v = F.when(~F.isnan(v), v)
+    nobs = F.count(v).over(spec)
+    nrows = F.count(F.lit(1)).over(spec)
+    if func == "count":
+        gate = nrows >= (max(min_periods, 1) if offset_frames else min_periods)
+    elif offset_frames and min_periods == 0:
+        gate = nrows >= 1
+    else:
+        gate = nobs >= min_periods
+    agg = _builtin_over(func, v, spec, args)
+    return _minp0_sum_fix(F.when(gate, agg), func, min_periods)
+
+
+def _over_buckets(
+    df: DataFrame, data: DataFrame, bkt: str, output_col: str, res: Column,
+    keep_rows: Column | None = None,
+) -> DataFrame:
+    """Evaluate ``res`` per range bucket of ``data`` and return ``df``'s
+    columns plus ``output_col`` (replaced in place when ``df`` has it,
+    like ``withColumn``), keeping only ``keep_rows``. The explicit
+    repartition on the bucket id pins the partition count: the window's
+    own exchange would be AQE-coalesced toward the advisory partition
+    size (few partitions for narrow data), strangling sort parallelism;
+    the window reuses the same hashpartitioning without re-exchanging."""
+    out = data.repartition(shuffle_partitions(df.sparkSession), F.col(bkt))
+    out = out.withColumn(output_col, res)
+    if keep_rows is not None:
+        out = out.filter(keep_rows)
+    return out.select(*df.columns, *([] if output_col in df.columns else [output_col]))
+
+
 def rolling_apply(
     df: DataFrame,
     col: str,
@@ -862,13 +918,14 @@ def rolling_apply(
     pandas scalar loop in the last ulp. Set False for strict pandas bit
     parity.
 
-    Build-time behavior (global UDF path only): constructing the plan
-    runs three bounded Spark jobs (bucket-boundary sampling, a null
-    check on the order column, and boundary-context extraction over the
-    narrow order/value projection), memoized per plan so re-building the
-    same rolling is free. NULL order keys raise ``ValueError`` — window
-    membership is undefined for them and pandas/Spark disagree on where
-    nulls sort.
+    Build-time behavior (global windows): constructing the plan runs
+    bounded Spark jobs (a NULL/NaN check on the order columns,
+    bucket-boundary sampling and boundary-context extraction), memoized
+    per plan+data so re-building the same rolling is free. NULL order
+    keys raise ``ValueError`` — window membership is undefined for them
+    and pandas/Spark disagree on where nulls sort. Under strictLazy a
+    cold build runs no job: it warns ``SINGLE-PARTITION`` and returns
+    the lazy single-partition plan.
     """
     if not isinstance(window, (int, np.integer)):
         # time-offset window (pandas rolling("1h") / Timedelta): builtin
@@ -924,9 +981,8 @@ def rolling_apply(
         d = int(pd.Timedelta(window).value // 1000)  # microseconds
         if d <= 0:
             raise ValueError(f"window offset must be positive, got {window!r}")
-        t_us = F.unix_micros(F.col(ord_name).cast("timestamp"))
         out = _bucketed_time_rolling_udf(
-            df, col, window, func, ord_name, t_us, d, minp, closed, raw,
+            df, col, window, func, ord_name, d, minp, closed, raw,
             out_col, return_type, center=center,
         )
         if out is not None:
@@ -961,13 +1017,6 @@ def rolling_apply(
             )
             yield pdf[out_names]
 
-        if shuffle_partitions(df.sparkSession) > 1:
-            _warn_single_partition(
-                f"global time-offset rolling({window!r}) UDF",
-                "the plan can run its 3 bounded build jobs (pre-build "
-                "once outside strict-lazy scope; the boundaries are "
-                "memoized per plan+data)",
-            )
         return df.repartition(1).mapInPandas(roll_all_time, out_schema)
     if win_type is not None:
         if isinstance(func, str):
@@ -1000,7 +1049,6 @@ def rolling_apply(
 
     frame = _frame_bounds(window, center, closed)
     spec = _window_spec(order_by, partition_by).rowsBetween(*frame)
-    cnt = F.count(F.col(col)).over(spec)
 
     if isinstance(func, str):
         if func in ("cov", "corr"):
@@ -1016,11 +1064,7 @@ def rolling_apply(
                 )
                 if halo is not None:
                     return halo
-            # two-column moments carry their own pairwise-complete gate
-            return df.withColumn(
-                output_col, _pairwise_over(func, col, spec, min_periods, win_args)
-            )
-        if not partition_by:
+        elif not partition_by:
             # GLOBAL builtin: not a single-partition total-order window —
             # ride the range-bucket + boundary-context machinery as a
             # bucket-partitioned JVM window (falls back below when the
@@ -1042,21 +1086,8 @@ def rolling_apply(
                     "build jobs (pre-build once outside strict-lazy "
                     "scope)",
                 )
-        # pandas NaN semantics (probed, pandas 2.2): the aggregate SKIPS
-        # NaN (a NaN in frame must not poison a Spark SUM/AVG), the
-        # min_periods gate counts NON-NaN observations — except count,
-        # whose gate counts frame rows including NaN
-        v = F.col(col)
-        if isinstance(df.schema[col].dataType, (T.DoubleType, T.FloatType)):
-            v = F.when(~F.isnan(v), v)
-        nobs = F.count(v).over(spec)
-        agg = _builtin_over(func, v, spec, win_args)
-        # count's gate counts frame ROWS (pandas counts NaN rows toward
-        # min_periods there; NaN/NULL are one missing concept here)
-        nrows = F.count(F.lit(1)).over(spec)
-        gate = (nrows if func == "count" else nobs) >= min_periods
         return df.withColumn(
-            output_col, _minp0_sum_fix(F.when(gate, agg), func, min_periods)
+            output_col, _gated_builtin(df, col, func, spec, min_periods, win_args)
         )
 
     if partition_by:
@@ -1157,7 +1188,7 @@ def time_rolling_agg(
 
     Scale: grouped (``partition_by``) → one shuffle on the key, fully
     parallel, whole-stage codegen. Global → explode-to-reachable-buckets
-    partitioned plan (``_bucketed_time_rolling``) with a lazy
+    partitioned plan (``_explode_to_time_buckets``) with a lazy
     total-order RANGE fallback for shapes that don't qualify. Rolling
     UDFs over time offsets run per group via stock pandas
     (``rolling_apply`` routes them); the global UDF form runs per
@@ -1200,7 +1231,6 @@ def time_rolling_agg(
             "left": (-d, d - 1),
             "neither": (-(d - 1), d - 1),
         }[closed]
-        back_off, fwd_off = (d + 1) // 2, (d + 1) // 2
     else:
         ord_axis = t_us
         lo, hi = {
@@ -1209,159 +1239,84 @@ def time_rolling_agg(
             "left": (-d, -1),
             "neither": (-(d - 1), -1),
         }[closed]
-        back_off, fwd_off = 0, d
-    if not partition_by:
-        # GLOBAL: not a single-partition total-order range window — each
-        # row explodes into every range bucket whose frames its
-        # timestamp can reach (bucket_of(t) .. bucket_of(t+d), O(1)
-        # assignments over shared literal boundaries; typically 1-2
-        # copies since quantile buckets are far wider than the window),
-        # the agg runs per target bucket as a JVM RANGE window, and the
-        # duplicates filter back out. Falls back below when the shape
-        # doesn't qualify or under strictLazy.
-        out = _bucketed_time_rolling(
-            df, col, func, ord_col, t_us, d, lo, hi, minp, agg_args,
-            output_col or f"{col}_rolling_{func}",
-            ord_axis=ord_axis, back_off=back_off, fwd_off=fwd_off,
-        )
-        if out is not None:
-            return out
-
-    w = Window.partitionBy(*partition_by) if partition_by else Window.partitionBy()
-    spec = w.orderBy(ord_axis).rangeBetween(lo, hi)
-    if func in ("cov", "corr"):
-        # two-column moments carry their own pairwise-complete gate
-        # (offset-window min_periods default 1, like the other aggs)
-        return df.withColumn(
-            output_col or f"{col}_rolling_{func}",
-            _pairwise_over(func, col, spec, max(minp, 1), agg_args),
-        )
-    v = F.col(col)
-    if isinstance(df.schema[col].dataType, (T.DoubleType, T.FloatType)):
-        v = F.when(~F.isnan(v), v)  # pandas skips NaN; Spark sums poison
-    cnt = F.count(v).over(spec)
-    agg = _builtin_over(func, v, spec, agg_args)
     output_col = output_col or f"{col}_rolling_{func}"
-    # count's gate counts frame ROWS including NaN (probed: explicit
-    # min_periods=1 over an all-NaN window is 0.0, not NaN — same rule
-    # as the positional builtin path), with an effective floor of 1 so
-    # the default minp=0 still maps empty frames (possible under
-    # left/neither) to NaN while non-empty all-NaN frames count 0
-    nrows = F.count(F.lit(1)).over(spec)
-    if func == "count":
-        gate = nrows >= max(minp, 1)
-    else:
-        gate = cnt >= minp if minp > 0 else nrows >= 1
-    return df.withColumn(
-        output_col, _minp0_sum_fix(F.when(gate, agg), func, min_periods)
+    # GLOBAL: not a single-partition total-order range window — each row
+    # explodes into every range bucket whose frames its timestamp can
+    # reach, the agg runs per target bucket as a JVM RANGE window, and
+    # the duplicates filter back out. The lazy total-order RANGE window
+    # below serves the shapes that don't qualify.
+    ex = None if partition_by else _explode_to_time_buckets(
+        df, ord_col, d, center, f"global time-offset rolling({window!r}) {func!r}"
     )
+    if ex is None:
+        spec = _window_spec([ord_axis], partition_by).rangeBetween(lo, hi)
+        res = _gated_builtin(df, col, func, spec, minp, agg_args, offset_frames=True)
+        return df.withColumn(output_col, res)
+    data, src, tgt = ex
+    spec = _window_spec([ord_axis], [tgt]).rangeBetween(lo, hi)
+    res = _gated_builtin(df, col, func, spec, minp, agg_args, offset_frames=True)
+    return _over_buckets(df, data, tgt, output_col, res, F.col(tgt) == F.col(src))
 
 
-def _bucketed_time_rolling(
-    df: DataFrame,
-    col: str,
-    func: str,
-    ord_col: str,
-    t_us: Column,
-    d: int,
-    lo: int,
-    hi: int,
-    minp: int,
-    agg_args: dict | None,
-    output_col: str,
-    *,
-    ord_axis: Column | None = None,
-    back_off: int = 0,
-    fwd_off: int | None = None,
-) -> DataFrame | None:
-    """Distributed global time-offset rolling: explode-to-reachable-
-    buckets instead of a single-partition total-order RANGE window.
+def _explode_to_time_buckets(
+    df: DataFrame, ord_col: str, d: int, center: bool, what: str
+) -> tuple[DataFrame, str, str] | None:
+    """The explode-to-reachable-buckets step of global time-offset
+    rolling (builtin aggs and UDFs), instead of a single-partition
+    total-order RANGE window.
 
-    Backward frames (hi ≤ 0 for every non-centered ``closed`` variant):
-    a row at time t participates only in frames of rows in
-    ``[t, t + d]`` — whose buckets span ``bucket_of(t) ..
+    Backward frames: a row at time t participates only in frames of
+    rows in ``[t, t + d]`` — whose buckets span ``bucket_of(t) ..
     bucket_of(t + d)``, both O(1) literal-boundary assignments
     (monotone, so the span is a contiguous ``sequence``). Centered
     frames reach BOTH ways: the row serves anchors in
     ``[t - d/2, t + d/2]``, so the span starts at
-    ``bucket_of(t - ceil(d/2))`` (``back_off``/``fwd_off`` carry the
-    per-direction reach; ``ord_axis`` carries the doubled axis the
-    centered RANGE bounds are expressed on). Each row duplicates into
-    that span (whole-row copies, so two-column cov/corr work too), the
-    agg evaluates per target bucket as a JVM RANGE window (frames
-    complete by construction), and rows keep only their own-bucket
-    copy. One shuffle on the target bucket; the duplicate factor is
-    ≈1 + window/bucket-span (quantile buckets are normally far wider
-    than the window; dense bursts shrink buckets and spread the copies
-    across tasks). NULL order keys are rejected at build, and a cold
-    build under strictLazy returns None — the caller's
-    single-partition window is correct and lazy.
+    ``bucket_of(t - ceil(d/2))``. Each row duplicates into that span
+    (whole-row copies, so two-column cov/corr work too); column ``src``
+    holds the row's own bucket and ``tgt`` the copy's target bucket.
+    The caller evaluates per target bucket (frames complete by
+    construction) and keeps only the ``src == tgt`` copies. The
+    duplicate factor is ≈1 + window/bucket-span, capped at 2 (3
+    centered) by ``_offset_bucket_exprs``.
+
+    Returns ``(data, src, tgt)``, or None with one shuffle partition,
+    under a strictLazy cold build, or when the data spans ≲ one window;
+    the last two warn ``SINGLE-PARTITION`` (``what`` names the window)
+    because the caller then runs its lazy single-partition plan. NULL
+    order keys are rejected at build.
     """
-    spark = df.sparkSession
-    n_parts = shuffle_partitions(spark)
+    n_parts = shuffle_partitions(df.sparkSession)
     if n_parts <= 1:
         return None
-    n_buckets = n_parts * 16
     memo = _range_bucket_build(
-        df, ord_col, t_us.cast("double"), False, n_buckets,
-        tag=("time_rolling",),
+        df, [ord_col], n_parts * 16, micros=True,
         null_msg=(
             f"global time-offset rolling over order column {ord_col!r} "
             "with NULL values is not supported: window membership is "
             "undefined for them. Filter or fill those order keys first."
         ),
     )
-    if memo is None:
-        return None
-    exprs = _offset_bucket_exprs(
-        memo, t_us, d if fwd_off is None else fwd_off, back_off
-    )
+    back_off = (d + 1) // 2 if center else 0
+    fwd_off = (d + 1) // 2 if center else d
+    t_us = F.unix_micros(F.col(ord_col).cast("timestamp"))
+    exprs = None if memo is None else _offset_bucket_exprs(memo, t_us, fwd_off, back_off)
     if exprs is None:
-        return None
-    start_b, own_b, fwd = exprs
-    data = (
-        df.withColumn("__src__", own_b)
-        .withColumn(
-            "__tgt__",
-            F.explode(
-                F.sequence(start_b, fwd)
-                if back_off
-                else F.sequence(F.col("__src__"), fwd)
-            ),
+        _warn_single_partition(
+            what,
+            "the data spans more than about one window and the plan can "
+            "run its bounded build jobs (pre-build once outside "
+            "strict-lazy scope; the boundaries are memoized per plan+data)",
         )
+        return None
+    start, own, fwd = exprs
+    src, tgt = fresh_column(df, "__src__"), fresh_column(df, "__tgt__")
+    data = df.withColumn(src, own).withColumn(
+        tgt,
+        F.explode(
+            F.sequence(start, fwd) if back_off else F.sequence(F.col(src), fwd)
+        ),
     )
-    spec = (
-        Window.partitionBy("__tgt__")
-        .orderBy(ord_axis if ord_axis is not None else t_us)
-        .rangeBetween(lo, hi)
-    )
-    if func in ("cov", "corr"):
-        res = _pairwise_over(func, col, spec, max(minp, 1), agg_args)
-    else:
-        v = F.col(col)
-        if isinstance(df.schema[col].dataType, (T.DoubleType, T.FloatType)):
-            v = F.when(~F.isnan(v), v)
-        cnt = F.count(v).over(spec)
-        agg = _builtin_over(func, v, spec, agg_args)
-        nrows = F.count(F.lit(1)).over(spec)
-        if func == "count":
-            gate = nrows >= max(minp, 1)
-        else:
-            gate = cnt >= minp if minp > 0 else nrows >= 1
-        # minp==0 for sum only via an explicit min_periods=0 (the None
-        # default resolves to 1 for non-count aggs)
-        res = _minp0_sum_fix(F.when(gate, agg), func, minp)
-    keep = (
-        df.columns
-        if output_col in df.columns  # withColumn-replace semantics
-        else [*df.columns, output_col]
-    )
-    return (
-        data.repartition(n_parts, F.col("__tgt__"))
-        .withColumn(output_col, res)
-        .filter(F.col("__tgt__") == F.col("__src__"))
-        .select(*keep)
-    )
+    return data, src, tgt
 
 
 def _offset_bucket_exprs(memo: dict, t_us: Column, fwd_off: int, back_off: int = 0):
@@ -1440,7 +1395,6 @@ def _bucketed_time_rolling_udf(
     window: str,
     func: Callable,
     ord_col: str,
-    t_us: Column,
     d: int,
     minp: int,
     closed: str | None,
@@ -1450,49 +1404,21 @@ def _bucketed_time_rolling_udf(
     center: bool = False,
 ) -> DataFrame | None:
     """Distributed GLOBAL time-offset rolling UDF: the same
-    explode-to-reachable-buckets shape as the builtin
-    ``_bucketed_time_rolling`` (backward frames: a row at t serves
-    frames of rows in ``[t, t+d]``; centered frames reach
-    ``ceil(d/2)`` BOTH ways — a contiguous bucket span either way),
-    but each target bucket runs STOCK pandas
-    ``rolling(Timedelta).apply`` over its sorted slice — exactly how
-    grouped time-offset UDFs run stock pandas per group (reference
+    explode-to-reachable-buckets shape as the builtin aggs
+    (``_explode_to_time_buckets``), but each target bucket runs STOCK
+    pandas ``rolling(Timedelta).apply`` over its sorted slice — exactly
+    how grouped time-offset UDFs run stock pandas per group (reference
     op #6 is UDF-first, ``series_rolling.py:10-51``). Frames are
     complete by construction; halo copies compute throwaway values and
-    filter out. One shuffle on the target bucket; duplicate factor ≤ 2
-    (≤ 3 centered) via the coarsening cap. Returns None (caller falls
-    back to the lazy single-partition scan) under strictLazy cold
-    builds, one shuffle partition, or a data span within ~one window."""
-    spark = df.sparkSession
-    n_parts = shuffle_partitions(spark)
-    if n_parts <= 1:
-        return None
-    n_buckets = n_parts * 16
-    memo = _range_bucket_build(
-        df, ord_col, t_us.cast("double"), False, n_buckets,
-        tag=("time_rolling",),
-        null_msg=(
-            f"global time-offset rolling over order column {ord_col!r} "
-            "with NULL values is not supported: window membership is "
-            "undefined for them. Filter or fill those order keys first."
-        ),
+    filter out. One shuffle on the target bucket. Returns None (caller
+    falls back to the lazy single-partition scan) when the explode step
+    does."""
+    ex = _explode_to_time_buckets(
+        df, ord_col, d, center, f"global time-offset rolling({window!r}) UDF"
     )
-    if memo is None:
+    if ex is None:
         return None
-    back_off = (d + 1) // 2 if center else 0
-    fwd_off = (d + 1) // 2 if center else d
-    exprs = _offset_bucket_exprs(memo, t_us, fwd_off, back_off)
-    if exprs is None:
-        return None
-    start, own, fwd = exprs
-    data = df.withColumn("__src__", own).withColumn(
-        "__tgt__",
-        F.explode(
-            F.sequence(start, fwd)
-            if back_off
-            else F.sequence(F.col("__src__"), fwd)
-        ),
-    )
+    data, src, tgt = ex
     out_schema = T.StructType(
         [*df.schema.fields, T.StructField(output_col, _to_dtype(return_type), True)]
     )
@@ -1509,10 +1435,10 @@ def _bucketed_time_rolling_udf(
             td, min_periods=minp, center=center, closed=closed
         ).apply(func, raw=raw)
         pdf[output_col] = res.to_numpy()
-        keep = pdf[pdf["__src__"] == pdf["__tgt__"]]
+        keep = pdf[pdf[src] == pdf[tgt]]
         return keep[out_names]
 
-    return data.groupBy("__tgt__").applyInPandas(per_bucket, out_schema)
+    return data.groupBy(tgt).applyInPandas(per_bucket, out_schema)
 
 
 def literal_array(vals: Sequence) -> Column:
@@ -1554,10 +1480,10 @@ def bucket_assignment_expr(
     at most 1/8192 of the value range per boundary. Falls back to
     the chained form when the value range is degenerate/non-finite.
 
-    Shared by the halo-rolling build and the global (key-less) as-of
-    join (operators/join.py) — both range-bucket a numeric view of an
-    order column with literal boundaries so every consumer buckets
-    identically BY CONSTRUCTION.
+    Shared by every range-bucket window and the global (key-less) as-of
+    join (operators/join.py), through ``range_boundaries`` — all
+    range-bucket a numeric view of an order column with literal
+    boundaries so every consumer buckets identically BY CONSTRUCTION.
     """
     import bisect
     import math
@@ -1587,6 +1513,39 @@ def bucket_assignment_expr(
         (F.when(ord_num > F.lit(b), 1).otherwise(0) for b in bnds),
         F.lit(0),
     )
+
+
+def range_boundaries(
+    df: DataFrame, ord_col: str, n_buckets: int, *, micros: bool = False
+) -> dict:
+    """Sample ``n_buckets`` range buckets over a numeric view of
+    ``ord_col`` with one quantile-sketch job: the number itself,
+    epoch seconds for dates and timestamps, or epoch µs with
+    ``micros``. Returns ``{"num", "bnds", "vlo", "vhi", "bexpr"}`` —
+    the numeric view, the sorted distinct inner boundaries, the exact
+    min/max (GK-sketch endpoints at probs 0 and 1, which the O(1)
+    assignment map needs) and the ``bucket_assignment_expr`` Column of
+    ``num``. Only bucket ASSIGNMENT uses the numeric view; windows
+    still order by the original column. The one sampler of the
+    range-bucket windows and the global as-of join, so they all bucket
+    the same way."""
+    c = F.col(ord_col)
+    if micros:
+        num = F.unix_micros(c.cast("timestamp")).cast("double")
+    elif isinstance(df.schema[ord_col].dataType, T.NumericType):
+        num = c.cast("double")
+    else:
+        num = c.cast("timestamp").cast("double")
+    probs = [i / n_buckets for i in range(n_buckets + 1)]
+    qs = df.select(num.alias("__q__")).approxQuantile(
+        "__q__", probs, 1.0 / n_buckets
+    )
+    vlo, vhi = (qs[0], qs[-1]) if qs else (float("nan"), float("nan"))
+    bnds = sorted(set(qs[1:-1]))
+    return {
+        "num": num, "bnds": bnds, "vlo": vlo, "vhi": vhi,
+        "bexpr": bucket_assignment_expr(num, bnds, vlo, vhi),
+    }
 
 
 def _halo_rolling(
@@ -1625,18 +1584,15 @@ def _halo_rolling(
     paid four full-width window sorts; at bench scale that tripled the
     source cost and erased the parallelism win):
 
-    BUILD time (all memoized per plan, run once — the narrow
-    ``(order, value[, index])`` projection is persisted for these jobs
-    and unpersisted immediately after, so no cached state outlives plan
-    construction):
+    BUILD time (all memoized per plan+data, run once):
 
-    1. Bucket boundaries are sampled with ``approxQuantile`` and
-       embedded as literals, so every consumer buckets identically BY
-       CONSTRUCTION — correctness never rides on Catalyst exchange
-       reuse. Ties share a bucket (strict ``>`` against boundaries),
-       like ``repartitionByRange``. Null order keys are REJECTED with
-       ``ValueError`` up front: window membership is undefined for
-       them, and pandas and Spark disagree on where nulls sort.
+    1. ``_range_bucket_build`` rejects NULL (and float NaN) order keys
+       with ``ValueError`` up front — window membership is undefined
+       for them, and pandas and Spark disagree on where nulls sort —
+       and samples bucket boundaries, embedded as literals, so every
+       consumer buckets identically BY CONSTRUCTION — correctness never
+       rides on Catalyst exchange reuse. Ties share a bucket (strict
+       ``>`` against boundaries), like ``repartitionByRange``.
     2. Each bucket's boundary CONTEXT rows — the first/last ``edge``
        rows by per-bucket row_number, ≈ buckets × 2(window−1) narrow
        rows total — are collected to the driver. From them the driver
@@ -1658,7 +1614,9 @@ def _halo_rolling(
     keys), no second lineage evaluation, no join.
 
     With one shuffle partition the bucket machinery is skipped entirely
-    (a single partition already sees the whole order).
+    (a single partition already sees the whole order); so is it under a
+    strictLazy cold build, warned ``SINGLE-PARTITION`` for UDFs (the
+    caller warns for builtins).
 
     MULTI-COLUMN order keys (r7): buckets are assigned from the FIRST
     order column alone — bucket-of-first-column is monotone under the
@@ -1666,13 +1624,14 @@ def _halo_rolling(
     bucket (strict ``>`` against boundaries) — while every sort (window
     specs, context extraction, per-bucket pandas) uses the full tuple.
     The first column must be numeric/date/timestamp (it feeds
-    ``approxQuantile``); later columns may be any atomic orderable
+    the quantile sampling); later columns may be any atomic orderable
     type. A constant first column degenerates to one bucket — correct,
     effectively single-partition.
 
     Returns None when the shape doesn't qualify (non-orderable first
-    order column) — caller falls back to the single-partition window
-    form. The order tuple should be a total order; ties make window
+    order column), and for builtins when the bucket machinery is
+    skipped — caller falls back to the single-partition window form.
+    The order tuple should be a total order; ties make window
     composition nondeterministic (same caveat as pandas on a non-unique
     index) — which tied rows land in a boundary context set is likewise
     arbitrary, affecting window VALUES on ties only, never row
@@ -1682,10 +1641,7 @@ def _halo_rolling(
         return None
     ord_col = order_by[0]
     order_cols = list(order_by)
-    ord_type = df.schema[ord_col].dataType
-    if not isinstance(
-        ord_type, (T.NumericType, T.DateType, T.TimestampType, T.TimestampNTZType)
-    ):
+    if not isinstance(df.schema[ord_col].dataType, _ORDERABLE):
         return None
     if not all(
         isinstance(df.schema[c].dataType, T.AtomicType) for c in order_cols[1:]
@@ -1704,6 +1660,12 @@ def _halo_rolling(
     )
     out_names = [f.name for f in out_schema.fields]
     ix = index_col if (index_col and not raw) else ord_col
+    null_msg = (
+        f"global rolling over order columns {order_cols!r} with "
+        "NULL or NaN values is not supported: window membership "
+        "is undefined for them (and pandas/Spark disagree on "
+        "where they sort). Filter or fill those order keys first."
+    )
 
     def roll_bucket(g: pd.DataFrame) -> np.ndarray:
         s = pd.Series(g[col].to_numpy(), index=g[ix].to_numpy())
@@ -1711,187 +1673,138 @@ def _halo_rolling(
             s, window, min_periods, center, func, raw, vectorize, closed
         ).to_numpy()
 
-    if isinstance(func, str) and n_parts <= 1:
-        # builtin agg with one shuffle partition: the caller's plain
-        # unpartitioned window IS the right plan — no halo machinery
-        return None
+    # ---- BUILD time (memoized): boundaries, null check, context rows
+    bkt, is_ctx = fresh_column(df, "__bkt__"), fresh_column(df, "__ctx__")
+    memo = None
+    if n_parts > 1:
+        # more buckets than partitions (16×) so hash collisions on the
+        # bucket id average out across tasks instead of doubling a
+        # straggler (k/p≈16 → ~25% relative load std; 4× measured a
+        # visible straggler tail on the bench: last 2 of 32 tasks ran
+        # ~2× the median); clamped so the collected context stays
+        # bounded even for very large windows (≈ n_buckets × 2·edge
+        # narrow rows)
+        n_buckets = n_parts * 16
+        if edge:
+            n_buckets = max(2, min(n_buckets, 2_000_000 // (2 * edge)))
+        # Memo key = plan identity AND data identity (semanticHash alone
+        # would hit on overwritten paths and serve STALE context rows —
+        # review finding r4, confirmed by repro); None → never memoize.
+        # The temp column names are part of the key: the memoized
+        # context frame carries them.
+        plan_key = plan_data_key(
+            df, tuple(order_cols), col, ix, pair_col, n_buckets, lo, hi,
+            bkt, is_ctx,
+        )
+        memo = _HALO_MEMO.get(plan_key) if plan_key is not None else None
+    if memo is None and n_parts > 1 and not strict_lazy(spark):
+        bounds = _range_bucket_build(df, order_cols, n_buckets, null_msg=null_msg)
+        bucket_expr = bounds["bexpr"]
+        # per-bucket boundary context rows → driver. A bucket's tail
+        # ``halo_before`` rows serve every LATER bucket's
+        # before-context (chained when buckets are smaller than the
+        # halo: such buckets collect entirely), head ``halo_after``
+        # rows serve earlier buckets' after-context. Which tied rows
+        # are picked is arbitrary (row_number), affecting tie VALUES
+        # only — membership of real rows is decided in the big pass
+        # alone.
+        ctx_map: dict[int, tuple] = {}
+        ctx_union = None
+        if edge and bounds["bnds"]:
+            narrow_cols = list(
+                dict.fromkeys([*order_cols, col, ix] + ([pair_col] if pair_col else []))
+            )
+            na, nd = fresh_column(df, "__na__"), fresh_column(df, "__nd__")
+            w_a = Window.partitionBy(bkt).orderBy(*[F.col(c) for c in order_cols])
+            w_d = Window.partitionBy(bkt).orderBy(
+                *[F.col(c).desc() for c in order_cols]
+            )
+            ctx_pdf = (
+                df.select(*narrow_cols)
+                .withColumn(bkt, bucket_expr)
+                .withColumn(na, F.row_number().over(w_a))
+                .withColumn(nd, F.row_number().over(w_d))
+                .filter((F.col(na) <= halo_after) | (F.col(nd) <= halo_before))
+                .select(*narrow_cols, bkt)
+                .toPandas()
+                .sort_values([bkt, *order_cols], kind="mergesort")
+            )
+            bkts = ctx_pdf[bkt].to_numpy()
+            cvals = np.asarray(ctx_pdf[col].to_numpy(), dtype="float64")
+            ivals = ctx_pdf[ix].to_numpy()
+            union_parts = []
+            for b in range(len(bounds["bnds"]) + 1):
+                # bkts is sorted: per-bucket slices via binary search,
+                # not an O(ctx_rows) scan per bucket (O(buckets ×
+                # ctx_rows) total was a review finding at the clamp)
+                pos_l = np.searchsorted(bkts, b, side="left")
+                pos_r = np.searchsorted(bkts, b, side="right")
+                pre = (
+                    np.arange(max(0, pos_l - halo_before), pos_l)
+                    if halo_before
+                    else []
+                )
+                post = (
+                    np.arange(pos_r, min(len(bkts), pos_r + halo_after))
+                    if halo_after
+                    else []
+                )
+                if len(pre) or len(post):
+                    ctx_map[b] = (
+                        cvals[pre], ivals[pre], cvals[post], ivals[post]
+                    )
+                    sel = ctx_pdf.iloc[list(pre) + list(post)][
+                        list(dict.fromkeys(
+                            [*order_cols, col]
+                            + ([pair_col] if pair_col else [])
+                        ))
+                    ].copy()
+                    sel[bkt] = b
+                    union_parts.append(sel)
+            if union_parts:
+                ctx_union = pd.concat(union_parts, ignore_index=True)
+        # the Column itself is memoized: building the micro-bucket
+        # lookup literal costs a py4j round trip per element, which
+        # would tax every re-build of the same plan. With
+        # plan_key=None, memo stays a build-local dict (no caching
+        # across builds — data identity couldn't be established).
+        memo = {"bexpr": bucket_expr, "ctx": ctx_map, "ctx_union": ctx_union}
+        if plan_key is not None:
+            memo_put(_HALO_MEMO, plan_key, memo)
+    if memo is None:
+        # one shuffle partition (a single partition already sees the
+        # whole order), or a strictLazy cold build. Builtin aggs take
+        # the caller's plain unpartitioned window; UDFs roll the whole
+        # frame in one task. The NULL/NaN order-key contract still
+        # holds, checked in the task — behavior must not diverge on
+        # spark.sql.shuffle.partitions=1 (review finding r4).
+        if isinstance(func, str):
+            return None
+        if n_parts > 1:
+            _warn_single_partition(
+                f"global rolling({window}) UDF",
+                "the plan can run its bounded build jobs (pre-build once "
+                "outside strict-lazy scope; the result is memoized per "
+                "plan+data)",
+            )
 
-    if n_parts <= 1:
-        # one partition sees the total order — no halo machinery. The
-        # NULL/NaN order-key contract still holds (the multi-partition
-        # build-time check doesn't run here, so enforce it in the task —
-        # behavior must not diverge on spark.sql.shuffle.partitions=1;
-        # review finding r4).
         def roll_all(batches):
             parts = [b for b in batches if len(b)]
             if not parts:
                 return
             pdf = pd.concat(parts, ignore_index=True)
             if pdf[order_cols].isna().any().any():
-                raise ValueError(
-                    f"global rolling over order columns {order_cols!r} with "
-                    "NULL or NaN values is not supported: window membership "
-                    "is undefined for them (and pandas/Spark disagree on "
-                    "where they sort). Filter or fill those order keys first."
-                )
+                raise ValueError(null_msg)
             pdf = pdf.sort_values(order_cols, kind="mergesort", ignore_index=True)
             pdf[output_col] = roll_bucket(pdf)
             yield pdf[out_names]
 
         return df.repartition(1).mapInPandas(roll_all, out_schema)
-
-    # ---- BUILD time (memoized): boundaries, null check, context rows
-    from pyspark import StorageLevel
-
-    # more buckets than partitions (16×) so hash collisions on the
-    # bucket id average out across tasks instead of doubling a
-    # straggler (k/p≈16 → ~25% relative load std; 4× measured a
-    # visible straggler tail on the bench: last 2 of 32 tasks ran
-    # ~2× the median); clamped so the collected context stays bounded
-    # even for very large windows (≈ n_buckets × 2·edge narrow rows)
-    n_buckets = n_parts * 16
-    if edge:
-        n_buckets = max(2, min(n_buckets, 2_000_000 // (2 * edge)))
-    narrow_cols = list(
-        dict.fromkeys(
-            [*order_cols, col, ix] + ([pair_col] if pair_col else [])
-        )
-    )
-    if isinstance(ord_type, T.NumericType):
-        ord_num = F.col(ord_col).cast("double")
-    else:
-        ord_num = F.col(ord_col).cast("timestamp").cast("double")
-    is_float_ord = isinstance(ord_type, (T.DoubleType, T.FloatType))
-    # probs 0 and 1 ride along: GK-sketch endpoints are the exact
-    # min/max, which the O(1) bucket-assignment map needs
-    probs = [i / n_buckets for i in range(n_buckets + 1)]
-    # Memo key = plan identity AND data identity (semanticHash alone
-    # would hit on overwritten paths and serve STALE context rows —
-    # review finding r4, confirmed by repro); None → never memoize.
-    plan_key = plan_data_key(
-        df, tuple(order_cols), col, ix, pair_col, n_buckets, lo, hi
-    )
-
-    memo = _HALO_MEMO.get(plan_key) if plan_key is not None else None
-    if memo is None:
-        if isinstance(func, str):
-            # builtin aggs have a correct zero-build-job fallback (the
-            # caller's single-partition window) — under strictLazy take
-            # it instead of raising, trading parallelism for laziness
-            if strict_lazy(spark):
-                return None
-        eager_build_guard(
-            spark,
-            "global-rolling bucket boundaries + boundary context (3 bounded jobs)",
-            "Set spark.sql.shuffle.partitions=1 for the single-partition "
-            "path, or pre-build this rolling once outside strict-lazy scope "
-            "(the result is memoized per plan+data).",
-        )
-        narrow = df.select(*narrow_cols).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            # boundaries: numeric view of the order column (dates and
-            # timestamps via epoch doubles) — only bucket ASSIGNMENT
-            # uses the double view, windows still order by the original
-            # column. Staleness on memo hits is benign: boundaries only
-            # steer bucket BALANCE.
-            qs = narrow.select(ord_num.alias("__q__")).approxQuantile(
-                "__q__", probs, 1.0 / n_buckets
-            )
-            vlo, vhi = (qs[0], qs[-1]) if qs else (float("nan"), float("nan"))
-            bnds = sorted(set(qs[1:-1]))
-            bad_ord = F.lit(False)
-            for oc in order_cols:
-                b = F.col(oc).isNull()
-                if isinstance(df.schema[oc].dataType, (T.DoubleType, T.FloatType)):
-                    b = b | F.isnan(F.col(oc))
-                bad_ord = bad_ord | b
-            if narrow.filter(bad_ord).limit(1).count():
-                raise ValueError(
-                    f"global rolling over order columns {order_cols!r} with "
-                    "NULL or NaN values is not supported: window membership "
-                    "is undefined for them (and pandas/Spark disagree on "
-                    "where they sort). Filter or fill those order keys first."
-                )
-            bucket_expr = bucket_assignment_expr(ord_num, bnds, vlo, vhi)
-            # per-bucket boundary context rows → driver. A bucket's tail
-            # ``halo_before`` rows serve every LATER bucket's
-            # before-context (chained when buckets are smaller than the
-            # halo: such buckets collect entirely), head ``halo_after``
-            # rows serve earlier buckets' after-context. Which tied rows
-            # are picked is arbitrary (row_number), affecting tie VALUES
-            # only — membership of real rows is decided in the big pass
-            # alone.
-            ctx_map: dict[int, tuple] = {}
-            ctx_union = None
-            if edge and bnds:
-                w_a = Window.partitionBy("__bkt__").orderBy(
-                    *[F.col(c) for c in order_cols]
-                )
-                w_d = Window.partitionBy("__bkt__").orderBy(
-                    *[F.col(c).desc() for c in order_cols]
-                )
-                ctx_pdf = (
-                    narrow.withColumn("__bkt__", bucket_expr)
-                    .withColumn("__na__", F.row_number().over(w_a))
-                    .withColumn("__nd__", F.row_number().over(w_d))
-                    .filter(
-                        (F.col("__na__") <= halo_after)
-                        | (F.col("__nd__") <= halo_before)
-                    )
-                    .select(*narrow_cols, "__bkt__")
-                    .toPandas()
-                    .sort_values(["__bkt__", *order_cols], kind="mergesort")
-                )
-                bkts = ctx_pdf["__bkt__"].to_numpy()
-                cvals = np.asarray(ctx_pdf[col].to_numpy(), dtype="float64")
-                ivals = ctx_pdf[ix].to_numpy()
-                union_parts = []
-                for b in range(len(bnds) + 1):
-                    # bkts is sorted: per-bucket slices via binary search,
-                    # not an O(ctx_rows) scan per bucket (O(buckets ×
-                    # ctx_rows) total was a review finding at the clamp)
-                    pos_l = np.searchsorted(bkts, b, side="left")
-                    pos_r = np.searchsorted(bkts, b, side="right")
-                    pre = (
-                        np.arange(max(0, pos_l - halo_before), pos_l)
-                        if halo_before
-                        else []
-                    )
-                    post = (
-                        np.arange(pos_r, min(len(bkts), pos_r + halo_after))
-                        if halo_after
-                        else []
-                    )
-                    if len(pre) or len(post):
-                        ctx_map[b] = (
-                            cvals[pre], ivals[pre], cvals[post], ivals[post]
-                        )
-                        sel = ctx_pdf.iloc[list(pre) + list(post)][
-                            list(dict.fromkeys(
-                                [*order_cols, col]
-                                + ([pair_col] if pair_col else [])
-                            ))
-                        ].copy()
-                        sel["__bkt__"] = b
-                        union_parts.append(sel)
-                if union_parts:
-                    ctx_union = pd.concat(union_parts, ignore_index=True)
-            # the Column itself is memoized: building the micro-bucket
-            # lookup literal costs a py4j round trip per element, which
-            # would tax every re-build of the same plan. With
-            # plan_key=None, memo stays a build-local dict (no caching
-            # across builds — data identity couldn't be established).
-            memo = {"bexpr": bucket_expr, "ctx": ctx_map, "ctx_union": ctx_union}
-            if plan_key is not None:
-                memo_put(_HALO_MEMO, plan_key, memo)
-        finally:
-            narrow.unpersist()
     ctx_map = memo["ctx"]
-    bucket_expr = memo["bexpr"]
     ctx_union = memo["ctx_union"]
 
     # ---- EXECUTE
-    bucketed = df.withColumn("__bkt__", bucket_expr.cast("int"))
+    bucketed = df.withColumn(bkt, memo["bexpr"].cast("int"))
 
     def _with_ctx(data: DataFrame) -> DataFrame:
         """Union the boundary-context rows in as tagged extra rows so
@@ -1900,25 +1813,18 @@ def _halo_rolling(
         the plan fragments: re-building the same rolling otherwise pays
         a driver-side createDataFrame (~0.15 s at 128 buckets) per
         build."""
+        data = data.withColumn(is_ctx, F.lit(False))
         if ctx_union is None:
             return data
         ctx_sdf = memo.get("ctx_sdf")
         if ctx_sdf is None:
             ctx_sdf = spark.createDataFrame(ctx_union)
-            for oc in order_cols:
-                ctx_sdf = ctx_sdf.withColumn(
-                    oc, F.col(oc).cast(df.schema[oc].dataType)
-                )
+            for c in [*order_cols, col] + ([pair_col] if pair_col else []):
+                ctx_sdf = ctx_sdf.withColumn(c, F.col(c).cast(df.schema[c].dataType))
             ctx_sdf = (
-                ctx_sdf
-                .withColumn(col, F.col(col).cast(df.schema[col].dataType))
-                .withColumn("__bkt__", F.col("__bkt__").cast("int"))
-                .withColumn("__ctx__", F.lit(True))
+                ctx_sdf.withColumn(bkt, F.col(bkt).cast("int"))
+                .withColumn(is_ctx, F.lit(True))
             )
-            if pair_col:
-                ctx_sdf = ctx_sdf.withColumn(
-                    pair_col, F.col(pair_col).cast(df.schema[pair_col].dataType)
-                )
             memo["ctx_sdf"] = ctx_sdf
         return data.unionByName(ctx_sdf, allowMissingColumns=True)
 
@@ -1928,11 +1834,12 @@ def _halo_rolling(
         # the unpartitioned form (pandas NaN-skip, count's row gate),
         # frames completed across boundaries by the context rows. One
         # shuffle on the bucket id, whole-stage codegen, no Python.
-        data = _with_ctx(bucketed.withColumn("__ctx__", F.lit(False)))
-        if weighted is not None:
-            spec_nf = Window.partitionBy("__bkt__").orderBy(
-                *[F.col(c) for c in order_cols]
+        spec = Window.partitionBy(bkt).orderBy(*[F.col(c) for c in order_cols])
+        if weighted is None:
+            res = _gated_builtin(
+                df, col, func, spec.rowsBetween(lo, hi), min_periods, win_args
             )
+        else:
             if func in ("var", "std"):
                 # rotating weight alignment: restore each real row's
                 # GLOBAL 0-based index as (rows in earlier buckets) +
@@ -1946,7 +1853,7 @@ def _halo_rolling(
                         return None  # single-partition fallback
                     cnts = {
                         int(r[0]): int(r[1])
-                        for r in bucketed.groupBy("__bkt__")
+                        for r in bucketed.groupBy(bkt)
                         .agg(F.count(F.lit(1)))
                         .collect()
                     }
@@ -1961,8 +1868,8 @@ def _halo_rolling(
                     len(ctx_map[b][0]) if b in ctx_map else 0
                     for b in range(len(starts))
                 ]
-                rn_b = F.row_number().over(spec_nf)
-                bix = (F.col("__bkt__") + F.lit(1)).cast("int")
+                rn_b = F.row_number().over(spec)
+                bix = (F.col(bkt) + F.lit(1)).cast("int")
                 gidx = (
                     F.element_at(literal_array(starts), bix)
                     + rn_b
@@ -1972,47 +1879,10 @@ def _halo_rolling(
             else:
                 gidx = F.lit(0)  # sum/mean never evaluate it
             res = _weighted_window_expr(
-                spec_nf, col, window, weighted["wt"], weighted["minp"],
+                spec, col, window, weighted["wt"], weighted["minp"],
                 weighted["offset"], func, weighted["ddof"], gidx,
             )
-            keep = (
-                df.columns
-                if output_col in df.columns
-                else [*df.columns, output_col]
-            )
-            return (
-                data.repartition(n_parts, F.col("__bkt__"))
-                .withColumn(output_col, res)
-                .filter(~F.col("__ctx__"))
-                .select(*keep)
-            )
-        spec = (
-            Window.partitionBy("__bkt__")
-            .orderBy(*[F.col(c) for c in order_cols])
-            .rowsBetween(lo, hi)
-        )
-        if func in ("cov", "corr"):
-            res = _pairwise_over(func, col, spec, min_periods, win_args)
-        else:
-            v = F.col(col)
-            if isinstance(df.schema[col].dataType, (T.DoubleType, T.FloatType)):
-                v = F.when(~F.isnan(v), v)
-            nobs = F.count(v).over(spec)
-            agg = _builtin_over(func, v, spec, win_args)
-            nrows = F.count(F.lit(1)).over(spec)
-            gate = (nrows if func == "count" else nobs) >= min_periods
-            res = _minp0_sum_fix(F.when(gate, agg), func, min_periods)
-        keep = (
-            df.columns
-            if output_col in df.columns  # withColumn-replace semantics
-            else [*df.columns, output_col]
-        )
-        return (
-            data.repartition(n_parts, F.col("__bkt__"))
-            .withColumn(output_col, res)
-            .filter(~F.col("__ctx__"))
-            .select(*keep)
-        )
+        return _over_buckets(df, _with_ctx(bucketed), bkt, output_col, res, ~F.col(is_ctx))
 
     # JVM path first: slot-arithmetic UDFs become a bucketed window
     # expression — context rows union in as tagged extra rows so frames
@@ -2045,26 +1915,21 @@ def _halo_rolling(
             # — under strictLazy skip it WITHOUT memoizing, falling back
             # to the pandas halo path, which is bit-exact: same
             # semantics, no job. Reachable only on a boundary-memo hit
-            # (a cold boundary build already raised upstream).
+            # (a cold boundary build already fell back upstream).
             sym = None
         else:
             sym = _symbolic_rolling_expr(
                 spark, func, col, ord_col, window,
-                min_periods, center, closed, lo, hi,
+                min_periods, center, closed, lo, hi, bkt,
             )
             if sym_key is not None:
                 memo_put(_SYM_MEMO, sym_key, sym)
         if sym is not None:
-            data = _with_ctx(bucketed.withColumn("__ctx__", F.lit(False)))
-            # explicit repartition: the window's own exchange would be
-            # AQE-coalesced toward the advisory partition size (few
-            # partitions for narrow data), strangling sort parallelism;
-            # a user repartition pins the partition count and the window
-            # reuses it (same hashpartitioning) without re-exchanging
+            # explicit repartition: see _over_buckets
             return (
-                data.repartition(n_parts, F.col("__bkt__"))
+                _with_ctx(bucketed).repartition(n_parts, F.col(bkt))
                 .withColumn(output_col, sym.cast(_to_dtype(return_type)))
-                .filter(~F.col("__ctx__"))
+                .filter(~F.col(is_ctx))
                 .select(*out_names)
             )
 
@@ -2086,7 +1951,7 @@ def _halo_rolling(
         if not parts:
             return
         pdf = pd.concat(parts, ignore_index=True)
-        for b, g in pdf.groupby("__bkt__", sort=False):
+        for b, g in pdf.groupby(bkt, sort=False):
             g = g.sort_values(order_cols, kind="mergesort", ignore_index=True)
             ctx = ctx_map_x.get(int(b))
             if ctx is not None:
@@ -2109,7 +1974,7 @@ def _halo_rolling(
                 g[output_col] = roll_bucket(g)
             yield g[out_names]
 
-    return bucketed.repartition(n_parts, F.col("__bkt__")).mapInPandas(
+    return bucketed.repartition(n_parts, F.col(bkt)).mapInPandas(
         roll_buckets, out_schema
     )
 
@@ -2117,55 +1982,46 @@ def _halo_rolling(
 _EXPANDING_COMPOSABLE = frozenset(
     {"sum", "count", "mean", "avg", "min", "max", "std", "var"}
 )
-# range-bucket boundary build memo: (plan+data key, tag) → boundaries
+# range-bucket memo: plan+data key → boundaries (_range_bucket_build) or
+# expanding moment seeds
 _EXPB_MEMO: dict = {}
 
 
 def _range_bucket_build(
     df: DataFrame,
-    ord_col: str,
-    ord_num: Column,
-    is_float_ord: bool,
+    order_cols: Sequence[str],
     n_buckets: int,
     *,
-    tag: tuple,
     null_msg: str,
+    micros: bool = False,
 ) -> dict | None:
-    """Shared boundaries build for the bucketed global scans (expanding
-    carry, global time rolling, the ewm carry scans): the NULL/NaN
-    order-key rejection plus approxQuantile boundaries over a numeric
-    view of the order column — two jobs straight off ``df``, no
-    persist (caching the narrow column costs one more job than the
-    rescan it saves) — memoized per plan+data+tag. Returns
-    ``{"bnds", "vlo", "vhi", "bexpr"}`` — ``bexpr`` is the O(1)
-    bucket-assignment Column for ``ord_num`` itself; callers needing a
-    shifted assignment (e.g. ``bucket_of(t + d)``) build it from the
-    stored boundaries via ``bucket_assignment_expr``. Under strictLazy
-    a cold build returns None (callers fall back to the lazy
-    single-partition form); memo hits never run jobs.
+    """The one boundary build of every global range-bucket window (halo
+    rolling, expanding carry, global time rolling, the ewm carry
+    scans): rejects NULL order keys — and NaN in float ones — in any of
+    ``order_cols`` with ``ValueError(null_msg)``, then samples
+    ``range_boundaries`` over the first (epoch µs with ``micros``).
+    Two jobs straight off ``df``, no persist (caching the narrow column
+    costs one more job than the rescan it saves), memoized per
+    plan+data. Callers needing a shifted assignment (e.g.
+    ``bucket_of(t + d)``) build it from the stored boundaries via
+    ``bucket_assignment_expr``. Under strictLazy a cold build returns
+    None (callers fall back to the lazy single-partition form); memo
+    hits never run jobs.
     """
-    spark = df.sparkSession
-    plan_key = plan_data_key(df, *tag, ord_col, n_buckets)
+    plan_key = plan_data_key(df, "range_buckets", *order_cols, micros, n_buckets)
     memo = _EXPB_MEMO.get(plan_key) if plan_key is not None else None
     if memo is not None:
         return memo
-    if strict_lazy(spark):
+    if strict_lazy(df.sparkSession):
         return None
-    bad_ord = F.col(ord_col).isNull()
-    if is_float_ord:
-        bad_ord = bad_ord | F.isnan(F.col(ord_col))
-    if df.filter(bad_ord).limit(1).count():
+    bad = F.lit(False)
+    for c in order_cols:
+        bad = bad | F.col(c).isNull()
+        if isinstance(df.schema[c].dataType, (T.DoubleType, T.FloatType)):
+            bad = bad | F.isnan(F.col(c))
+    if df.filter(bad).limit(1).count():
         raise ValueError(null_msg)
-    probs = [i / n_buckets for i in range(n_buckets + 1)]
-    qs = df.select(ord_num.alias("__q__")).approxQuantile(
-        "__q__", probs, 1.0 / n_buckets
-    )
-    vlo, vhi = (qs[0], qs[-1]) if qs else (float("nan"), float("nan"))
-    bnds = sorted(set(qs[1:-1]))
-    memo = {
-        "bnds": bnds, "vlo": vlo, "vhi": vhi,
-        "bexpr": bucket_assignment_expr(ord_num, bnds, vlo, vhi),
-    }
+    memo = range_boundaries(df, order_cols[0], n_buckets, micros=micros)
     if plan_key is not None:
         memo_put(_EXPB_MEMO, plan_key, memo)
     return memo
@@ -2205,22 +2061,11 @@ def _bucketed_expanding(
     """
     spark = df.sparkSession
     n_parts = shuffle_partitions(spark)
-    if n_parts <= 1:
+    if n_parts <= 1 or not isinstance(df.schema[ord_col].dataType, _ORDERABLE):
         return None
-    ord_type = df.schema[ord_col].dataType
-    if not isinstance(
-        ord_type, (T.NumericType, T.DateType, T.TimestampType, T.TimestampNTZType)
-    ):
-        return None
-    if isinstance(ord_type, T.NumericType):
-        ord_num = F.col(ord_col).cast("double")
-    else:
-        ord_num = F.col(ord_col).cast("timestamp").cast("double")
-    is_float_ord = isinstance(ord_type, (T.DoubleType, T.FloatType))
     n_buckets = n_parts * 16
     memo = _range_bucket_build(
-        df, ord_col, ord_num, is_float_ord, n_buckets,
-        tag=("expanding", col),
+        df, [ord_col], n_buckets,
         null_msg=(
             f"global expanding over order column {ord_col!r} with NULL or "
             "NaN values is not supported: scan position is undefined for "
@@ -2239,11 +2084,6 @@ def _bucketed_expanding(
         Window.partitionBy(bkt)
         .orderBy(F.col(ord_col))
         .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    keep = (
-        df.columns
-        if output_col in df.columns  # withColumn-replace semantics
-        else [*df.columns, output_col]
     )
     if func in ("std", "var"):
         # moments don't compose as plain window sums without the
@@ -2309,11 +2149,7 @@ def _bucketed_expanding(
             n_t >= F.lit(float(max(min_periods, 1))),
             F.sqrt(var_e) if func == "std" else var_e,
         )
-        return (
-            data.repartition(n_parts, F.col(bkt))
-            .withColumn(output_col, res)
-            .select(*keep)
-        )
+        return _over_buckets(df, data, bkt, output_col, res)
     tot = data.groupBy(bkt).agg(
         F.count(v).alias("__n__"),
         F.count(F.lit(1)).alias("__rows__"),
@@ -2357,11 +2193,8 @@ def _bucketed_expanding(
     else:  # max
         val = F.greatest(F.col("__cmx__"), F.max(v).over(wb))
     gate = (rows_tot if func == "count" else n_tot) >= F.lit(min_periods)
-    return (
-        data.repartition(n_parts, F.col(bkt))
-        .withColumn(output_col, _minp0_sum_fix(F.when(gate, val), func, min_periods))
-        .select(*keep)
-    )
+    res = _minp0_sum_fix(F.when(gate, val), func, min_periods)
+    return _over_buckets(df, data, bkt, output_col, res)
 
 
 def _grouped_pandas_window(
@@ -2487,14 +2320,8 @@ def expanding_apply(
     output_col = output_col or f"{col}_expanding_{func if isinstance(func, str) else 'apply'}"
 
     spec = _window_spec(order_by, partition_by).rowsBetween(Window.unboundedPreceding, 0)
-    cnt = F.count(F.col(col)).over(spec)
 
     if isinstance(func, str):
-        if func in ("cov", "corr"):
-            # two-column moments carry their own pairwise-complete gate
-            return df.withColumn(
-                output_col, _pairwise_over(func, col, spec, min_periods, win_args)
-            )
         if (
             not partition_by
             and func in _EXPANDING_COMPOSABLE
@@ -2509,19 +2336,15 @@ def expanding_apply(
             )
             if out is not None:
                 return out
-        # same pandas NaN semantics as the rolling builtin path: skip
-        # NaN in the aggregate, gate non-count aggs on non-NaN obs
-        v = F.col(col)
-        if isinstance(df.schema[col].dataType, (T.DoubleType, T.FloatType)):
-            v = F.when(~F.isnan(v), v)
-        nobs = F.count(v).over(spec)
-        agg = _builtin_over(func, v, spec, win_args)
-        # count's gate counts frame ROWS (pandas counts NaN rows toward
-        # min_periods there; NaN/NULL are one missing concept here)
-        nrows = F.count(F.lit(1)).over(spec)
-        gate = (nrows if func == "count" else nobs) >= min_periods
+            if shuffle_partitions(df.sparkSession) > 1:
+                _warn_single_partition(
+                    f"global expanding {func!r}",
+                    "the order column is numeric/date/timestamp and the "
+                    "plan can run its bounded build jobs (pre-build once "
+                    "outside strict-lazy scope)",
+                )
         return df.withColumn(
-            output_col, _minp0_sum_fix(F.when(gate, agg), func, min_periods)
+            output_col, _gated_builtin(df, col, func, spec, min_periods, win_args)
         )
 
     if partition_by:
@@ -3101,13 +2924,7 @@ def _carry_scan(
     """
     spark = df.sparkSession
     ord_type = df.schema[ord_col].dataType
-    if times:
-        ord_num = F.unix_micros(F.col(ord_col).cast("timestamp")).cast("double")
-    elif isinstance(ord_type, T.NumericType):
-        ord_num = F.col(ord_col).cast("double")
-    elif isinstance(ord_type, (T.DateType, T.TimestampType, T.TimestampNTZType)):
-        ord_num = F.col(ord_col).cast("timestamp").cast("double")
-    else:
+    if not times and not isinstance(ord_type, _ORDERABLE):
         raise TypeError(
             f"global ewm needs a numeric/timestamp order column, got "
             f"{ord_type.simpleString()}"
@@ -3119,11 +2936,8 @@ def _carry_scan(
         key = plan_data_key(df, *tag, ord_col, col, n_buckets)
         memo = _EWM_MEMO.get(key) if key is not None else None
         if memo is None:
-            # seconds and µs views must not share boundaries
             bounds = _range_bucket_build(
-                df, ord_col, ord_num,
-                isinstance(ord_type, (T.DoubleType, T.FloatType)), n_buckets,
-                tag=("ewm_times" if times else "ewm",),
+                df, [ord_col], n_buckets, micros=times,
                 null_msg=_ewm_null_msg(ord_col, times),
             )
             # checked again: the boundaries may have been a memo hit
@@ -3139,7 +2953,7 @@ def _carry_scan(
                 rows = sorted(
                     df.select(
                         bounds["bexpr"].cast("int").alias("__bkt__"),
-                        ord_num.alias("__q__"),
+                        bounds["num"].alias("__q__"),
                         F.col(col).alias("__v__"),
                     )
                     .groupBy("__bkt__")

@@ -95,13 +95,25 @@ def _parquet(spark, tmp_path, name, pdf):
 
 
 def test_strict_lazy_halo_rolling(strict, tmp_path):
+    """A cold global rolling UDF build under strictLazy takes the lazy
+    single-partition plan, like the other global range-bucket windows:
+    it warns SINGLE-PARTITION, building it launches no Spark job, and
+    the result matches pandas."""
     import numpy as np
 
     pdf = pd.DataFrame({"idx": np.arange(400, dtype="int64"), "b": np.random.default_rng(0).random(400)})
     sdf = _parquet(strict, tmp_path, "roll", pdf)
     roll = parallelize(sdf, order_by="idx").series("b").rolling(4)
-    with pytest.raises(RuntimeError, match="strictLazy.*boundaries"):
-        roll.parallel_apply(lambda a: float(a.sum()), output_col="r")
+    tracker = strict.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    with pytest.warns(UserWarning, match="SINGLE-PARTITION"):
+        out = roll.parallel_apply(lambda a: float(a.sum()), output_col="r")
+    assert tracker.getJobIdsForGroup(None) == before
+    got = out.toPandas().sort_values("idx")["r"].to_numpy(dtype="float64")
+    np.testing.assert_allclose(
+        got, pdf.b.rolling(4).apply(lambda a: float(a.sum()), raw=True).to_numpy(),
+        rtol=1e-12,
+    )
     # escape hatch: builtin agg stays fully lazy (pure window expr)
     roll.parallel_apply("sum", output_col="r")
     # memo hit never triggers the guard: build once outside strict
@@ -281,6 +293,15 @@ def test_single_partition_fallback_warns(strict, tmp_path):
             parallelize(tdf, order_by="ts").series("x")
             .rolling("1h")
             .parallel_apply(lambda a: float(a.sum()), output_col="r")
+        )
+    # ... and so do the global builtin time rolling and global expanding
+    with pytest.warns(UserWarning, match="SINGLE-PARTITION"):
+        parallelize(tdf, order_by="ts").series("x").rolling("1h").parallel_apply(
+            "sum", output_col="r"
+        )
+    with pytest.warns(UserWarning, match="SINGLE-PARTITION"):
+        parallelize(sdf, order_by="idx").series("x").expanding().parallel_apply(
+            "sum", output_col="r"
         )
 
     # bucketed path (strictLazy off) must NOT warn

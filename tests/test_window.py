@@ -1218,8 +1218,7 @@ def test_time_rolling_bursty_fanout_capped(spark):
     t_us = F.unix_micros(F.col("ts").cast("timestamp"))
     d = int(pd.Timedelta("30min").value // 1000)
     memo = _range_bucket_build(
-        sdf, "ts", t_us.cast("double"), False,
-        shuffle_partitions(spark) * 16, tag=("time_rolling",), null_msg="x",
+        sdf, ["ts"], shuffle_partitions(spark) * 16, null_msg="x", micros=True,
     )
     exprs = _offset_bucket_exprs(memo, t_us, d)
     if exprs is None:
@@ -1924,8 +1923,7 @@ def test_time_rolling_wide_window_fanout_capped(spark):
     d = int(pd.Timedelta("30min").value // 1000)
     from pandarallel_spark.operators._memo import shuffle_partitions
     memo = _range_bucket_build(
-        sdf, "ts", t_us.cast("double"), False,
-        shuffle_partitions(spark) * 16, tag=("time_rolling",), null_msg="x",
+        sdf, ["ts"], shuffle_partitions(spark) * 16, null_msg="x", micros=True,
     )
     src, _own, fwd = _offset_bucket_exprs(memo, t_us, d)
     fan = (
@@ -2215,20 +2213,26 @@ def test_grouped_window_udf_keeps_user_column_named_like_bucket(spark, pdf):
 
 
 @pytest.mark.parametrize(
-    "op", ["ewm_mean", "ewm_sum", "ewm_var", "ewm_mean_times", "expanding_sum"]
+    "op",
+    ["ewm_mean", "ewm_sum", "ewm_var", "ewm_mean_times", "expanding_sum",
+     "rolling_mean", "rolling_udf", "time_rolling_sum", "time_rolling_udf"],
 )
 def test_global_scan_keeps_user_column_named_like_bucket(spark, pdf, op):
-    """The global ewm carry scans and the global expanding carry take a
-    bucket column name no user column has: a user column called
-    ``__bkt__`` passes through and the results still match pandas."""
+    """The global range-bucket windows (ewm carry scans, expanding
+    carry, halo rolling, time rolling) take temporary column names no
+    user column has: user columns called ``__bkt__``, ``__ctx__``,
+    ``__src__`` and ``__tgt__`` pass through and the results still
+    match pandas."""
     from pandarallel_spark.operators import window as W
 
+    temp_names = ["__bkt__", "__ctx__", "__src__", "__tgt__"]
     src = pdf.assign(
         ts=pd.Timestamp("2024-01-01") + pd.to_timedelta(pdf["idx"] * 7, unit="min"),
-        __bkt__=777,
+        **dict.fromkeys(temp_names, 777),
     )
     sdf = spark.createDataFrame(src)
     s = src["b"]
+    st = pd.Series(s.to_numpy(), index=pd.DatetimeIndex(src["ts"]))
     out, expected = {
         "ewm_mean": lambda: (
             W.ewm_mean(sdf, "b", "idx", alpha=0.3, output_col="r"),
@@ -2250,10 +2254,26 @@ def test_global_scan_keeps_user_column_named_like_bucket(spark, pdf, op):
             W.expanding_apply(sdf, "b", "sum", "idx", output_col="r"),
             s.expanding().sum(),
         ),
+        "rolling_mean": lambda: (
+            W.rolling_apply(sdf, "b", 5, "mean", "idx", output_col="r"),
+            s.rolling(5).mean(),
+        ),
+        "rolling_udf": lambda: (
+            W.rolling_apply(sdf, "b", 5, np.sum, "idx", output_col="r"),
+            s.rolling(5).sum(),
+        ),
+        "time_rolling_sum": lambda: (
+            W.rolling_apply(sdf, "b", "1h", "sum", "ts", output_col="r"),
+            st.rolling("1h").sum(),
+        ),
+        "time_rolling_udf": lambda: (
+            W.rolling_apply(sdf, "b", "1h", np.sum, "ts", output_col="r"),
+            st.rolling("1h").sum(),
+        ),
     }[op]()
     out = out.toPandas().sort_values("idx").reset_index(drop=True)
     assert out.columns.tolist() == [*src.columns, "r"]
-    assert (out["__bkt__"] == 777).all()
+    assert (out[temp_names] == 777).all().all()
     np.testing.assert_allclose(
         out["r"], expected.to_numpy(), rtol=1e-7, atol=1e-12
     )
