@@ -20,6 +20,8 @@ Two rules, both learned from review findings:
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
+
 from pyspark.sql import DataFrame
 
 STRICT_LAZY_CONF = "spark.pandarallel_spark.strictLazy"
@@ -158,16 +160,67 @@ def shuffle_partitions(spark, default: int = 200) -> int:
 
 
 def coarse_group_count(spark, factor: int = 4, cap: int = 65536) -> int:
-    """Scale-adaptive group count for Python verify stages keyed on a
-    COARSE hash of their bucket key (r14): grouped ``applyInPandas``
-    pays a fixed per-GROUP boundary cost (measured ~2 ms of wall clock
-    per group at local[32] on Spark 4.1 — Arrow framing + pandas
-    scaffolding per call — regardless of group size), so a stage whose
-    natural bucket key yields thousands of tiny buckets hashes it into
-    ``factor × shuffle partitions`` groups and verifies every real
-    bucket inside one call. Grows with the cluster via the shuffle
-    partition count; never tuned to one box."""
+    """Scale-adaptive group count for Python stages keyed on a COARSE
+    hash of their real key (r14): grouped ``applyInPandas`` pays a fixed
+    per-GROUP boundary cost — Arrow framing, pandas scaffolding and one
+    result frame per call — of ~2 ms of one core per group (measured on
+    4 local cores, Spark 4.1: 30 000 one-row groups ran 17.0 s of wall
+    keyed on the raw key against 1.7 s on 16 coarse groups, both on
+    ``bucket_partitioned`` input), so a stage whose natural key yields
+    thousands of tiny groups hashes it into ``factor × shuffle
+    partitions`` groups and loops every real group inside one call.
+    Grows with the cluster via the shuffle partition count; never tuned
+    to one box."""
     return max(1, min(factor * shuffle_partitions(spark), cap))
+
+
+def bucket_partitioned(df: DataFrame, bucket: str) -> DataFrame:
+    """``df`` hash-partitioned on its ``bucket`` column into exactly
+    ``shuffle_partitions`` partitions: the partition rule of every
+    bucketed stage (the grouped Python stages of ``bucketed_apply`` and
+    the range-bucket JVM windows of ``window._over_buckets``).
+
+    Without it the stage's own exchange is sized by AQE, which coalesces
+    small shuffles toward the advisory partition size: a few hundred KB
+    of bucketed rows become ONE task, and one core runs every bucket.
+    AQE never coalesces a repartition-by-number shuffle, and a following
+    ``groupBy(bucket)`` / ``Window.partitionBy(bucket)`` reuses its hash
+    partitioning, so this costs no second exchange. The rule is local
+    to the stage on purpose: a session-wide AQE conf would also split
+    every small JVM stage."""
+    from pyspark.sql import functions as F
+
+    return df.repartition(shuffle_partitions(df.sparkSession), F.col(bucket))
+
+
+def bucketed_apply(
+    df: DataFrame,
+    func: Callable,
+    schema,
+    *,
+    bucket: str | None = None,
+    keys: Sequence[str] = (),
+    n_buckets: int | None = None,
+) -> DataFrame:
+    """``func`` over each bucket of ``df`` as ONE grouped
+    ``applyInPandas`` stage on ``bucket_partitioned`` input.
+
+    ``bucket`` names a bucket-id column of ``df`` (range buckets);
+    ``func`` sees it. Otherwise the bucket is a coarse hash of the
+    ``keys`` columns — ``pmod(xxhash64(keys), n)`` with ``n`` =
+    ``n_buckets`` or ``coarse_group_count`` (read at call time) — in a
+    fresh temporary column that ``func`` never sees. Rows sharing
+    ``keys`` always share a bucket, so ``func`` loops its real groups."""
+    if bucket is not None:
+        return bucket_partitioned(df, bucket).groupBy(bucket).applyInPandas(func, schema)
+    from pyspark.sql import functions as F
+
+    n = coarse_group_count(df.sparkSession) if n_buckets is None else n_buckets
+    bkt = fresh_column(df, "__bkt__")
+    hashed = df.withColumn(bkt, F.pmod(F.xxhash64(*keys), F.lit(int(n))))
+    return bucketed_apply(
+        hashed, lambda pdf: func(pdf.drop(columns=bkt)), schema, bucket=bkt
+    )
 
 
 def fresh_column(df: DataFrame, base: str) -> str:

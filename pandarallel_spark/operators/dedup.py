@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pandarallel_spark.operators._memo import (
-    coarse_group_count,
+    bucketed_apply,
     eager_build_guard,
     memo_put,
     plan_data_key,
@@ -1510,9 +1510,8 @@ def _hamming_banded_pairs(
         return pd.concat(parts, ignore_index=True) if parts else empty
 
     # r14 (guide §4.5 — amortize the per-call boundary cost): grouped
-    # applyInPandas pays a fixed per-GROUP overhead (measured ~2 ms of
-    # wall clock per group at local[32] on Spark 4.1: Arrow framing +
-    # pandas scaffolding per call) regardless of group size. Keyed on
+    # applyInPandas pays a fixed per-GROUP overhead regardless of group
+    # size (see ``_memo.coarse_group_count``). Keyed on
     # raw (chunk, value) that multiplies by the BUCKET count — up to
     # chunks·2^width groups (262 144 at the 16-bit default),
     # corpus-independent but enormous next to the popcount work
@@ -1528,21 +1527,13 @@ def _hamming_banded_pairs(
     # group-sized (~chunks·n / n_groups rows of 32 B — the standard
     # partition contract; a single pathological bucket was already
     # group-sized before).
-    n_groups = (
-        int(_num_groups)
-        if _num_groups is not None
-        else coarse_group_count(sh.sparkSession)
-    )
-    grouped = long.withColumn(
-        "__grp__", F.pmod(F.xxhash64("__c__", "__v__"), F.lit(n_groups))
-    )
-    return (
-        grouped.groupBy("__grp__")
-        .applyInPandas(
-            grouped_bucket_pairs, "id_a bigint, id_b bigint, hamming bigint"
-        )
-        .distinct()
-    )
+    return bucketed_apply(
+        long,
+        grouped_bucket_pairs,
+        "id_a bigint, id_b bigint, hamming bigint",
+        keys=["__c__", "__v__"],
+        n_buckets=_num_groups,
+    ).distinct()
 
 
 def image_hash_pairs(

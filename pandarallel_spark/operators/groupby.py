@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 
+from pandarallel_spark.operators._memo import bucketed_apply
 from pandarallel_spark.operators._skew import warn_on_group_skew
 from pandarallel_spark.plans.schema import (
     infer_schema_from_pandas,
@@ -173,31 +174,25 @@ def grouped_apply(
 
     # COARSE-bucketed boundary (r15, the r14 §6 pattern applied to the
     # flagship op): grouped ``applyInPandas`` pays a fixed per-GROUP
-    # Arrow-framing/invocation cost (~0.2 ms of wall per group at 8
-    # local cores, measured: identical 2M rows ran 1.7 s with 300
-    # groups and 8.0 s with 30 000), so keying the Python stage on the
-    # raw group makes many-tiny-group corpora pay the boundary, not
-    # the UDF. The stage is instead keyed on a deterministic hash of
-    # the group keys into ``coarse_group_count`` buckets (scale-
-    # adaptive — 4× shuffle partitions, never a local constant) and
-    # each call loops its REAL groups through the unchanged per-group
-    # wrapper. Shuffle volume and placement are identical (same
-    # hash-by-key distribution, one extra bigint); few-large-group
-    # shapes are unchanged (buckets ≥ 4× tasks); a giant group still
-    # lands whole in one task, which is what warn_on_group_skew above
-    # warns about either way. dropna=False mirrors Spark's NULL-key
-    # grouping.
-    from pyspark.sql import functions as F
-
-    from pandarallel_spark.operators._memo import coarse_group_count, fresh_column
-
-    n_buckets = coarse_group_count(df.sparkSession)
-    bkt_col = fresh_column(df, "__gb_bkt__")
-
+    # Arrow-framing/invocation cost (see ``_memo.coarse_group_count``),
+    # so keying the Python stage on the raw group makes many-tiny-group
+    # corpora pay the boundary, not the UDF. The stage is instead keyed
+    # on a deterministic hash of the group keys into
+    # ``coarse_group_count`` buckets (4× shuffle partitions) and each
+    # call loops its REAL groups through the unchanged per-group
+    # wrapper. ``bucketed_apply`` pins the stage to one task per shuffle
+    # partition — AQE would otherwise coalesce a small bucketed shuffle
+    # into ONE task, whatever the group count. A giant group still lands
+    # whole in one task, which is what warn_on_group_skew above warns
+    # about. dropna=False mirrors Spark's NULL-key grouping.
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        # index = position within the group: each group arrives
+        # labelled 0..n-1 in input order, for one vectorized pass per
+        # bucket instead of one index copy per group
+        pdf.index = pdf.groupby(keys, sort=False, dropna=False).cumcount().to_numpy()
         groups = (
-            (key if isinstance(key, tuple) else (key,), g.reset_index(drop=True))
-            for key, g in pdf.drop(columns=bkt_col).groupby(keys, sort=False, dropna=False)
+            (key if isinstance(key, tuple) else (key,), g)
+            for key, g in pdf.groupby(keys, sort=False, dropna=False)
         )
         if mode == "frame":
             outs = [group_frame(k, g) for k, g in groups]
@@ -207,5 +202,4 @@ def grouped_apply(
         # remaining per-group cost)
         return pd.DataFrame([group_row(k, g) for k, g in groups], columns=out_names)
 
-    bkt = F.pmod(F.xxhash64(*keys), F.lit(n_buckets))
-    return df.withColumn(bkt_col, bkt).groupBy(bkt_col).applyInPandas(per_bucket, schema)
+    return bucketed_apply(df, per_bucket, schema, keys=keys)

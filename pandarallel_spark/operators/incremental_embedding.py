@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pandarallel_spark.operators._memo import (
-    coarse_group_count,
+    bucketed_apply,
     eager_build_guard,
     truncate_lineage,
 )
@@ -729,15 +729,12 @@ def _bucket_verify(
     # (band, signature) bucket key instead of one Python call per raw
     # bucket — same pair set, same bucket_cap hub semantics (applied
     # per REAL bucket inside the call), fewer fixed per-group costs.
-    n_groups = coarse_group_count(both.sparkSession)
     return (
-        both.withColumn(
-            "__grp__", F.pmod(F.xxhash64("__band__", "__h__"), F.lit(n_groups))
-        )
-        .groupBy("__grp__")
-        .applyInPandas(
+        bucketed_apply(
+            both,
             grouped_bucket_pairs,
             "__fp__ bigint, __ofp__ bigint, __oeid__ bigint, cosine double",
+            keys=["__band__", "__h__"],
         )
         .dropDuplicates(["__fp__", "__ofp__"])
         .select("__fp__", "__oeid__", "cosine")

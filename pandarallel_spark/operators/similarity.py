@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pandarallel_spark.operators._memo import (
-    coarse_group_count,
+    bucketed_apply,
     eager_build_guard,
     memo_put,
     plan_data_key,
@@ -464,17 +464,12 @@ def cosine_pairs_lsh(
     # buckets otherwise, e.g. 256 at the graded row's dials ≈ 0.5 s of
     # pure per-group overhead per pass at local[32]). Emitted pairs
     # identical; shuffle bytes unchanged.
-    n_groups = coarse_group_count(sigs.sparkSession)
-    return (
-        sigs.withColumn(
-            "__grp__", F.pmod(F.xxhash64("__band__", "__sig__"), F.lit(n_groups))
-        )
-        .groupBy("__grp__")
-        .applyInPandas(
-            grouped_bucket_pairs, "id_a bigint, id_b bigint, cosine double"
-        )
-        .distinct()
-    )
+    return bucketed_apply(
+        sigs,
+        grouped_bucket_pairs,
+        "id_a bigint, id_b bigint, cosine double",
+        keys=["__band__", "__sig__"],
+    ).distinct()
 
 
 def ivf_topk(

@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pandarallel_spark.operators._memo import (
+    bucket_partitioned,
+    bucketed_apply,
     constant_partition_key,
     fresh_column,
     memo_put,
@@ -858,13 +860,13 @@ def _over_buckets(
 ) -> DataFrame:
     """Evaluate ``res`` per range bucket of ``data`` and return ``df``'s
     columns plus ``output_col`` (replaced in place when ``df`` has it,
-    like ``withColumn``), keeping only ``keep_rows``. The explicit
-    repartition on the bucket id pins the partition count: the window's
-    own exchange would be AQE-coalesced toward the advisory partition
-    size (few partitions for narrow data), strangling sort parallelism;
-    the window reuses the same hashpartitioning without re-exchanging."""
-    out = data.repartition(shuffle_partitions(df.sparkSession), F.col(bkt))
-    out = out.withColumn(output_col, res)
+    like ``withColumn``), keeping only ``keep_rows``. The input is
+    ``_memo.bucket_partitioned`` — the partition rule of every bucketed
+    stage: the window's own exchange would be AQE-coalesced toward the
+    advisory partition size (few partitions for narrow data), strangling
+    sort parallelism; the window reuses the same hash partitioning
+    without re-exchanging."""
+    out = bucket_partitioned(data, bkt).withColumn(output_col, res)
     if keep_rows is not None:
         out = out.filter(keep_rows)
     return out.select(*df.columns, *([] if output_col in df.columns else [output_col]))
@@ -1438,7 +1440,7 @@ def _bucketed_time_rolling_udf(
         keep = pdf[pdf[src] == pdf[tgt]]
         return keep[out_names]
 
-    return data.groupBy(tgt).applyInPandas(per_bucket, out_schema)
+    return bucketed_apply(data, per_bucket, out_schema, bucket=tgt)
 
 
 def literal_array(vals: Sequence) -> Column:
@@ -2164,17 +2166,21 @@ def _bucketed_expanding(
     wc = Window.partitionBy(constant_partition_key(bkt)).orderBy(
         bkt
     ).rowsBetween(Window.unboundedPreceding, -1)
+    # the carry columns join onto the user's rows: fresh names
+    cn, crows, cs, cmn, cmx = (
+        fresh_column(data, c) for c in ("__cn__", "__crows__", "__cs__", "__cmn__", "__cmx__")
+    )
     carry = tot.select(
         bkt,
-        F.sum("__n__").over(wc).alias("__cn__"),
-        F.sum("__rows__").over(wc).alias("__crows__"),
-        F.sum("__s__").over(wc).alias("__cs__"),
-        F.min("__mn__").over(wc).alias("__cmn__"),
-        F.max("__mx__").over(wc).alias("__cmx__"),
+        F.sum("__n__").over(wc).alias(cn),
+        F.sum("__rows__").over(wc).alias(crows),
+        F.sum("__s__").over(wc).alias(cs),
+        F.min("__mn__").over(wc).alias(cmn),
+        F.max("__mx__").over(wc).alias(cmx),
     )
     data = data.join(F.broadcast(carry), bkt, "left")
-    n_tot = F.coalesce(F.col("__cn__"), F.lit(0)) + F.count(v).over(wb)
-    rows_tot = F.coalesce(F.col("__crows__"), F.lit(0)) + F.count(F.lit(1)).over(wb)
+    n_tot = F.coalesce(F.col(cn), F.lit(0)) + F.count(v).over(wb)
+    rows_tot = F.coalesce(F.col(crows), F.lit(0)) + F.count(F.lit(1)).over(wb)
 
     def _add_keep_null(a: Column, b: Column) -> Column:
         # NULL-skipping sum composition that preserves the agg dtype
@@ -2184,14 +2190,14 @@ def _bucketed_expanding(
     if func == "count":
         val = n_tot
     elif func == "sum":
-        val = _add_keep_null(F.col("__cs__"), F.sum(v).over(wb))
+        val = _add_keep_null(F.col(cs), F.sum(v).over(wb))
     elif func in ("mean", "avg"):
-        s_tot = _add_keep_null(F.col("__cs__"), F.sum(v).over(wb))
+        s_tot = _add_keep_null(F.col(cs), F.sum(v).over(wb))
         val = F.try_divide(s_tot.cast("double"), n_tot.cast("double"))
     elif func == "min":
-        val = F.least(F.col("__cmn__"), F.min(v).over(wb))
+        val = F.least(F.col(cmn), F.min(v).over(wb))
     else:  # max
-        val = F.greatest(F.col("__cmx__"), F.max(v).over(wb))
+        val = F.greatest(F.col(cmx), F.max(v).over(wb))
     gate = (rows_tot if func == "count" else n_tot) >= F.lit(min_periods)
     res = _minp0_sum_fix(F.when(gate, val), func, min_periods)
     return _over_buckets(df, data, bkt, output_col, res)
@@ -2213,17 +2219,15 @@ def _grouped_pandas_window(
     with linear state instead of ``collect_list``'s O(frame) arrays per
     row.
 
-    Scale shape (r7): ``applyInPandas`` is keyed on a COARSE bucket —
-    ``hash(group keys) pmod 4·shuffle_partitions`` — and each bucket
-    task runs the pandas op over its real groups in one loop. Keying
-    on the raw group would pay one Arrow round trip + UDF invocation
-    PER GROUP (~1-3 ms each): with many tiny groups that overhead IS
-    the runtime (1500 groups of ~67 rows measured ~4.2 s; a 100 TB
-    corpus has billions of such groups), while in-task pandas group
-    slicing costs ~0.1 ms. Parallelism is unchanged for few-large-group
-    shapes (buckets ≥ 4× tasks; a giant group was one task either way)
-    and the shuffle volume is identical — same hash partitioning, one
-    extra tiny column.
+    Scale shape (r7): ``applyInPandas`` is keyed on a COARSE bucket of
+    the group keys (``_memo.bucketed_apply``) and each bucket call runs
+    the pandas op over its real groups in one loop. Keying on the raw
+    group would pay one Arrow round trip + UDF invocation PER GROUP
+    (see ``_memo.coarse_group_count``): with many tiny groups that
+    overhead IS the runtime (a 100 TB corpus has billions of such
+    groups). The stage runs one task per shuffle partition whatever
+    the group count — without that rule AQE coalesced a small bucketed
+    shuffle into one task — and a giant group is one task either way.
 
     ``index_col``: values to use as the rolled Series' index. Default
     (None) is a group-positional RangeIndex — which is exactly what
@@ -2273,14 +2277,7 @@ def _grouped_pandas_window(
         pdf[output_col] = np.concatenate(outs)
         return pdf[out_names]
 
-    n_buckets = max(2, shuffle_partitions(df.sparkSession) * 4)
-    bkt = F.pmod(F.hash(*keys), F.lit(n_buckets))
-    bkt_col = fresh_column(df, "__gbkt__")
-    return (
-        df.withColumn(bkt_col, bkt)
-        .groupBy(bkt_col)
-        .applyInPandas(lambda pdf: per_bucket(pdf.drop(columns=bkt_col)), out_schema)
-    )
+    return bucketed_apply(df, per_bucket, out_schema, keys=keys)
 
 
 def _to_dtype(t: T.DataType | str) -> T.DataType:
@@ -2951,14 +2948,16 @@ def _carry_scan(
                     return pd.DataFrame([{**d, "__bkt__": int(pdf["__bkt__"].iloc[0])}])
 
                 rows = sorted(
-                    df.select(
-                        bounds["bexpr"].cast("int").alias("__bkt__"),
-                        bounds["num"].alias("__q__"),
-                        F.col(col).alias("__v__"),
-                    )
-                    .groupBy("__bkt__")
-                    .applyInPandas(bucket_summary, f"{summary_schema}, __bkt__ int")
-                    .collect(),  # bounded: ≤ n_buckets ≤ 1024 rows
+                    bucketed_apply(
+                        df.select(
+                            bounds["bexpr"].cast("int").alias("__bkt__"),
+                            bounds["num"].alias("__q__"),
+                            F.col(col).alias("__v__"),
+                        ),
+                        bucket_summary,
+                        f"{summary_schema}, __bkt__ int",
+                        bucket="__bkt__",
+                    ).collect(),  # bounded: ≤ n_buckets ≤ 1024 rows
                     key=lambda r: r["__bkt__"],
                 )
                 seeds = dict(zip((int(r["__bkt__"]) for r in rows), chain(rows)))
@@ -2992,10 +2991,8 @@ def _carry_scan(
         out[output_col] = apply(pdf, seeds.get(int(pdf[bkt].iloc[0])))
         return out[out_names]
 
-    return (
-        df.withColumn(bkt, memo["bexpr"].cast("int"))
-        .groupBy(bkt)
-        .applyInPandas(per_bucket, out_schema)
+    return bucketed_apply(
+        df.withColumn(bkt, memo["bexpr"].cast("int")), per_bucket, out_schema, bucket=bkt
     )
 
 

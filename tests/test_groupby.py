@@ -173,6 +173,11 @@ def test_grouped_apply_coarse_bucketing_is_group_count_invariant(
             map(str, out.fillna("<null>").itertuples(index=False, name=None))
         )
 
+    def labels_ok(g):
+        # each group arrives labelled 0..n-1 in input order: label-based
+        # reads like ``g.v[0]`` are the group's first row
+        return float(list(g.index) == list(range(len(g))) and g.v[0] == g.v.iloc[0])
+
     cases = {
         "scalar": (lambda g: float(g.v.sum()),
                    "k1 double, k2 string, result double"),
@@ -181,8 +186,16 @@ def test_grouped_apply_coarse_bucketing_is_group_count_invariant(
                    "k1 double, k2 string, s double, n double"),
         "frame": (lambda g: g.assign(v2=g.v * 2),
                   "k1 double, k2 string, v double, v2 double"),
+        "scalar_index": (labels_ok, "k1 double, k2 string, result double"),
+        "series_index": (lambda g: pd.Series({"first": g.v[0], "ok": labels_ok(g)}),
+                         "k1 double, k2 string, first double, ok double"),
+        "frame_index": (lambda g: g.assign(first=g.v[0], ok=labels_ok(g)),
+                        "k1 double, k2 string, v double, first double, ok double"),
     }
-    for mode, (func, schema) in cases.items():
+    first = {(1.0, "x"): 1.0, (2.0, "y"): 3.0, (2.0, "z"): 5.0,
+             (None, "z"): 6.0, (3.0, None): 8.0}
+    for case, (func, schema) in cases.items():
+        mode = case.split("_")[0]
         results = []
         for n in (1, 7, 1024):
             monkeypatch.setattr(
@@ -190,24 +203,39 @@ def test_grouped_apply_coarse_bucketing_is_group_count_invariant(
                 lambda _s, factor=4, cap=65536, _n=n: _n,
             )
             results.append(run(mode, func, schema))
-        assert results[0] == results[1] == results[2], mode
+        assert results[0] == results[1] == results[2], case
         # sanity: the expected group count survived (5 distinct keys
         # incl. the NULL-keyed ones)
         if mode == "scalar":
             assert len(results[0]) == 5
+        if case.endswith("_index"):
+            got = gb.grouped_apply(
+                sdf, ["k1", "k2"], func, schema=schema, mode=mode
+            ).toPandas()
+            assert (got["ok"] if "ok" in got else got["result"]).eq(1.0).all(), case
+            if "first" in got:
+                for r in got.itertuples(index=False):
+                    k1 = None if pd.isna(r.k1) else r.k1
+                    assert r.first == first[(k1, r.k2)], (case, r)
 
 
 def test_grouped_apply_keeps_user_column_named_like_bucket(spark):
-    """The coarse-bucket temp column takes a name no user column has: a
-    user column called ``__gb_bkt__`` reaches ``func`` intact."""
+    """The coarse-bucket temp column takes a name no user column has:
+    user columns called ``__gb_bkt__`` and ``__bkt__`` reach ``func``
+    intact."""
     from pandarallel_spark.operators import groupby as gb
 
-    pdf = pd.DataFrame({"k": [1, 1, 2, 3, 3, 3], "__gb_bkt__": [10.0, 20.0, 30.0, 1.0, 2.0, 3.0]})
+    pdf = pd.DataFrame({
+        "k": [1, 1, 2, 3, 3, 3],
+        "__gb_bkt__": [10.0, 20.0, 30.0, 1.0, 2.0, 3.0],
+        "__bkt__": [0.5] * 6,
+    })
     got = (
         gb.grouped_apply(
-            spark.createDataFrame(pdf), "k", lambda g: float(g["__gb_bkt__"].sum()),
+            spark.createDataFrame(pdf), "k",
+            lambda g: float(g["__gb_bkt__"].sum() + g["__bkt__"].sum()),
             schema="k long, result double", mode="scalar",
         )
         .toPandas().sort_values("k").reset_index(drop=True)
     )
-    assert got["result"].tolist() == [30.0, 30.0, 6.0]
+    assert got["result"].tolist() == [31.0, 30.5, 7.5]

@@ -5,6 +5,8 @@ pushdown, pruning, partial aggregation, and broadcast joins."""
 import io
 from contextlib import redirect_stdout
 
+import pytest
+
 from pandarallel_spark.workload import queries
 
 
@@ -508,3 +510,73 @@ def test_audit_exempts_bounded_scalar_agg_exchanges(spark):
     d = scale_audit(lst)
     assert d.single_partition_exchanges == 1  # data-sized partial rows
     assert d.bounded_scalar_agg_exchanges == 0
+
+
+@pytest.mark.parametrize("op", ["grouped_apply", "grouped_rolling_udf", "ewm_mean"])
+def test_bucketed_python_stage_runs_one_task_per_shuffle_partition(spark, op):
+    """A bucketed grouped Python stage runs one task per shuffle
+    partition under the session's default confs (AQE on): a small
+    bucketed shuffle is never coalesced into one Python task, and the
+    stage reads exactly one Exchange — the bucket repartition, which
+    the grouping reuses."""
+    import re
+    import uuid
+
+    import numpy as np
+    import pandas as pd
+
+    from pandarallel_spark.operators import groupby as gb
+    from pandarallel_spark.operators import window as W
+    from pandarallel_spark.operators._memo import shuffle_partitions
+
+    n = 600
+    pdf = pd.DataFrame(
+        {
+            "k": np.arange(n) % 37,
+            "idx": np.arange(n),
+            "v": np.random.default_rng(7).random(n),
+        }
+    )
+    # two input partitions: the map stage's task count differs from
+    # the shuffle partition count
+    sdf = spark.createDataFrame(pdf).coalesce(2)
+    out = {
+        "grouped_apply": lambda: gb.grouped_apply(
+            sdf, "k", lambda g: float(g.v.sum()),
+            schema="k long, result double", mode="scalar",
+        ),
+        "grouped_rolling_udf": lambda: W.rolling_apply(
+            sdf, "v", 3, lambda a: a.sum(), "idx",
+            partition_by=["k"], output_col="r",
+        ),
+        "ewm_mean": lambda: W.ewm_mean(sdf, "v", "idx", alpha=0.3, output_col="r"),
+    }[op]()  # built first: build-time jobs stay outside the job group
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"bucketed-stage-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == (37 if op == "grouped_apply" else n)
+    stages = {
+        sid: tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    }
+    # the Python stage is the result stage: the last one to run
+    python_stage = stages[max(s for s, i in stages.items() if i and i.numCompletedTasks)]
+    n_parts = shuffle_partitions(spark)
+    assert n_parts > 2
+    assert python_stage.numTasks == n_parts, python_stage
+    assert python_stage.numCompletedTasks == n_parts, python_stage
+
+    final = out._jdf.queryExecution().executedPlan()
+    if final.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        final = final.executedPlan()
+    plan = final.toString()
+    assert "FlatMapGroupsInPandas" in plan, plan
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert "REPARTITION_BY_NUM" in plan, plan

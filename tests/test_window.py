@@ -2198,16 +2198,18 @@ def test_ewm_times_positional_validates_halflife(spark):
 
 def test_grouped_window_udf_keeps_user_column_named_like_bucket(spark, pdf):
     """The grouped-UDF window's temp bucket column takes a name no user
-    column has: a user column called ``__gbkt__`` passes through."""
+    column has: user columns called ``__gbkt__`` and ``__bkt__`` pass
+    through."""
     from pandarallel_spark.operators.window import expanding_apply
 
-    src = pdf.assign(__gbkt__=pdf["idx"] * 2)
+    src = pdf.assign(__gbkt__=pdf["idx"] * 2, __bkt__=pdf["idx"] * 2)
     out = expanding_apply(
         spark.createDataFrame(src), "b", lambda w: w.sum(), "idx",
         partition_by=["a"], output_col="r",
     ).toPandas().sort_values("idx").reset_index(drop=True)
     assert out.columns.tolist() == [*src.columns, "r"]
     assert (out["__gbkt__"] == out["idx"] * 2).all()
+    assert (out["__bkt__"] == out["idx"] * 2).all()
     expected = src.groupby("a").b.expanding().sum().reset_index(level=0).sort_index()["b"]
     np.testing.assert_allclose(out["r"], expected.to_numpy())
 
@@ -2221,11 +2223,13 @@ def test_global_scan_keeps_user_column_named_like_bucket(spark, pdf, op):
     """The global range-bucket windows (ewm carry scans, expanding
     carry, halo rolling, time rolling) take temporary column names no
     user column has: user columns called ``__bkt__``, ``__ctx__``,
-    ``__src__`` and ``__tgt__`` pass through and the results still
-    match pandas."""
+    ``__src__``, ``__tgt__`` and the expanding carry's ``__cn__``,
+    ``__crows__``, ``__cs__``, ``__cmn__`` and ``__cmx__`` pass through
+    and the results still match pandas."""
     from pandarallel_spark.operators import window as W
 
-    temp_names = ["__bkt__", "__ctx__", "__src__", "__tgt__"]
+    temp_names = ["__bkt__", "__ctx__", "__src__", "__tgt__",
+                  "__cn__", "__crows__", "__cs__", "__cmn__", "__cmx__"]
     src = pdf.assign(
         ts=pd.Timestamp("2024-01-01") + pd.to_timedelta(pdf["idx"] * 7, unit="min"),
         **dict.fromkeys(temp_names, 777),
