@@ -270,7 +270,7 @@ def _global_asof_buckets(
 
     Only the boundary sampling runs at build time (bounded, memoized per
     plan+data, strictLazy-guarded). With one shuffle partition — or a
-    non-orderable timestamp type — the quantile job is skipped and a
+    non-orderable timestamp type — the sampling is skipped and a
     single bucket keeps exact single-partition semantics (bucket ``-1``
     still routes undefined timestamps).
     """
@@ -292,7 +292,7 @@ def _global_asof_buckets(
         if memo is None:
             eager_build_guard(
                 spark,
-                "global as-of bucket boundary sampling (one quantile-sketch job)",
+                "global as-of bucket boundary sampling (one quantile-sketch aggregate)",
                 "Pass equi-keys via on=, set spark.sql.shuffle.partitions=1 "
                 "for the single-partition path, or build this join once "
                 "outside strict-lazy scope (boundaries are memoized per "
@@ -300,7 +300,8 @@ def _global_asof_buckets(
             )
             from pandarallel_spark.operators.window import range_boundaries
 
-            memo = range_boundaries(unioned.filter(~bad), "__t__", n_buckets)
+            # the sampler skips NULL/NaN timestamps itself
+            (memo,), _ = range_boundaries(unioned, ["__t__"], n_buckets)
             if key is not None:
                 memo_put(_ASOF_MEMO, key, memo)
         bnds, bexpr = memo["bnds"], memo["bexpr"]

@@ -872,6 +872,34 @@ def _over_buckets(
     return out.select(*df.columns, *([] if output_col in df.columns else [output_col]))
 
 
+def _single_partition(
+    df: DataFrame, order_cols: list[str], null_msg: str,
+    field: T.StructField, compute: Callable[[pd.DataFrame], np.ndarray],
+) -> DataFrame:
+    """The one-task fallback of every global range-bucket window (one
+    shuffle partition, a strictLazy cold build, shapes the buckets
+    don't cover): all of ``df`` in one partition, merge-sorted by
+    ``order_cols``, with ``field`` set to ``compute(sorted_pdf)``.
+    Lazy, and exact against stock pandas. NULL/NaN order keys raise
+    ``ValueError(null_msg)`` in the task, as the bucketed build does at
+    build time."""
+    out_schema = T.StructType([*df.schema.fields, field])
+    out_names = [f.name for f in out_schema.fields]
+
+    def run(batches):
+        parts = [b for b in batches if len(b)]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        if pdf[order_cols].isna().any().any():
+            raise ValueError(null_msg)
+        pdf = pdf.sort_values(order_cols, kind="mergesort", ignore_index=True)
+        pdf[field.name] = compute(pdf)
+        yield pdf[out_names]
+
+    return df.repartition(1).mapInPandas(run, out_schema)
+
+
 def rolling_apply(
     df: DataFrame,
     col: str,
@@ -921,9 +949,10 @@ def rolling_apply(
     parity.
 
     Build-time behavior (global windows): constructing the plan runs
-    bounded Spark jobs (a NULL/NaN check on the order columns,
-    bucket-boundary sampling and boundary-context extraction), memoized
-    per plan+data so re-building the same rolling is free. NULL order
+    bounded Spark jobs (one aggregate that samples the bucket
+    boundaries and flags NULL/NaN order keys, then boundary-context
+    extraction), memoized per plan+data so re-building the same
+    rolling is free. NULL order
     keys raise ``ValueError`` — window membership is undefined for them
     and pandas/Spark disagree on where nulls sort. Under strictLazy a
     cold build runs no job: it warns ``SINGLE-PARTITION`` and returns
@@ -983,43 +1012,10 @@ def rolling_apply(
         d = int(pd.Timedelta(window).value // 1000)  # microseconds
         if d <= 0:
             raise ValueError(f"window offset must be positive, got {window!r}")
-        out = _bucketed_time_rolling_udf(
+        return _global_time_rolling_udf(
             df, col, window, func, ord_name, d, minp, closed, raw,
             out_col, return_type, center=center,
         )
-        if out is not None:
-            return out
-        out_schema = T.StructType(
-            [*df.schema.fields, T.StructField(out_col, _to_dtype(return_type), True)]
-        )
-        out_names = [f.name for f in out_schema.fields]
-        td = pd.Timedelta(window)
-
-        def roll_all_time(batches):
-            parts = [b for b in batches if len(b)]
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            if pdf[ord_name].isna().any():
-                raise ValueError(
-                    f"global time-offset rolling over order column "
-                    f"{ord_name!r} with NULL values is not supported: "
-                    "window membership is undefined for them. Filter or "
-                    "fill those order keys first."
-                )
-            pdf = pdf.sort_values(ord_name, kind="mergesort", ignore_index=True)
-            s = pd.Series(
-                np.asarray(pdf[col].to_numpy(), dtype="float64"),
-                index=pd.DatetimeIndex(pdf[ord_name]),
-            )
-            pdf[out_col] = (
-                s.rolling(td, min_periods=minp, center=center, closed=closed)
-                .apply(func, raw=raw)
-                .to_numpy()
-            )
-            yield pdf[out_names]
-
-        return df.repartition(1).mapInPandas(roll_all_time, out_schema)
     if win_type is not None:
         if isinstance(func, str):
             if closed is not None:
@@ -1195,7 +1191,7 @@ def time_rolling_agg(
     UDFs over time offsets run per group via stock pandas
     (``rolling_apply`` routes them); the global UDF form runs per
     target bucket over the same explode machinery
-    (``_bucketed_time_rolling_udf``).
+    (``_global_time_rolling_udf``).
     """
     if func not in BUILTIN_WINDOW_FUNCS:
         raise NotImplementedError(
@@ -1260,6 +1256,14 @@ def time_rolling_agg(
     return _over_buckets(df, data, tgt, output_col, res, F.col(tgt) == F.col(src))
 
 
+def _time_rolling_null_msg(ord_col: str) -> str:
+    return (
+        f"global time-offset rolling over order column {ord_col!r} "
+        "with NULL values is not supported: window membership is "
+        "undefined for them. Filter or fill those order keys first."
+    )
+
+
 def _explode_to_time_buckets(
     df: DataFrame, ord_col: str, d: int, center: bool, what: str
 ) -> tuple[DataFrame, str, str] | None:
@@ -1292,11 +1296,7 @@ def _explode_to_time_buckets(
         return None
     memo = _range_bucket_build(
         df, [ord_col], n_parts * 16, micros=True,
-        null_msg=(
-            f"global time-offset rolling over order column {ord_col!r} "
-            "with NULL values is not supported: window membership is "
-            "undefined for them. Filter or fill those order keys first."
-        ),
+        null_msg=_time_rolling_null_msg(ord_col),
     )
     back_off = (d + 1) // 2 if center else 0
     fwd_off = (d + 1) // 2 if center else d
@@ -1391,7 +1391,7 @@ def _offset_bucket_exprs(memo: dict, t_us: Column, fwd_off: int, back_off: int =
     return (start, own, fwd)
 
 
-def _bucketed_time_rolling_udf(
+def _global_time_rolling_udf(
     df: DataFrame,
     col: str,
     window: str,
@@ -1404,41 +1404,44 @@ def _bucketed_time_rolling_udf(
     output_col: str,
     return_type: T.DataType | str,
     center: bool = False,
-) -> DataFrame | None:
-    """Distributed GLOBAL time-offset rolling UDF: the same
+) -> DataFrame:
+    """GLOBAL time-offset rolling UDF: the same
     explode-to-reachable-buckets shape as the builtin aggs
     (``_explode_to_time_buckets``), but each target bucket runs STOCK
     pandas ``rolling(Timedelta).apply`` over its sorted slice — exactly
     how grouped time-offset UDFs run stock pandas per group (reference
     op #6 is UDF-first, ``series_rolling.py:10-51``). Frames are
     complete by construction; halo copies compute throwaway values and
-    filter out. One shuffle on the target bucket. Returns None (caller
-    falls back to the lazy single-partition scan) when the explode step
-    does."""
-    ex = _explode_to_time_buckets(
-        df, ord_col, d, center, f"global time-offset rolling({window!r}) UDF"
-    )
-    if ex is None:
-        return None
-    data, src, tgt = ex
-    out_schema = T.StructType(
-        [*df.schema.fields, T.StructField(output_col, _to_dtype(return_type), True)]
-    )
-    out_names = [f.name for f in out_schema.fields]
+    filter out. One shuffle on the target bucket. When the explode step
+    returns None, the same pandas roll runs over the whole frame in one
+    task (``_single_partition``)."""
+    field = T.StructField(output_col, _to_dtype(return_type), True)
     td = pd.Timedelta(window)
 
-    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ord_col, kind="mergesort", ignore_index=True)
+    def roll(pdf: pd.DataFrame) -> np.ndarray:
         s = pd.Series(
             np.asarray(pdf[col].to_numpy(), dtype="float64"),
             index=pd.DatetimeIndex(pdf[ord_col]),
         )
-        res = s.rolling(
+        return s.rolling(
             td, min_periods=minp, center=center, closed=closed
-        ).apply(func, raw=raw)
-        pdf[output_col] = res.to_numpy()
-        keep = pdf[pdf[src] == pdf[tgt]]
-        return keep[out_names]
+        ).apply(func, raw=raw).to_numpy()
+
+    ex = _explode_to_time_buckets(
+        df, ord_col, d, center, f"global time-offset rolling({window!r}) UDF"
+    )
+    if ex is None:
+        return _single_partition(
+            df, [ord_col], _time_rolling_null_msg(ord_col), field, roll
+        )
+    data, src, tgt = ex
+    out_schema = T.StructType([*df.schema.fields, field])
+    out_names = [f.name for f in out_schema.fields]
+
+    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(ord_col, kind="mergesort", ignore_index=True)
+        pdf[output_col] = roll(pdf)
+        return pdf[pdf[src] == pdf[tgt]][out_names]
 
     return bucketed_apply(data, per_bucket, out_schema, bucket=tgt)
 
@@ -1518,36 +1521,49 @@ def bucket_assignment_expr(
 
 
 def range_boundaries(
-    df: DataFrame, ord_col: str, n_buckets: int, *, micros: bool = False
-) -> dict:
-    """Sample ``n_buckets`` range buckets over a numeric view of
-    ``ord_col`` with one quantile-sketch job: the number itself,
-    epoch seconds for dates and timestamps, or epoch µs with
-    ``micros``. Returns ``{"num", "bnds", "vlo", "vhi", "bexpr"}`` —
-    the numeric view, the sorted distinct inner boundaries, the exact
-    min/max (GK-sketch endpoints at probs 0 and 1, which the O(1)
-    assignment map needs) and the ``bucket_assignment_expr`` Column of
-    ``num``. Only bucket ASSIGNMENT uses the numeric view; windows
-    still order by the original column. The one sampler of the
-    range-bucket windows and the global as-of join, so they all bucket
-    the same way."""
-    c = F.col(ord_col)
-    if micros:
-        num = F.unix_micros(c.cast("timestamp")).cast("double")
-    elif isinstance(df.schema[ord_col].dataType, T.NumericType):
-        num = c.cast("double")
-    else:
-        num = c.cast("timestamp").cast("double")
-    probs = [i / n_buckets for i in range(n_buckets + 1)]
-    qs = df.select(num.alias("__q__")).approxQuantile(
-        "__q__", probs, 1.0 / n_buckets
-    )
-    vlo, vhi = (qs[0], qs[-1]) if qs else (float("nan"), float("nan"))
-    bnds = sorted(set(qs[1:-1]))
-    return {
-        "num": num, "bnds": bnds, "vlo": vlo, "vhi": vhi,
-        "bexpr": bucket_assignment_expr(num, bnds, vlo, vhi),
-    }
+    df: DataFrame, cols: Sequence[str], n_buckets: int, *, micros: bool = False,
+    accuracy: int | None = None, bad: Column | None = None,
+) -> tuple[list[dict], bool]:
+    """Sample ``n_buckets`` range buckets over a numeric view of each of
+    ``cols`` in ONE aggregate (one Spark action, however many columns):
+    the number itself, epoch seconds for dates and timestamps, or epoch
+    µs with ``micros``. Each view goes to ``percentile_approx`` at
+    ``accuracy`` (default ``n_buckets``: relative error
+    ``1/accuracy``) with NaN mapped to NULL, so the sketch skips NULL
+    and NaN alike; ``probs`` crosses py4j once, as a ``literal_array``.
+    Returns one dict per column — ``{"num", "bnds", "vlo", "vhi",
+    "bexpr"}``: the numeric view, the sorted distinct inner boundaries,
+    the exact min/max (sketch endpoints at probs 0 and 1, which the
+    O(1) assignment map needs; NaN for an empty view) and the
+    ``bucket_assignment_expr`` Column of ``num`` — and whether any row
+    matches ``bad`` (``bool_or`` in the same aggregate; False without
+    it). Only bucket ASSIGNMENT uses the numeric view; windows still
+    order by the original column. The library's one boundary sampler:
+    every range-bucket window, the global as-of join and
+    ``zorder_key`` bucket the same way."""
+    views = []
+    for c in cols:
+        v = F.col(c)
+        if micros:
+            views.append(F.unix_micros(v.cast("timestamp")).cast("double"))
+        elif isinstance(df.schema[c].dataType, T.NumericType):
+            views.append(v.cast("double"))
+        else:
+            views.append(v.cast("timestamp").cast("double"))
+    probs = literal_array([i / n_buckets for i in range(n_buckets + 1)])
+    acc = F.lit(accuracy or n_buckets)
+    aggs = [F.percentile_approx(F.when(~F.isnan(n), n), probs, acc) for n in views]
+    row = df.agg(*aggs, F.bool_or(bad if bad is not None else F.lit(False))).first()
+    out = []
+    for num, qs in zip(views, row):
+        qs = qs or []
+        vlo, vhi = (qs[0], qs[-1]) if qs else (float("nan"), float("nan"))
+        bnds = sorted(set(qs[1:-1]))
+        out.append({
+            "num": num, "bnds": bnds, "vlo": vlo, "vhi": vhi,
+            "bexpr": bucket_assignment_expr(num, bnds, vlo, vhi),
+        })
+    return out, bool(row[-1])
 
 
 def _halo_rolling(
@@ -1657,9 +1673,8 @@ def _halo_rolling(
     halo_after = max(hi, 0)
     edge = halo_before + halo_after  # context rows needed per boundary
 
-    out_schema = T.StructType(
-        [*df.schema.fields, T.StructField(output_col, _to_dtype(return_type), True)]
-    )
+    out_field = T.StructField(output_col, _to_dtype(return_type), True)
+    out_schema = T.StructType([*df.schema.fields, out_field])
     out_names = [f.name for f in out_schema.fields]
     ix = index_col if (index_col and not raw) else ord_col
     null_msg = (
@@ -1790,18 +1805,7 @@ def _halo_rolling(
                 "plan+data)",
             )
 
-        def roll_all(batches):
-            parts = [b for b in batches if len(b)]
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            if pdf[order_cols].isna().any().any():
-                raise ValueError(null_msg)
-            pdf = pdf.sort_values(order_cols, kind="mergesort", ignore_index=True)
-            pdf[output_col] = roll_bucket(pdf)
-            yield pdf[out_names]
-
-        return df.repartition(1).mapInPandas(roll_all, out_schema)
+        return _single_partition(df, order_cols, null_msg, out_field, roll_bucket)
     ctx_map = memo["ctx"]
     ctx_union = memo["ctx_union"]
 
@@ -1927,12 +1931,9 @@ def _halo_rolling(
             if sym_key is not None:
                 memo_put(_SYM_MEMO, sym_key, sym)
         if sym is not None:
-            # explicit repartition: see _over_buckets
-            return (
-                _with_ctx(bucketed).repartition(n_parts, F.col(bkt))
-                .withColumn(output_col, sym.cast(_to_dtype(return_type)))
-                .filter(~F.col(is_ctx))
-                .select(*out_names)
+            return _over_buckets(
+                df, _with_ctx(bucketed), bkt, output_col,
+                sym.cast(_to_dtype(return_type)), ~F.col(is_ctx),
             )
 
     # Python path: hash-partition on bucket id, roll each bucket with
@@ -1976,9 +1977,7 @@ def _halo_rolling(
                 g[output_col] = roll_bucket(g)
             yield g[out_names]
 
-    return bucketed.repartition(n_parts, F.col(bkt)).mapInPandas(
-        roll_buckets, out_schema
-    )
+    return bucket_partitioned(bucketed, bkt).mapInPandas(roll_buckets, out_schema)
 
 
 _EXPANDING_COMPOSABLE = frozenset(
@@ -1999,11 +1998,12 @@ def _range_bucket_build(
 ) -> dict | None:
     """The one boundary build of every global range-bucket window (halo
     rolling, expanding carry, global time rolling, the ewm carry
-    scans): rejects NULL order keys — and NaN in float ones — in any of
-    ``order_cols`` with ``ValueError(null_msg)``, then samples
-    ``range_boundaries`` over the first (epoch µs with ``micros``).
-    Two jobs straight off ``df``, no persist (caching the narrow column
-    costs one more job than the rescan it saves), memoized per
+    scans): samples ``range_boundaries`` over the first of
+    ``order_cols`` (epoch µs with ``micros``) and, in the same
+    aggregate, flags NULL order keys — and NaN in float ones — in any
+    of them, raising ``ValueError(null_msg)``. One aggregate straight
+    off ``df`` (two jobs under AQE), no persist (caching the narrow
+    column costs one more job than the rescan it saves), memoized per
     plan+data. Callers needing a shifted assignment (e.g.
     ``bucket_of(t + d)``) build it from the stored boundaries via
     ``bucket_assignment_expr``. Under strictLazy a cold build returns
@@ -2021,9 +2021,11 @@ def _range_bucket_build(
         bad = bad | F.col(c).isNull()
         if isinstance(df.schema[c].dataType, (T.DoubleType, T.FloatType)):
             bad = bad | F.isnan(F.col(c))
-    if df.filter(bad).limit(1).count():
+    (memo,), has_bad = range_boundaries(
+        df, order_cols[:1], n_buckets, micros=micros, bad=bad
+    )
+    if has_bad:
         raise ValueError(null_msg)
-    memo = range_boundaries(df, order_cols[0], n_buckets, micros=micros)
     if plan_key is not None:
         memo_put(_EXPB_MEMO, plan_key, memo)
     return memo
@@ -2847,36 +2849,25 @@ def _ewm_null_msg(ord_col: str, times: bool) -> str:
 
 def _ewm_single_partition(
     df: DataFrame, col: str, ord_col: str, output_col: str, pandas_op,
-    times_col: str | None = None,
+    times: bool = False,
 ) -> DataFrame:
-    """One-task global ewm fallback: sort the whole frame in a single
-    partition and run stock pandas (exact, lazy — used where the
-    distributed fold doesn't apply, e.g. adjust=False var/std, and as
-    the sequential reference branch of graded contract rows). With
-    ``times_col``, ``pandas_op`` receives ``(values, DatetimeIndex)``
-    so times-mode references run the same way."""
-    out_schema = T.StructType(
-        [*df.schema.fields, T.StructField(output_col, T.DoubleType(), True)]
-    )
-    out_names = [f.name for f in out_schema.fields]
+    """One-task global ewm (``_single_partition``): stock pandas over
+    the whole sorted frame — exact, lazy; used where the distributed
+    fold doesn't apply, e.g. adjust=False var/std, and as the
+    sequential reference branch of graded contract rows. With
+    ``times``, ``pandas_op`` receives ``(values, DatetimeIndex of
+    ord_col)`` so times-mode references run the same way."""
 
-    def run_single(pdf_iter):
-        parts = [b for b in pdf_iter if len(b)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        if pdf[ord_col].isna().any():
-            raise ValueError(_ewm_null_msg(ord_col, times_col is not None))
-        pdf = pdf.sort_values(ord_col, kind="mergesort", ignore_index=True)
+    def compute(pdf: pd.DataFrame) -> np.ndarray:
         vals = pd.Series(np.asarray(pdf[col].to_numpy(), dtype="float64"))
-        if times_col is None:
-            pdf[output_col] = pandas_op(vals).to_numpy()
-        else:
-            t = pd.DatetimeIndex(pd.to_datetime(pdf[times_col]))
-            pdf[output_col] = pandas_op(vals, t).to_numpy()
-        yield pdf[out_names]
+        if not times:
+            return pandas_op(vals).to_numpy()
+        return pandas_op(vals, pd.DatetimeIndex(pd.to_datetime(pdf[ord_col]))).to_numpy()
 
-    return df.repartition(1).mapInPandas(run_single, out_schema)
+    return _single_partition(
+        df, [ord_col], _ewm_null_msg(ord_col, times),
+        T.StructField(output_col, T.DoubleType(), True), compute,
+    )
 
 
 def _carry_scan(
@@ -2972,10 +2963,7 @@ def _carry_scan(
                 "plan+data)",
             )
     if memo is None:
-        return _ewm_single_partition(
-            df, col, ord_col, output_col, single,
-            times_col=ord_col if times else None,
-        )
+        return _ewm_single_partition(df, col, ord_col, output_col, single, times)
 
     seeds = memo["seeds"]
     bkt = fresh_column(df, "__bkt__")

@@ -259,17 +259,18 @@ def zorder_key(
     predicates after a write, not just the first sort column.
 
     Construction, all JVM expressions: each column is quantized to a
-    ``bits_per_col``-bit equi-depth rank — approxQuantile boundaries
-    (value-distribution-proof, unlike min/max linear scaling which one
-    outlier flattens) assigned through the same O(1) micro-bucket + LUT
-    expression the window machinery buckets with
-    (``bucket_assignment_expr``) — then the per-column rank bits are
-    interleaved column-major (bit i of col j lands at position
-    i·ncols + j) with shift/OR expressions. The result fits a bigint
-    for ncols·bits_per_col ≤ 63.
+    ``bits_per_col``-bit equi-depth rank — quantile boundaries from
+    ``window.range_boundaries`` (value-distribution-proof, unlike
+    min/max linear scaling which one outlier flattens) assigned through
+    the same O(1) micro-bucket + LUT expression the window machinery
+    buckets with (``bucket_assignment_expr``) — then the per-column
+    rank bits are interleaved column-major (bit i of col j lands at
+    position i·ncols + j) with shift/OR expressions. The result fits a
+    bigint for ncols·bits_per_col ≤ 63.
 
-    Scale: ONE bounded approxQuantile pass per column at build time
-    (eager, like the window-bucket machinery); the key itself is pure
+    Scale: ONE bounded quantile-sketch aggregate over all the columns
+    at build time (eager, like the window-bucket machinery; 2 jobs under
+    AQE whatever the column count); the key itself is pure
     whole-stage-codegen arithmetic in the scan. Write with
     ``df.repartitionByRange(n, F.col(output_col))
     .sortWithinPartitions(output_col)`` and drop the key column.
@@ -287,32 +288,27 @@ def zorder_key(
             f"{n_cols} cols × {bits_per_col} bits = "
             f"{n_cols * bits_per_col} bits > 63 (bigint)"
         )
-    n_buckets = 1 << bits_per_col
-    ranks = []
     for c in cols:
         t = df.schema[c].dataType
-        if isinstance(t, T.NumericType):
-            num = F.col(c).cast("double")
-        elif isinstance(t, (T.DateType, T.TimestampType, T.TimestampNTZType)):
-            num = F.col(c).cast("timestamp").cast("double")
-        else:
+        if not isinstance(
+            t, (T.NumericType, T.DateType, T.TimestampType, T.TimestampNTZType)
+        ):
             raise TypeError(
                 f"zorder_key needs numeric/date/timestamp columns, "
                 f"{c!r} is {t.simpleString()}"
             )
-        from pandarallel_spark.operators.window import bucket_assignment_expr
+    from pandarallel_spark.operators.window import range_boundaries
 
-        probs = [i / n_buckets for i in range(n_buckets + 1)]
-        qs = df.select(num.alias("__q__")).approxQuantile(
-            "__q__", probs, 2.0 / n_buckets
+    n_buckets = 1 << bits_per_col
+    # relative error 2/n_buckets: a rank is off by at most ~2 buckets
+    views, _ = range_boundaries(df, cols, n_buckets, accuracy=n_buckets // 2)
+    ranks = [
+        F.least(
+            F.greatest(F.coalesce(v["bexpr"].cast("long"), F.lit(0)), F.lit(0)),
+            F.lit(n_buckets - 1),
         )
-        vlo, vhi = (qs[0], qs[-1]) if qs else (float("nan"), float("nan"))
-        bnds = sorted(set(qs[1:-1]))
-        rank = F.coalesce(
-            bucket_assignment_expr(num, bnds, vlo, vhi).cast("long"), F.lit(0)
-        )
-        rank = F.least(F.greatest(rank, F.lit(0)), F.lit(n_buckets - 1))
-        ranks.append(rank)
+        for v in views
+    ]
     # interleave: bit i of col j → position i*n_cols + j
     z = F.lit(0).cast("long")
     for i in range(bits_per_col):

@@ -96,8 +96,8 @@ FROM c ASOF LEFT JOIN p ON c.ts >= p.ts
     "GLOBAL (key-less) as-of join — pd.merge_asof without by=, the most "
     "common pandas call shape: latest purchase anywhere at-or-before "
     "each click. NOT a single-partition total-order window: the union is "
-    "range-bucketed on the timestamp (approxQuantile boundaries, "
-    "memoized + strictLazy-guarded), cross-bucket matches come from a "
+    "range-bucketed on the timestamp (quantile-sketch boundaries from "
+    "one aggregate, memoized + strictLazy-guarded), cross-bucket matches come from a "
     "one-row-per-bucket carry aggregation broadcast back, and the "
     "windows partition by bucket id — fully parallel, one main shuffle "
     "(operators/join.py global path). Right side pre-aggregated to one "
@@ -438,7 +438,8 @@ FROM p GROUP BY 1
 """,
     "GLOBAL exponentially-weighted mean AND variance over per-timestamp "
     "purchase cents — the distributed bucket-carry scans "
-    "(operators/window.py ewm_mean: approxQuantile range buckets, one "
+    "(operators/window.py ewm_mean: range buckets from one quantile-"
+    "sketch aggregate, one "
     "bounded state row per bucket, driver-chained seeds, second "
     "per-bucket pass; ewm_moment: the four-moment carry with per-bucket "
     "shift centering), graded r7 (previously pytest-differential only). "
@@ -486,7 +487,7 @@ def ewm_mean_purchase_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     reft = _ewm_single_partition(
         p, "cents", "ts", "reft",
         lambda s, t: s.ewm(halflife=pd.Timedelta("1h"), times=t).mean(),
-        times_col="ts",
+        times=True,
     )
     j = (
         dist.join(distv.select("ts", "ewm_var"), "ts")

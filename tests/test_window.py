@@ -2281,3 +2281,293 @@ def test_global_scan_keeps_user_column_named_like_bucket(spark, pdf, op):
     np.testing.assert_allclose(
         out["r"], expected.to_numpy(), rtol=1e-7, atol=1e-12
     )
+
+
+# ---------------------------------------------------------------------------
+# One boundary build: NULL/NaN order keys and the range-bucket sampler
+# ---------------------------------------------------------------------------
+
+_NULL_KEY_OPS = {
+    # op: (build(sdf, order), order columns, message fragment,
+    #      runs the one-task fallback at shuffle.partitions=1)
+    "halo_builtin": (
+        lambda W, d, o: W.rolling_apply(d, "x", 4, "mean", o, output_col="r"),
+        ["o"], "global rolling over order columns", False,
+    ),
+    "halo_udf": (
+        lambda W, d, o: W.rolling_apply(
+            d, "x", 4, lambda a: float(a.sum()), o, raw=True, output_col="r"
+        ),
+        ["o"], "global rolling over order columns", True,
+    ),
+    "halo_second_col": (
+        lambda W, d, o: W.rolling_apply(
+            d, "x", 4, lambda a: float(a.sum()), o, raw=True, output_col="r"
+        ),
+        ["o", "o2"], "global rolling over order columns", True,
+    ),
+    "expanding_sum": (
+        lambda W, d, o: W.expanding_apply(d, "x", "sum", o, output_col="r"),
+        ["o"], "global expanding over order column", False,
+    ),
+    "expanding_var": (
+        lambda W, d, o: W.expanding_apply(d, "x", "var", o, output_col="r"),
+        ["o"], "global expanding over order column", False,
+    ),
+    "time_rolling_builtin": (
+        lambda W, d, o: W.rolling_apply(d, "x", "1h", "sum", o, output_col="r"),
+        ["ts"], "global time-offset rolling over order column", False,
+    ),
+    "time_rolling_udf": (
+        lambda W, d, o: W.rolling_apply(d, "x", "1h", np.sum, o, output_col="r"),
+        ["ts"], "global time-offset rolling over order column", True,
+    ),
+    "ewm_mean": (
+        lambda W, d, o: W.ewm_mean(d, "x", o, alpha=0.3, output_col="r"),
+        ["o"], "ewm over order column", True,
+    ),
+    "ewm_var": (
+        lambda W, d, o: W.ewm_moment(d, "x", o, "var", alpha=0.3, output_col="r"),
+        ["o"], "ewm over order column", True,
+    ),
+    "ewm_sum": (
+        lambda W, d, o: W.ewm_sum(d, "x", o, alpha=0.3, output_col="r"),
+        ["o"], "ewm over order column", True,
+    ),
+    "ewm_mean_times": (
+        lambda W, d, o: W.ewm_mean_times(d, "x", o, "1h", output_col="r"),
+        ["ts"], "ewm times column", True,
+    ),
+}
+
+
+def _bad_key_frame(spark, bad_col: str, bad: str):
+    """600 rows, float order keys ``o``/``o2``, timestamp ``ts``, with
+    one NULL (or float NaN) key in ``bad_col`` mid-frame. Built in Spark:
+    a pandas NaN would arrive as NULL."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(600).select(
+        F.col("id").alias("i"),
+        (F.col("id") * 1.5).alias("o"),
+        F.col("id").cast("double").alias("o2"),
+        F.timestamp_seconds(F.lit(1_600_000_000) + F.col("id") * 60).alias("ts"),
+        F.sin(F.col("id")).alias("x"),
+    )
+    value = (
+        F.lit(float("nan")) if bad == "nan" else F.lit(None)
+    ).cast(df.schema[bad_col].dataType)
+    return df.withColumn(
+        bad_col, F.when(F.col("i") == 311, value).otherwise(F.col(bad_col))
+    ).repartition(4)
+
+
+@pytest.mark.parametrize(
+    "op,bad",
+    [
+        (op, bad)
+        for op, (_b, order, _m, _s) in _NULL_KEY_OPS.items()
+        for bad in (["null"] if order == ["ts"] else ["null", "nan"])
+    ],
+)
+def test_range_bucket_window_rejects_null_or_nan_order_key(spark, op, bad):
+    """Every global range-bucket window rejects a NULL order key (and
+    NaN in a float one) with its own message: the bucketed plan at build
+    time, from the boundary aggregate's flag; the one-task fallback
+    (``_single_partition``, one shuffle partition) when it executes.
+    At one partition the builtins run Spark's own unpartitioned window
+    instead, which has no such check."""
+    import re
+
+    from pandarallel_spark.operators import window as W
+
+    build, order, msg, single = _NULL_KEY_OPS[op]
+    sdf = _bad_key_frame(spark, order[-1], bad)
+    arg = order if len(order) > 1 else order[0]
+    with pytest.raises(ValueError, match=re.escape(msg)):
+        build(W, sdf, arg)
+    if not single:
+        return
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        out = build(W, sdf, arg)
+        with pytest.raises(Exception, match=re.escape(msg)):
+            out.collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted by job group once the
+    listener bus has delivered their events."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sampler_frame(spark, path, n: int = 5000):
+    """Int, float (with NaN and NULL), timestamp and date columns, read
+    back from parquet: a file split's rows do not depend on which columns
+    a query projects, as a round-robin ``repartition``'s do."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(41)
+    f = rng.standard_normal(n)
+    pdf = pd.DataFrame({
+        "i": rng.integers(-(10**6), 10**6, n),
+        "f": f,
+        "ts": pd.Timestamp("2023-01-01")
+        + pd.to_timedelta(rng.integers(0, 10**12, n), unit="us"),
+    })
+    sdf = spark.createDataFrame(pdf)
+    # real NaN (a pandas NaN would arrive as NULL) plus NULLs
+    sdf.withColumns({
+        "f": F.when(F.col("i") % 13 == 0, F.lit(float("nan")))
+        .when(F.col("i") % 17 == 0, F.lit(None))
+        .otherwise(F.col("f")),
+        "d": F.date_add(
+            F.to_date(F.lit("2000-01-01")), F.pmod("i", F.lit(9000)).cast("int")
+        ),
+    }).repartition(4).write.parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
+def _approx_quantile_bounds(sdf, num, n_buckets, rel_err):
+    qs = sdf.select(num.alias("__q__")).approxQuantile(
+        "__q__", [i / n_buckets for i in range(n_buckets + 1)], rel_err
+    )
+    vlo, vhi = (qs[0], qs[-1]) if qs else (float("nan"), float("nan"))
+    return vlo, vhi, sorted(set(qs[1:-1]))
+
+
+def _same_bounds(got: dict, ref: tuple) -> bool:
+    vlo, vhi, bnds = ref
+    return (
+        np.array_equal([got["vlo"], got["vhi"]], [vlo, vhi], equal_nan=True)
+        and got["bnds"] == bnds
+    )
+
+
+@pytest.mark.parametrize("kind", ["int", "float_nan", "ts_s", "ts_us", "date"])
+def test_range_boundaries_match_approx_quantile(spark, tmp_path, kind):
+    """The one-aggregate sampler gives exactly the boundaries of
+    ``DataFrame.approxQuantile`` at relative error ``1/n_buckets``
+    (NULL and NaN skipped), so bucket assignments are unchanged."""
+    from pyspark.sql import functions as F
+
+    from pandarallel_spark.operators.window import range_boundaries
+
+    sdf = _sampler_frame(spark, tmp_path / "frame")
+    col, micros = {
+        "int": ("i", False), "float_nan": ("f", False), "ts_s": ("ts", False),
+        "ts_us": ("ts", True), "date": ("d", False),
+    }[kind]
+    c = F.col(col)
+    if micros:
+        num = F.unix_micros(c.cast("timestamp")).cast("double")
+    elif kind in ("int", "float_nan"):
+        num = c.cast("double")
+    else:
+        num = c.cast("timestamp").cast("double")
+    for n_buckets in (32, 64, 512):
+        (got,), flagged = range_boundaries(sdf, [col], n_buckets, micros=micros)
+        assert not flagged
+        ref = _approx_quantile_bounds(sdf, num, n_buckets, 1.0 / n_buckets)
+        assert _same_bounds(got, ref), (n_buckets, got["bnds"][:5], ref[2][:5])
+        assert len(got["bnds"]) > n_buckets // 2
+
+
+def test_range_boundaries_empty_and_all_null(spark):
+    """No sampled value: NaN endpoints, no inner boundaries (one
+    bucket), as ``approxQuantile``'s empty result gave; the NULL flag
+    comes from the same aggregate."""
+    from pyspark.sql import functions as F
+
+    from pandarallel_spark.operators.window import range_boundaries
+
+    sdf = spark.range(50).select(
+        F.col("id").cast("double").alias("v"),
+        F.lit(None).cast("double").alias("n"),
+    )
+    for df, col, flag in (
+        (sdf.filter(F.col("v") < 0), "v", False),
+        (sdf, "n", True),
+    ):
+        (got,), flagged = range_boundaries(
+            df, [col], 64, bad=F.col(col).isNull()
+        )
+        assert flagged is flag
+        ref = _approx_quantile_bounds(df, F.col(col), 64, 1.0 / 64)
+        assert ref[2] == [] and _same_bounds(got, ref)
+        assert np.isnan(got["vlo"]) and np.isnan(got["vhi"])
+
+
+def test_zorder_key_ranks_match_approx_quantile(spark, tmp_path):
+    """``zorder_key`` samples all its columns in one aggregate at
+    relative error ``2/n_buckets``; the key equals the one built from
+    per-column ``approxQuantile`` boundaries."""
+    from pyspark.sql import functions as F
+
+    from pandarallel_spark.operators.window import bucket_assignment_expr
+    from pandarallel_spark.sources.tables import zorder_key
+
+    sdf = _sampler_frame(spark, tmp_path / "frame")
+    cols = ["i", "f", "ts"]
+    for bits in (6, 9):
+        n_buckets = 1 << bits
+        ranks = []
+        for c in cols:
+            num = F.col(c).cast("double") if c != "ts" else (
+                F.col(c).cast("timestamp").cast("double")
+            )
+            vlo, vhi, bnds = _approx_quantile_bounds(
+                sdf, num, n_buckets, 2.0 / n_buckets
+            )
+            r = F.coalesce(
+                bucket_assignment_expr(num, bnds, vlo, vhi).cast("long"), F.lit(0)
+            )
+            ranks.append(F.least(F.greatest(r, F.lit(0)), F.lit(n_buckets - 1)))
+        z = F.lit(0).cast("long")
+        for b in range(bits):
+            for j, r in enumerate(ranks):
+                bit = F.shiftright(r, b).bitwiseAND(F.lit(1))
+                z = z.bitwiseOR(F.shiftleft(bit, b * len(cols) + j))
+        out = (
+            zorder_key(sdf, cols, bits_per_col=bits, output_col="z")
+            .select("z", z.alias("want")).toPandas()
+        )
+        assert out["z"].tolist() == out["want"].tolist()
+
+
+def test_boundary_build_runs_one_aggregate(spark, tmp_path):
+    """A cold boundary build runs the jobs of ONE aggregate — the NULL
+    check rides in the sampler's aggregate instead of a separate
+    ``filter().limit(1).count()`` action — and ``zorder_key`` samples
+    three columns in the same jobs as two."""
+    from pyspark.sql import functions as F
+
+    from pandarallel_spark.operators.window import _range_bucket_build
+    from pandarallel_spark.sources.tables import zorder_key
+
+    path = str(tmp_path / "frame")
+    spark.range(4000).select(
+        F.col("id").alias("a"),
+        F.sin(F.col("id")).alias("b"),
+        (F.col("id") % 97).alias("c"),
+    ).repartition(4).write.parquet(path)
+    df = spark.read.parquet(path)
+    one_agg = _jobs_of(spark, lambda: df.agg(F.max("a")).collect())
+    assert _jobs_of(
+        spark, lambda: _range_bucket_build(df, ["a", "b"], 64, null_msg="x")
+    ) == one_agg
+    assert _jobs_of(spark, lambda: zorder_key(df, ["a", "b"])) == one_agg
+    assert _jobs_of(spark, lambda: zorder_key(df, ["a", "b", "c"])) == one_agg
