@@ -159,6 +159,36 @@ def shuffle_partitions(spark, default: int = 200) -> int:
         return default
 
 
+# AQE's default ``spark.sql.adaptive.coalescePartitions.minPartitionSize``:
+# below it AQE itself runs a shuffle as one task
+ONE_TASK_BYTES = 1 << 20
+
+
+def fits_one_task(df: DataFrame) -> bool:
+    """Whether a global window over ``df`` runs as ONE task with no build
+    job — the one routing decision of every global range-bucket window
+    (halo rolling, time rolling, expanding, the ewm carry scans) and the
+    global as-of join. True with one shuffle partition, or when the
+    optimized plan's ``sizeInBytes`` is at most ``ONE_TASK_BYTES``
+    (read at call time). A bucketed plan pays fixed per-stage costs —
+    a boundary aggregate, a context or carry collect, hundreds of py4j
+    round trips per cold build — that one task over a small input
+    never does. Reading the statistic launches no Spark job.
+
+    Known limits: for a file scan ``sizeInBytes`` is the bytes on disk,
+    so a highly compressible large file can still be routed to one
+    task — slower, never wrong. A plan without statistics (an
+    RDD-backed frame) reports Spark's default size and stays bucketed,
+    as does a plan whose statistics cannot be read."""
+    if shuffle_partitions(df.sparkSession) <= 1:
+        return True
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — no readable statistic: bucketed
+        return False
+    return size <= ONE_TASK_BYTES
+
+
 def coarse_group_count(spark, factor: int = 4, cap: int = 65536) -> int:
     """Scale-adaptive group count for Python stages keyed on a COARSE
     hash of their real key (r14): grouped ``applyInPandas`` pays a fixed

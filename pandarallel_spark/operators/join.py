@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from pandarallel_spark.operators._memo import (
     constant_partition_key,
     eager_build_guard,
+    fits_one_task,
     memo_put,
     plan_data_key,
     shuffle_partitions,
@@ -269,8 +270,10 @@ def _global_asof_buckets(
       collect; the spine window sorts ≤1024 rows.
 
     Only the boundary sampling runs at build time (bounded, memoized per
-    plan+data, strictLazy-guarded). With one shuffle partition — or a
-    non-orderable timestamp type — the sampling is skipped and a
+    plan+data, strictLazy-guarded). When the union fits one task
+    (``_memo.fits_one_task``: one shuffle partition, or at most 1 MiB
+    by the plan's ``sizeInBytes``) — or the timestamp type is not
+    orderable — the sampling is skipped: no build job runs, and a
     single bucket keeps exact single-partition semantics (bucket ``-1``
     still routes undefined timestamps).
     """
@@ -283,10 +286,8 @@ def _global_asof_buckets(
     is_float = isinstance(ts_type, (T.DoubleType, T.FloatType))
     bad = t.isNull() | (F.isnan(t) if is_float else F.lit(False))
     unioned = unioned.filter((F.col("__side__") == 1) | ~bad)
-    n_parts = shuffle_partitions(spark)
-
-    if orderable and n_parts > 1:
-        n_buckets = max(2, min(1024, n_parts * 8))
+    if orderable and not fits_one_task(unioned):
+        n_buckets = max(2, min(1024, shuffle_partitions(spark) * 8))
         key = plan_data_key(unioned, "__global_asof__", n_buckets)
         memo = _ASOF_MEMO.get(key) if key is not None else None
         if memo is None:

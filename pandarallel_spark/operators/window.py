@@ -42,6 +42,7 @@ from pandarallel_spark.operators._memo import (
     bucket_partitioned,
     bucketed_apply,
     constant_partition_key,
+    fits_one_task,
     fresh_column,
     memo_put,
     plan_data_key,
@@ -537,8 +538,8 @@ def weighted_rolling_agg(
         # previously the one always-single-partition path). The slot
         # expressions evaluate per bucket; context rows complete frames
         # across bucket boundaries. Falls back to the total-order window
-        # below when the shape doesn't qualify (one shuffle partition,
-        # non-orderable order key, strictLazy cold build).
+        # below when the shape doesn't qualify (an input that fits one
+        # task, non-orderable order key, strictLazy cold build).
         halo = _halo_rolling(
             df, col, order_by, output_col, "double",
             window=window, min_periods=minp, center=center, closed=None,
@@ -547,7 +548,7 @@ def weighted_rolling_agg(
         )
         if halo is not None:
             return halo
-        if shuffle_partitions(df.sparkSession) > 1:
+        if not fits_one_task(df):
             _warn_single_partition(
                 f"global weighted (win_type={win_type!r}) rolling {agg}",
                 "the order column is numeric/date/timestamp and the plan "
@@ -561,6 +562,8 @@ def weighted_rolling_agg(
     res = _weighted_window_expr(
         ws, col, window, wt, minp, offset, agg, ddof, gidx
     )
+    if not partition_by:
+        res = _checked_order(df, order_by, _rolling_null_msg(order_by), res)
     return df.withColumn(output_col, res)
 
 
@@ -872,18 +875,54 @@ def _over_buckets(
     return out.select(*df.columns, *([] if output_col in df.columns else [output_col]))
 
 
+def _bad_order_key(df: DataFrame, order_cols: Sequence[str]) -> Column:
+    """True on a row whose key in any of the named ``order_cols`` is
+    NULL, or NaN in a float column: window membership is undefined for
+    such rows."""
+    bad = F.lit(False)
+    for c in order_cols:
+        bad = bad | F.col(c).isNull()
+        if isinstance(df.schema[c].dataType, (T.DoubleType, T.FloatType)):
+            bad = bad | F.isnan(F.col(c))
+    return bad
+
+
+def _checked_order(
+    df: DataFrame, order_by: Sequence, null_msg: str, value: Column
+) -> Column:
+    """``value``, raising ``null_msg`` when the row executes with a bad
+    key (``_bad_order_key``) in a named order column: the global builtin
+    windows' one-task plan keeps the contract the bucketed build checks
+    in its boundary aggregate."""
+    names = [c for c in order_by if isinstance(c, str)]
+    if not names:
+        return value
+    return F.when(_bad_order_key(df, names), F.raise_error(F.lit(null_msg))).otherwise(
+        value
+    )
+
+
+def _out_schema(df: DataFrame, field: T.StructField) -> T.StructType:
+    """``df``'s schema with ``field`` replacing the column of that name
+    in place, or appended — the column contract of ``withColumn``."""
+    fields = [field if f.name == field.name else f for f in df.schema.fields]
+    if field.name not in df.columns:
+        fields.append(field)
+    return T.StructType(fields)
+
+
 def _single_partition(
     df: DataFrame, order_cols: list[str], null_msg: str,
     field: T.StructField, compute: Callable[[pd.DataFrame], np.ndarray],
 ) -> DataFrame:
-    """The one-task fallback of every global range-bucket window (one
-    shuffle partition, a strictLazy cold build, shapes the buckets
+    """The one-task plan of every global range-bucket window (an input
+    that fits one task, a strictLazy cold build, shapes the buckets
     don't cover): all of ``df`` in one partition, merge-sorted by
-    ``order_cols``, with ``field`` set to ``compute(sorted_pdf)``.
-    Lazy, and exact against stock pandas. NULL/NaN order keys raise
-    ``ValueError(null_msg)`` in the task, as the bucketed build does at
-    build time."""
-    out_schema = T.StructType([*df.schema.fields, field])
+    ``order_cols``, with ``field`` set to ``compute(sorted_pdf)`` —
+    replacing a column of that name in place. Lazy, and exact against
+    stock pandas. NULL/NaN order keys raise ``ValueError(null_msg)`` in
+    the task, as the bucketed build does at build time."""
+    out_schema = _out_schema(df, field)
     out_names = [f.name for f in out_schema.fields]
 
     def run(batches):
@@ -948,15 +987,19 @@ def rolling_apply(
     pandas scalar loop in the last ulp. Set False for strict pandas bit
     parity.
 
-    Build-time behavior (global windows): constructing the plan runs
-    bounded Spark jobs (one aggregate that samples the bucket
+    Build-time behavior (global windows): an input of at most 1 MiB
+    (the optimized plan's ``sizeInBytes``; ``_memo.fits_one_task``),
+    or any input at one shuffle partition, runs as one task and
+    constructing its plan runs no Spark job. A larger input's build
+    runs bounded Spark jobs (one aggregate that samples the bucket
     boundaries and flags NULL/NaN order keys, then boundary-context
     extraction), memoized per plan+data so re-building the same
-    rolling is free. NULL order
-    keys raise ``ValueError`` — window membership is undefined for them
-    and pandas/Spark disagree on where nulls sort. Under strictLazy a
-    cold build runs no job: it warns ``SINGLE-PARTITION`` and returns
-    the lazy single-partition plan.
+    rolling is free. NULL order keys raise ``ValueError`` — window
+    membership is undefined for them and pandas/Spark disagree on where
+    nulls sort — at build on the bucketed plan, when the one-task plan
+    executes. Under strictLazy a cold build of a larger input runs no
+    job: it warns ``SINGLE-PARTITION`` and returns the lazy
+    single-partition plan.
     """
     if not isinstance(window, (int, np.integer)):
         # time-offset window (pandas rolling("1h") / Timedelta): builtin
@@ -1066,8 +1109,8 @@ def rolling_apply(
             # GLOBAL builtin: not a single-partition total-order window —
             # ride the range-bucket + boundary-context machinery as a
             # bucket-partitioned JVM window (falls back below when the
-            # shape doesn't qualify: non-orderable first order column, one shuffle
-            # partition, non-orderable key)
+            # input fits one task or the shape doesn't qualify:
+            # non-orderable first order column, strictLazy cold build)
             halo = _halo_rolling(
                 df, col, order_by, output_col, "double",
                 window=window, min_periods=min_periods, center=center,
@@ -1076,7 +1119,7 @@ def rolling_apply(
             )
             if halo is not None:
                 return halo
-            if shuffle_partitions(df.sparkSession) > 1:
+            if not fits_one_task(df):
                 _warn_single_partition(
                     f"global rolling({window}) builtin {func!r}",
                     "the order columns are named, the first is numeric/"
@@ -1084,9 +1127,10 @@ def rolling_apply(
                     "build jobs (pre-build once outside strict-lazy "
                     "scope)",
                 )
-        return df.withColumn(
-            output_col, _gated_builtin(df, col, func, spec, min_periods, win_args)
-        )
+        res = _gated_builtin(df, col, func, spec, min_periods, win_args)
+        if not partition_by:
+            res = _checked_order(df, order_by, _rolling_null_msg(order_by), res)
+        return df.withColumn(output_col, res)
 
     if partition_by:
         # grouped UDF windows: stock pandas rolling per group (exact
@@ -1107,7 +1151,7 @@ def rolling_apply(
     )
     if halo is not None:
         return halo
-    if shuffle_partitions(df.sparkSession) > 1:
+    if not fits_one_task(df):
         _warn_single_partition(
             f"global rolling({window}) UDF",
             "the order columns are named, the first is numeric/date/"
@@ -1249,11 +1293,31 @@ def time_rolling_agg(
     if ex is None:
         spec = _window_spec([ord_axis], partition_by).rangeBetween(lo, hi)
         res = _gated_builtin(df, col, func, spec, minp, agg_args, offset_frames=True)
+        if not partition_by:
+            res = _checked_order(df, [ord_col], _time_rolling_null_msg(ord_col), res)
         return df.withColumn(output_col, res)
     data, src, tgt = ex
     spec = _window_spec([ord_axis], [tgt]).rangeBetween(lo, hi)
     res = _gated_builtin(df, col, func, spec, minp, agg_args, offset_frames=True)
     return _over_buckets(df, data, tgt, output_col, res, F.col(tgt) == F.col(src))
+
+
+def _rolling_null_msg(order_cols: Sequence) -> str:
+    return (
+        f"global rolling over order columns {list(order_cols)!r} with "
+        "NULL or NaN values is not supported: window membership "
+        "is undefined for them (and pandas/Spark disagree on "
+        "where they sort). Filter or fill those order keys first."
+    )
+
+
+def _expanding_null_msg(order_cols: Sequence) -> str:
+    key = order_cols[0] if len(order_cols) == 1 else list(order_cols)
+    return (
+        f"global expanding over order column {key!r} with NULL or "
+        "NaN values is not supported: scan position is undefined for "
+        "them. Filter or fill those order keys first."
+    )
 
 
 def _time_rolling_null_msg(ord_col: str) -> str:
@@ -1285,17 +1349,18 @@ def _explode_to_time_buckets(
     duplicate factor is ≈1 + window/bucket-span, capped at 2 (3
     centered) by ``_offset_bucket_exprs``.
 
-    Returns ``(data, src, tgt)``, or None with one shuffle partition,
-    under a strictLazy cold build, or when the data spans ≲ one window;
-    the last two warn ``SINGLE-PARTITION`` (``what`` names the window)
-    because the caller then runs its lazy single-partition plan. NULL
-    order keys are rejected at build.
+    Returns ``(data, src, tgt)``, or None when the input fits one task
+    (``_memo.fits_one_task``: one shuffle partition, or at most 1 MiB by
+    the plan's ``sizeInBytes`` — no build job runs), under a strictLazy
+    cold build, or when the data spans ≲ one window; the last two warn
+    ``SINGLE-PARTITION`` (``what`` names the window) because the caller
+    then runs its lazy single-partition plan. NULL order keys are
+    rejected at build.
     """
-    n_parts = shuffle_partitions(df.sparkSession)
-    if n_parts <= 1:
+    if fits_one_task(df):
         return None
     memo = _range_bucket_build(
-        df, [ord_col], n_parts * 16, micros=True,
+        df, [ord_col], shuffle_partitions(df.sparkSession) * 16, micros=True,
         null_msg=_time_rolling_null_msg(ord_col),
     )
     back_off = (d + 1) // 2 if center else 0
@@ -1435,7 +1500,7 @@ def _global_time_rolling_udf(
             df, [ord_col], _time_rolling_null_msg(ord_col), field, roll
         )
     data, src, tgt = ex
-    out_schema = T.StructType([*df.schema.fields, field])
+    out_schema = _out_schema(df, field)
     out_names = [f.name for f in out_schema.fields]
 
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1631,8 +1696,10 @@ def _halo_rolling(
     branches (the r3 design's row-loss hazard on tied or null order
     keys), no second lineage evaluation, no join.
 
-    With one shuffle partition the bucket machinery is skipped entirely
-    (a single partition already sees the whole order); so is it under a
+    When the input fits one task (``_memo.fits_one_task``: one shuffle
+    partition, or at most 1 MiB by the plan's ``sizeInBytes``) the
+    bucket machinery is skipped entirely and no build job runs: a
+    single partition already sees the whole order. So is it under a
     strictLazy cold build, warned ``SINGLE-PARTITION`` for UDFs (the
     caller warns for builtins).
 
@@ -1667,22 +1734,17 @@ def _halo_rolling(
         return None
 
     spark = df.sparkSession
-    n_parts = shuffle_partitions(spark)
+    one_task = fits_one_task(df)
     lo, hi = _frame_bounds(window, center, closed)
     halo_before = -lo  # rows whose frame reaches into the previous bucket
     halo_after = max(hi, 0)
     edge = halo_before + halo_after  # context rows needed per boundary
 
     out_field = T.StructField(output_col, _to_dtype(return_type), True)
-    out_schema = T.StructType([*df.schema.fields, out_field])
+    out_schema = _out_schema(df, out_field)
     out_names = [f.name for f in out_schema.fields]
     ix = index_col if (index_col and not raw) else ord_col
-    null_msg = (
-        f"global rolling over order columns {order_cols!r} with "
-        "NULL or NaN values is not supported: window membership "
-        "is undefined for them (and pandas/Spark disagree on "
-        "where they sort). Filter or fill those order keys first."
-    )
+    null_msg = _rolling_null_msg(order_cols)
 
     def roll_bucket(g: pd.DataFrame) -> np.ndarray:
         s = pd.Series(g[col].to_numpy(), index=g[ix].to_numpy())
@@ -1693,7 +1755,7 @@ def _halo_rolling(
     # ---- BUILD time (memoized): boundaries, null check, context rows
     bkt, is_ctx = fresh_column(df, "__bkt__"), fresh_column(df, "__ctx__")
     memo = None
-    if n_parts > 1:
+    if not one_task:
         # more buckets than partitions (16×) so hash collisions on the
         # bucket id average out across tasks instead of doubling a
         # straggler (k/p≈16 → ~25% relative load std; 4× measured a
@@ -1701,7 +1763,7 @@ def _halo_rolling(
         # ~2× the median); clamped so the collected context stays
         # bounded even for very large windows (≈ n_buckets × 2·edge
         # narrow rows)
-        n_buckets = n_parts * 16
+        n_buckets = shuffle_partitions(spark) * 16
         if edge:
             n_buckets = max(2, min(n_buckets, 2_000_000 // (2 * edge)))
         # Memo key = plan identity AND data identity (semanticHash alone
@@ -1714,7 +1776,7 @@ def _halo_rolling(
             bkt, is_ctx,
         )
         memo = _HALO_MEMO.get(plan_key) if plan_key is not None else None
-    if memo is None and n_parts > 1 and not strict_lazy(spark):
+    if memo is None and not one_task and not strict_lazy(spark):
         bounds = _range_bucket_build(df, order_cols, n_buckets, null_msg=null_msg)
         bucket_expr = bounds["bexpr"]
         # per-bucket boundary context rows → driver. A bucket's tail
@@ -1789,15 +1851,15 @@ def _halo_rolling(
         if plan_key is not None:
             memo_put(_HALO_MEMO, plan_key, memo)
     if memo is None:
-        # one shuffle partition (a single partition already sees the
-        # whole order), or a strictLazy cold build. Builtin aggs take
-        # the caller's plain unpartitioned window; UDFs roll the whole
-        # frame in one task. The NULL/NaN order-key contract still
-        # holds, checked in the task — behavior must not diverge on
-        # spark.sql.shuffle.partitions=1 (review finding r4).
+        # an input that fits one task (a single partition already sees
+        # the whole order), or a strictLazy cold build. Builtin aggs
+        # take the caller's plain unpartitioned window; UDFs roll the
+        # whole frame in one task. The NULL/NaN order-key contract
+        # still holds, checked in the task — behavior must not diverge
+        # on the input size or spark.sql.shuffle.partitions=1.
         if isinstance(func, str):
             return None
-        if n_parts > 1:
+        if not one_task:
             _warn_single_partition(
                 f"global rolling({window}) UDF",
                 "the plan can run its bounded build jobs (pre-build once "
@@ -2016,13 +2078,9 @@ def _range_bucket_build(
         return memo
     if strict_lazy(df.sparkSession):
         return None
-    bad = F.lit(False)
-    for c in order_cols:
-        bad = bad | F.col(c).isNull()
-        if isinstance(df.schema[c].dataType, (T.DoubleType, T.FloatType)):
-            bad = bad | F.isnan(F.col(c))
     (memo,), has_bad = range_boundaries(
-        df, order_cols[:1], n_buckets, micros=micros, bad=bad
+        df, order_cols[:1], n_buckets, micros=micros,
+        bad=_bad_order_key(df, order_cols),
     )
     if has_bad:
         raise ValueError(null_msg)
@@ -2061,20 +2119,17 @@ def _bucketed_expanding(
     build returns None (the single-partition window is correct and
     fully lazy). NULL/NaN order keys are rejected, as in halo rolling.
 
-    Returns None when the shape doesn't qualify.
+    Returns None when the input fits one task (``_memo.fits_one_task``:
+    one shuffle partition, or at most 1 MiB by the plan's
+    ``sizeInBytes``; the caller's unpartitioned window then runs with
+    no build job) or when the shape doesn't qualify.
     """
     spark = df.sparkSession
-    n_parts = shuffle_partitions(spark)
-    if n_parts <= 1 or not isinstance(df.schema[ord_col].dataType, _ORDERABLE):
+    if not isinstance(df.schema[ord_col].dataType, _ORDERABLE) or fits_one_task(df):
         return None
-    n_buckets = n_parts * 16
+    n_buckets = shuffle_partitions(spark) * 16
     memo = _range_bucket_build(
-        df, [ord_col], n_buckets,
-        null_msg=(
-            f"global expanding over order column {ord_col!r} with NULL or "
-            "NaN values is not supported: scan position is undefined for "
-            "them. Filter or fill those order keys first."
-        ),
+        df, [ord_col], n_buckets, null_msg=_expanding_null_msg([ord_col])
     )
     if memo is None:
         return None
@@ -2335,16 +2390,17 @@ def expanding_apply(
             )
             if out is not None:
                 return out
-            if shuffle_partitions(df.sparkSession) > 1:
+            if not fits_one_task(df):
                 _warn_single_partition(
                     f"global expanding {func!r}",
                     "the order column is numeric/date/timestamp and the "
                     "plan can run its bounded build jobs (pre-build once "
                     "outside strict-lazy scope)",
                 )
-        return df.withColumn(
-            output_col, _gated_builtin(df, col, func, spec, min_periods, win_args)
-        )
+        res = _gated_builtin(df, col, func, spec, min_periods, win_args)
+        if not partition_by:
+            res = _checked_order(df, order_by, _expanding_null_msg(order_by), res)
+        return df.withColumn(output_col, res)
 
     if partition_by:
         # collect_list over an expanding frame is O(n²) state per group;
@@ -2905,10 +2961,12 @@ def _carry_scan(
     bounded summary row per bucket (≤ 1024 collected, by
     construction) and the seed chain, memoized per plan+data and
     ``tag``. Execute: one ``applyInPandas`` keyed on the bucket id.
-    Two linear passes, parallel in the bucket count. With one shuffle
-    partition, or a cold build under strictLazy (warned
-    ``SINGLE-PARTITION``), ``single`` runs over the whole frame in one
-    task — exact and lazy.
+    Two linear passes, parallel in the bucket count. When the input
+    fits one task (``_memo.fits_one_task``: one shuffle partition, or
+    at most 1 MiB by the plan's ``sizeInBytes``) no build job runs, and
+    ``single`` runs over the whole frame in one task — exact and lazy;
+    so it does on a cold build under strictLazy, warned
+    ``SINGLE-PARTITION``.
     """
     spark = df.sparkSession
     ord_type = df.schema[ord_col].dataType
@@ -2917,10 +2975,9 @@ def _carry_scan(
             f"global ewm needs a numeric/timestamp order column, got "
             f"{ord_type.simpleString()}"
         )
-    n_parts = shuffle_partitions(spark)
     memo = None
-    if n_parts > 1:
-        n_buckets = max(2, min(1024, n_parts * 8))
+    if not fits_one_task(df):
+        n_buckets = max(2, min(1024, shuffle_partitions(spark) * 8))
         key = plan_data_key(df, *tag, ord_col, col, n_buckets)
         memo = _EWM_MEMO.get(key) if key is not None else None
         if memo is None:
@@ -2967,9 +3024,7 @@ def _carry_scan(
 
     seeds = memo["seeds"]
     bkt = fresh_column(df, "__bkt__")
-    out_schema = T.StructType(
-        [*df.schema.fields, T.StructField(output_col, T.DoubleType(), True)]
-    )
+    out_schema = _out_schema(df, T.StructField(output_col, T.DoubleType(), True))
     out_names = [f.name for f in out_schema.fields]
     in_names = [f.name for f in df.schema.fields]
 

@@ -350,10 +350,12 @@ WINDOW wo AS (ORDER BY event_id)
     "bucket-partitioned weighted slot machinery — triang(4) weights are "
     "the exact binary fractions [0.25, 0.75, 0.75, 0.25], so every "
     "slot product and partial sum is exact in double and the hash is "
-    "bit-stable vs the oracle's explicit lag arithmetic. Every "
-    "branch runs the bucket-partitioned global machinery — no "
-    "single-partition total order. All values cast to double so the "
-    "union is type-uniform across sums and interpolants.",
+    "bit-stable vs the oracle's explicit lag arithmetic. Above 1 MiB "
+    "of input every branch runs the bucket-partitioned global "
+    "machinery — no single-partition total order; a smaller input "
+    "runs each branch as one task with no build job. All values cast "
+    "to double so the union is type-uniform across sums and "
+    "interpolants.",
 )
 def rolling_scans_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (

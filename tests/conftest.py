@@ -146,3 +146,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def bucketed(monkeypatch):
+    """Route every global window over the bucketed plan — the plan
+    inputs above ``_memo.ONE_TASK_BYTES`` take — however small the
+    test's frame. It pins which plan runs and loosens no assertion:
+    tests of bucket boundaries, build-time errors, build jobs and
+    strictLazy warnings need frames of a few thousand rows, which would
+    otherwise run as one task."""
+    from pandarallel_spark.operators import _memo
+
+    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 0)

@@ -11,6 +11,10 @@ import pytest
 
 from pandarallel_spark import parallelize
 
+# global windows on these small frames run the bucketed plan that inputs
+# above _memo.ONE_TASK_BYTES take (conftest ``bucketed``)
+pytestmark = pytest.mark.usefixtures("bucketed")
+
 
 @pytest.fixture(scope="module")
 def pdf():

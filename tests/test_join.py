@@ -163,6 +163,7 @@ def global_trades_quotes():
 
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
 @pytest.mark.parametrize("exact", [True, False])
+@pytest.mark.usefixtures("bucketed")
 def test_asof_global_matches_pandas(spark, global_trades_quotes, direction, exact):
     """on=None (pd.merge_asof without by=) — the range-bucketed global
     path with cross-bucket carry rows must match pandas exactly."""
@@ -186,6 +187,7 @@ def test_asof_global_matches_pandas(spark, global_trades_quotes, direction, exac
     pd.testing.assert_series_equal(g["px"], e["px"], check_names=False)
 
 
+@pytest.mark.usefixtures("bucketed")
 def test_asof_global_tolerance(spark, global_trades_quotes):
     trades, quotes = global_trades_quotes
     expected = pd.merge_asof(trades, quotes, on="t", tolerance=40)
@@ -204,6 +206,7 @@ def test_asof_global_tolerance(spark, global_trades_quotes):
     pd.testing.assert_series_equal(g["px"], e["px"], check_names=False)
 
 
+@pytest.mark.usefixtures("bucketed")
 def test_asof_global_parallel_plan(spark, global_trades_quotes):
     """The global path must NOT be a single-partition window: the window
     partitions by the range-bucket id."""
@@ -219,6 +222,7 @@ def test_asof_global_parallel_plan(spark, global_trades_quotes):
     assert "__bkt__" in plan
 
 
+@pytest.mark.usefixtures("bucketed")
 def test_asof_global_null_ts_routing(spark):
     """NULL left timestamps → NULL match (never a window over Spark's
     nulls-first sort); NULL right timestamps never match anything."""

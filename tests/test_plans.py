@@ -9,6 +9,10 @@ import pytest
 
 from pandarallel_spark.workload import queries
 
+# global windows on these small frames run the bucketed plan that inputs
+# above _memo.ONE_TASK_BYTES take (conftest ``bucketed``)
+pytestmark = pytest.mark.usefixtures("bucketed")
+
 
 def _plan(spark, sf_dir, name):
     buf = io.StringIO()

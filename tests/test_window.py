@@ -7,6 +7,10 @@ import pytest
 
 from pandarallel_spark import parallelize
 
+# global windows on these small frames run the bucketed plan that inputs
+# above _memo.ONE_TASK_BYTES take (conftest ``bucketed``)
+pytestmark = pytest.mark.usefixtures("bucketed")
+
 
 @pytest.fixture(scope="module")
 def pdf():
@@ -2288,55 +2292,54 @@ def test_global_scan_keeps_user_column_named_like_bucket(spark, pdf, op):
 # ---------------------------------------------------------------------------
 
 _NULL_KEY_OPS = {
-    # op: (build(sdf, order), order columns, message fragment,
-    #      runs the one-task fallback at shuffle.partitions=1)
+    # op: (build(sdf, order), order columns, message fragment)
     "halo_builtin": (
         lambda W, d, o: W.rolling_apply(d, "x", 4, "mean", o, output_col="r"),
-        ["o"], "global rolling over order columns", False,
+        ["o"], "global rolling over order columns",
     ),
     "halo_udf": (
         lambda W, d, o: W.rolling_apply(
             d, "x", 4, lambda a: float(a.sum()), o, raw=True, output_col="r"
         ),
-        ["o"], "global rolling over order columns", True,
+        ["o"], "global rolling over order columns",
     ),
     "halo_second_col": (
         lambda W, d, o: W.rolling_apply(
             d, "x", 4, lambda a: float(a.sum()), o, raw=True, output_col="r"
         ),
-        ["o", "o2"], "global rolling over order columns", True,
+        ["o", "o2"], "global rolling over order columns",
     ),
     "expanding_sum": (
         lambda W, d, o: W.expanding_apply(d, "x", "sum", o, output_col="r"),
-        ["o"], "global expanding over order column", False,
+        ["o"], "global expanding over order column",
     ),
     "expanding_var": (
         lambda W, d, o: W.expanding_apply(d, "x", "var", o, output_col="r"),
-        ["o"], "global expanding over order column", False,
+        ["o"], "global expanding over order column",
     ),
     "time_rolling_builtin": (
         lambda W, d, o: W.rolling_apply(d, "x", "1h", "sum", o, output_col="r"),
-        ["ts"], "global time-offset rolling over order column", False,
+        ["ts"], "global time-offset rolling over order column",
     ),
     "time_rolling_udf": (
         lambda W, d, o: W.rolling_apply(d, "x", "1h", np.sum, o, output_col="r"),
-        ["ts"], "global time-offset rolling over order column", True,
+        ["ts"], "global time-offset rolling over order column",
     ),
     "ewm_mean": (
         lambda W, d, o: W.ewm_mean(d, "x", o, alpha=0.3, output_col="r"),
-        ["o"], "ewm over order column", True,
+        ["o"], "ewm over order column",
     ),
     "ewm_var": (
         lambda W, d, o: W.ewm_moment(d, "x", o, "var", alpha=0.3, output_col="r"),
-        ["o"], "ewm over order column", True,
+        ["o"], "ewm over order column",
     ),
     "ewm_sum": (
         lambda W, d, o: W.ewm_sum(d, "x", o, alpha=0.3, output_col="r"),
-        ["o"], "ewm over order column", True,
+        ["o"], "ewm over order column",
     ),
     "ewm_mean_times": (
         lambda W, d, o: W.ewm_mean_times(d, "x", o, "1h", output_col="r"),
-        ["ts"], "ewm times column", True,
+        ["ts"], "ewm times column",
     ),
 }
 
@@ -2366,28 +2369,24 @@ def _bad_key_frame(spark, bad_col: str, bad: str):
     "op,bad",
     [
         (op, bad)
-        for op, (_b, order, _m, _s) in _NULL_KEY_OPS.items()
+        for op, (_b, order, _m) in _NULL_KEY_OPS.items()
         for bad in (["null"] if order == ["ts"] else ["null", "nan"])
     ],
 )
 def test_range_bucket_window_rejects_null_or_nan_order_key(spark, op, bad):
     """Every global range-bucket window rejects a NULL order key (and
     NaN in a float one) with its own message: the bucketed plan at build
-    time, from the boundary aggregate's flag; the one-task fallback
-    (``_single_partition``, one shuffle partition) when it executes.
-    At one partition the builtins run Spark's own unpartitioned window
-    instead, which has no such check."""
+    time, from the boundary aggregate's flag; the one-task plan (one
+    shuffle partition) when it executes."""
     import re
 
     from pandarallel_spark.operators import window as W
 
-    build, order, msg, single = _NULL_KEY_OPS[op]
+    build, order, msg = _NULL_KEY_OPS[op]
     sdf = _bad_key_frame(spark, order[-1], bad)
     arg = order if len(order) > 1 else order[0]
     with pytest.raises(ValueError, match=re.escape(msg)):
         build(W, sdf, arg)
-    if not single:
-        return
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "1")
     try:
