@@ -6,20 +6,14 @@ local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 Methodology (r4, hardened r13): headline queries run min-of-2 with a
 System.gc() between, in one shared session (they are JVM-side plans;
 shared-session effects measured <±10% run-over-run); a query whose two
-draws disagree >1.5x gets a third and reports the min of all three,
-and a fixed driver-side CPU canary timed between queries stamps
-``contended`` into the record when a slow window (spread vs the run's
-median) or a uniformly slow run (median vs an absolute bar derived
-from the newest clean recorded anchor — ``canary_bar_source`` names
-it) shows up (r12's driver record was silently ~26% inflated by
-exactly that), or — r14 — when a PARALLEL canary (cpu_count()
-concurrent sha256 loops) runs slow relative to the single-thread one:
-host-level core oversubscription (steal) slows 32-wide Spark stages
-~3x while a single busy thread still schedules, which once produced a
-94 s contended=false record on a 33-36 s clean band; a query whose
-tiebreak draw still disagrees >1.5x is
-named in ``suspect_queries`` (bursts inside one query window are
-invisible to between-query canaries). The vs-pandas ratio section runs
+draws disagree >1.5x gets a third and reports the min of all three.
+Contention is measured, not guessed: ``/proc/stat`` is read around the
+headline window and around each query, and the record carries the host
+CPU shares stolen by the hypervisor (``host_steal_frac``) and busy
+(``host_busy_frac``). ``contended`` means headline-window steal above
+3 %; a query whose own window's steal is above 3 %, or whose warm draws
+still disagree >1.5x after the third draw, is named in
+``suspect_queries``. The vs-pandas ratio section runs
 each BASELINE.md workload in its OWN fresh-JVM subprocess: Python-UDF
 workloads measurably pollute reused Python workers for everything after
 them (applymap measured 0.85 s clean vs 1.6 s after a row-apply in the
@@ -38,6 +32,7 @@ import time
 
 from pandarallel_spark.session import get_spark
 from pandarallel_spark.workload import REGISTRY, queries
+from perfbench.probes import HostCpu
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -381,196 +376,53 @@ def _warm(spark, sf_dir: str) -> None:
     ).count()
 
 
-# driver-side contention canary (r13, the r12 verdict's "headline
-# draws have no contention guard" task): a fixed ~150-250 ms
-# single-thread CPU job (sha256 over a constant buffer) timed between
-# queries. Its absolute time is calibration-free noise; its SPREAD
-# within one run is the signal — on an idle box consecutive canaries
-# agree within a few %, while the contended r12 driver box ran 2-3×
-# slow for minutes at a time. The headline record can now self-report
-# that it is dirty instead of presenting phantom regressions as data.
-_CANARY_REPS = 40
-_CANARY_SPREAD_BAR = 2.0
-# absolute second trigger: a UNIFORMLY loaded run has no slow window
-# for the spread to catch (max/median ≈ 1 when every draw is equally
-# slow), so the median itself is checked against an absolute bar.
-# r14 (the r13 verdict's calibration finding): the fixed 0.45 s value
-# was ~3.7× this box's observed idle median (0.123-0.125 s across
-# every recorded run), so a uniform ~3× slowdown would have passed.
-# The bar is now DERIVED from the recorded history — 1.5× the newest
-# prior record's canary_median_sec anchor (BENCH_r*.json, preferring
-# records that were themselves clean) — and 0.45 s remains only the
-# no-history fallback. SPARK_GRAFT_CANARY_BAR (seconds) overrides both
-# for foreign hardware (ADVICE r13: on a slower box every record would
-# otherwise flag, on a faster one uniform load could hide).
-_CANARY_MEDIAN_BAR_FALLBACK_SEC = 0.45
-_CANARY_ANCHOR_FACTOR = 1.5
+# a window whose host CPU steal exceeds this share is contended: the
+# threshold perfbench/LAYERS.md uses to count a contended pass
+STEAL_BAR = 0.03
 
 
-def _canary_median_bar() -> tuple[float, str]:
-    """(bar_seconds, source) — env override, else 1.5× the MINIMUM
-    recorded clean anchor, else the absolute fallback. Minimum, not
-    newest (r15, the r14 verdict's ratchet finding): a record that was
-    mildly contaminated yet passed the then-current bar would, as the
-    newest anchor, LOOSEN the detector that should have caught it;
-    the minimum across clean records only ever ratchets tighter. The
-    source string is recorded next to the verdict so every record
-    names what its contended flag was judged against."""
-    env = os.environ.get("SPARK_GRAFT_CANARY_BAR")
-    if env:
-        return float(env), "env:SPARK_GRAFT_CANARY_BAR"
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best: tuple[float, str] | None = None
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        try:
-            with open(path) as fh:
-                rec = json.load(fh)
-            # driver records may nest the parsed summary
-            if "canary_median_sec" not in rec and isinstance(
-                rec.get("parsed"), dict
-            ):
-                rec = rec["parsed"]
-            anchor = rec.get("canary_median_sec")
-            if anchor is None or rec.get("contended") is not False:
-                continue
-            if best is None or float(anchor) < best[0]:
-                best = (float(anchor), os.path.basename(path))
-        except (OSError, ValueError, KeyError, json.JSONDecodeError):
-            continue
-    if best is not None:
-        return (
-            round(_CANARY_ANCHOR_FACTOR * best[0], 4),
-            f"anchor:min-clean:{best[1]} x{_CANARY_ANCHOR_FACTOR}",
-        )
-    return _CANARY_MEDIAN_BAR_FALLBACK_SEC, "fallback:absolute"
-
-
-def _canary_draw(buf: bytes = b"\xa5" * (4 << 20)) -> float:
-    import hashlib
-
-    t0 = time.perf_counter()
-    h = hashlib.sha256()
-    for _ in range(_CANARY_REPS):
-        h.update(buf)
-    h.digest()
-    return round(time.perf_counter() - t0, 4)
-
-
-# r14 (second measurement gap, found the hard way): the single-thread
-# canary CANNOT see host-level core oversubscription. A run on this box
-# read 94 s total (clean band 33-36 s) with every query uniformly ~3×
-# slow, yet contended=false — /proc/stat showed steal time ≈ user time:
-# the virtualized host was overcommitted, which slows 32-wide Spark
-# stages ~3× while a single busy thread still gets scheduled almost
-# normally (canary median 0.178 s vs the 0.187 s bar). The fix is a
-# PARALLEL canary: os.cpu_count() threads each doing the same sha256
-# loop (hashlib releases the GIL on large buffers, so threads occupy
-# real cores). On healthy hardware wall-clock ≈ the single-thread draw
-# (ratio ~1-1.5 with SMT); under host steal the ratio tracks the
-# oversubscription factor. Flagged against 1.5× the newest clean
-# recorded ``canary_mt_ratio`` anchor (same derivation as the median
-# bar), fallback 2.5 when no record carries the field yet, env
-# override SPARK_GRAFT_CANARY_MT_BAR.
-_CANARY_MT_RATIO_BAR_FALLBACK = 2.5
-# r15 (the r14 verdict's ratchet finding): BENCH_r14's 32-core record
-# carried canary_mt_ratio 2.09 — elevated by host steal, passed only
-# via the 2.5 no-history fallback — and as the NEWEST clean anchor it
-# would have set the next bar to 3.14: a mildly-stolen record LOOSENING
-# the detector built to catch it. The anchor is now the MINIMUM across
-# clean records, and additionally clamped into [1.0, 1.3] before the
-# 1.5× factor (healthy band on real hardware is ~1-1.5 incl. SMT), so
-# the bar lives in [1.5, 1.95] once any clean record exists — r14's
-# 2.09 record flags against it.
-_CANARY_MT_ANCHOR_CLAMP = (1.0, 1.3)
-
-
-def _canary_mt_bar() -> tuple[float, str]:
-    env = os.environ.get("SPARK_GRAFT_CANARY_MT_BAR")
-    if env:
-        return float(env), "env:SPARK_GRAFT_CANARY_MT_BAR"
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best: tuple[float, str] | None = None
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        try:
-            with open(path) as fh:
-                rec = json.load(fh)
-            if "canary_mt_ratio" not in rec and isinstance(
-                rec.get("parsed"), dict
-            ):
-                rec = rec["parsed"]
-            anchor = rec.get("canary_mt_ratio")
-            if anchor is None or rec.get("contended") is not False:
-                continue
-            if best is None or float(anchor) < best[0]:
-                best = (float(anchor), os.path.basename(path))
-        except (OSError, ValueError, KeyError, json.JSONDecodeError):
-            continue
-    if best is not None:
-        lo, hi = _CANARY_MT_ANCHOR_CLAMP
-        anchor = min(max(best[0], lo), hi)
-        return (
-            round(_CANARY_ANCHOR_FACTOR * anchor, 4),
-            f"anchor:min-clean:{best[1]} clamp[{lo},{hi}] "
-            f"x{_CANARY_ANCHOR_FACTOR}",
-        )
-    return _CANARY_MT_RATIO_BAR_FALLBACK, "fallback:absolute"
-
-
-def _canary_draw_mt(buf: bytes = b"\xa5" * (4 << 20)) -> float:
-    """Wall-clock of ``os.cpu_count()`` concurrent single-draw-sized
-    sha256 loops. Thread count follows the BOX (not SPARK_GRAFT_CPUS):
-    the question is whether the hardware can deliver its cores, which
-    is independent of how many Spark asks for."""
-    import hashlib
-    from concurrent.futures import ThreadPoolExecutor
-
-    n = os.cpu_count() or 1
-
-    def one(_i: int) -> None:
-        h = hashlib.sha256()
-        for _ in range(_CANARY_REPS):
-            h.update(buf)
-        h.digest()
-
-    t0 = time.perf_counter()
-    with ThreadPoolExecutor(max_workers=n) as ex:
-        list(ex.map(one, range(n)))
-    return round(time.perf_counter() - t0, 4)
+def _host_window(before: list[int], after: list[int]) -> dict[str, float]:
+    """Host steal and busy shares of all CPU time between two
+    ``/proc/stat`` readings."""
+    f = HostCpu.fractions(before, after)
+    return {
+        "host_steal_frac": round(f["host.steal_frac"], 4),
+        "host_busy_frac": round(f["host.busy_frac"], 4),
+    }
 
 
 def _time_queries(
     spark, qs, names: list[str], sf_dir: str
 ) -> tuple[
-    dict[str, float], dict[str, list[float]], dict[str, list[float]], list[str]
+    dict[str, float], dict[str, list[float]], dict[str, dict[str, float]],
+    dict[str, float], list[str],
 ]:
-    # min-of-2 with a GC between queries: single cold runs of the
-    # heavier queries swing 2-4× run-over-run on this box (JVM old-gen
-    # debt + codegen compilation landing on whichever query is unlucky),
-    # which made round-over-round comparisons meaningless (r3 verdict
-    # "uniform drift"). The first run still pays plan build + codegen;
-    # the second is steady-state; min reports the query, not its luck.
-    # r13: when the two draws disagree >1.5× the query gets a THIRD
-    # draw and reports the MIN of all three — one unlucky draw (GC
-    # pause, a contention burst landing inside the window) no longer
-    # decides anything by itself, and min stays comparable with every
-    # prior round's min-based record. Min, not median: a draw can be
-    # spuriously SLOW but never spuriously fast, so median-of-3 only
-    # adds upward bias — measured +26-38% on queries whose first draw
-    # legitimately pays plan build (review finding r13); uniform
-    # slowdown across all draws is the canary's job to flag, not a
-    # statistic's to hide.
+    """(min seconds, draws, host window, headline host window, suspects)
+    per query.
+
+    min-of-2 with a GC between queries: single cold runs of the heavier
+    queries swing 2-4x run-over-run (JVM old-gen debt + codegen
+    compilation landing on whichever query is unlucky), which made
+    round-over-round comparisons meaningless (r3 verdict "uniform
+    drift"). The first run still pays plan build + codegen; the second
+    is steady-state; min reports the query, not its luck. When the two
+    draws disagree >1.5x the query gets a THIRD draw and reports the MIN
+    of all three, so one unlucky draw (GC pause, a contention burst)
+    decides nothing by itself and min stays comparable with every prior
+    round's record. Min, not median: a draw can be spuriously SLOW but
+    never spuriously fast, so median-of-3 only adds upward bias —
+    measured +26-38% on queries whose first draw legitimately pays plan
+    build (review finding r13).
+
+    ``/proc/stat`` is read around every query and around the whole
+    headline window. A query is suspect when its own window's host steal
+    exceeds ``STEAL_BAR``, or when its two warm draws still disagree
+    >1.5x after the third draw."""
     timings: dict[str, float] = {}
     query_bands: dict[str, list[float]] = {}
+    host: dict[str, dict[str, float]] = {}
     suspects: list[str] = []
-    # warm draws (index 0): page the buffer / spawn the thread pool once
-    canary_draws: dict[str, list[float]] = {
-        "st": [_canary_draw()],
-        "mt": [_canary_draw_mt()],
-    }
+    start = HostCpu.read()
     for name in names:
         # drop the PREVIOUS query's persisted intermediates (several
         # dedup/similarity plans persist candidate sets): accumulated
@@ -579,6 +431,7 @@ def _time_queries(
         # on dedup_minhash_lsh. Within a query's two draws caches stay,
         # matching steady-state reuse.
         spark.catalog.clearCache()
+        before = HostCpu.read()
         draws = []
         for _ in range(2):
             spark.sparkContext._jvm.System.gc()
@@ -586,60 +439,21 @@ def _time_queries(
             df = qs[name](spark, sf_dir)
             df.count()
             draws.append(round(time.perf_counter() - t0, 4))
+        # the cold first draw is left out of the tiebreak: it
+        # legitimately pays plan build + codegen
+        warm_split = False
         if max(draws) > 1.5 * min(draws):
             spark.sparkContext._jvm.System.gc()
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).count()
             draws.append(round(time.perf_counter() - t0, 4))
-            if max(draws[1:]) > 1.5 * min(draws[1:]):
-                # the two WARM draws disagree: something moved INSIDE
-                # this query's windows (which the between-query canary
-                # cannot see — ADVICE r13); the min is still reported
-                # but the query is named suspect. The cold first draw
-                # is excluded — it legitimately pays plan build +
-                # codegen and would name half the sf0.01 battery
-                suspects.append(name)
+            warm_split = max(draws[1:]) > 1.5 * min(draws[1:])
+        host[name] = _host_window(before, HostCpu.read())
+        if warm_split or host[name]["host_steal_frac"] > STEAL_BAR:
+            suspects.append(name)
         timings[name] = min(draws)
         query_bands[name] = draws
-        canary_draws["st"].append(_canary_draw())
-        canary_draws["mt"].append(_canary_draw_mt())
-    return timings, query_bands, canary_draws, suspects
-
-
-def _canary_verdict(
-    canary_draws: dict[str, list[float]],
-    median_bar_sec: float,
-    mt_ratio_bar: float,
-) -> tuple[bool, float, float, float]:
-    """(contended, spread, mt_ratio, mt_median) over the post-warm-up
-    draws — index 0 is the page-in/branch-warm draw and would inflate
-    the spread into false positives on a genuinely idle box. Spread =
-    max/MEDIAN, not max/min: the signal is a SLOW window against the
-    run's robust center; one anomalously fast draw (brief CPU turbo)
-    must not stamp a clean record dirty (review finding r13). Three
-    triggers: a slow window (spread), a uniformly slow single thread
-    (median vs the anchored absolute bar), and — r14 — a box that
-    cannot deliver its CORES (mt_ratio = parallel canary median /
-    single canary median vs its anchored bar): host-level CPU steal
-    slows 32-wide Spark stages by the oversubscription factor while a
-    single busy thread still schedules, which produced a 94 s
-    contended=false record on this box (clean band 33-36 s). Sampling
-    limitation (ADVICE r13): canaries run BETWEEN queries, so a burst
-    fully contained inside one query's window can leave every canary
-    clean — contended=false is necessary, not sufficient; the
-    per-query suspect list (3rd draw still >1.5× off) covers that
-    gap."""
-    live = canary_draws["st"][1:] or canary_draws["st"]
-    med = float(statistics.median(live))
-    spread = round(max(live) / max(med, 1e-9), 2)
-    live_mt = canary_draws["mt"][1:] or canary_draws["mt"]
-    med_mt = float(statistics.median(live_mt))
-    mt_ratio = round(med_mt / max(med, 1e-9), 2)
-    return (
-        spread > _CANARY_SPREAD_BAR
-        or med > median_bar_sec
-        or mt_ratio > mt_ratio_bar
-    ), spread, mt_ratio, round(med_mt, 4)
+    return timings, query_bands, host, _host_window(start, HostCpu.read()), suspects
 
 
 # per-kind attribution for the heavy kind-tagged family rows (r12, the
@@ -706,9 +520,9 @@ def _ramp_main() -> None:
     big = os.environ.get("SPARK_GRAFT_RAMP_BIG", "/root/testdata/sf0.1")
     spark = get_spark("pandarallel_spark_bench_ramp")
     _warm(spark, small)
-    t_small, _, _, _ = _time_queries(spark, qs, names, small)
+    t_small = _time_queries(spark, qs, names, small)[0]
     _warm(spark, big)
-    t_big, _, _, _ = _time_queries(spark, qs, names, big)
+    t_big = _time_queries(spark, qs, names, big)[0]
     table = {}
     violations = []
     for n in names:
@@ -749,6 +563,31 @@ def _ramp_main() -> None:
         raise SystemExit(1)
 
 
+def _summary(
+    sf_dir: str,
+    timings: dict[str, float],
+    headline: dict[str, float],
+    suspects: list[str],
+    ratios: dict,
+) -> dict:
+    """The one-line stdout record. ``contended`` means the host stole
+    more than ``STEAL_BAR`` of all CPU time over the headline window:
+    treat per-query deltas in such a record as suspect and rerun when
+    the host is quiet (steal slows a parallel stage far more than its
+    share)."""
+    return {
+        "metric": "headline_queries_total",
+        "value": round(sum(timings.values()), 4),
+        "unit": "sec",
+        "queries": {k: round(v, 2) for k, v in timings.items()},
+        "sf": float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]),
+        "contended": headline["host_steal_frac"] > STEAL_BAR,
+        **headline,
+        "suspect_queries": suspects,
+        "vs_pandas_speedup": ratios,
+    }
+
+
 def main() -> None:
     mode = os.environ.get("SPARK_GRAFT_BENCH_MODE", "")
     if mode.startswith("ratio:"):
@@ -764,15 +603,10 @@ def main() -> None:
     names = [n for n in HEADLINE if n in qs] or sorted(qs)
     spark = get_spark("pandarallel_spark_bench")
     _warm(spark, SF_DIR)
-    timings, query_bands, canary_draws, suspects = _time_queries(
+    timings, query_bands, host, headline, suspects = _time_queries(
         spark, qs, names, SF_DIR
     )
     kind_split = _time_kind_splits(spark, qs, SF_DIR)
-    canary_bar, canary_bar_source = _canary_median_bar()
-    canary_mt_bar, canary_mt_bar_source = _canary_mt_bar()
-    contended, canary_spread, canary_mt_ratio, canary_mt_median = (
-        _canary_verdict(canary_draws, canary_bar, canary_mt_bar)
-    )
 
     ratios: dict[str, float] = {}
     ratio_bands: dict[str, dict] = {}
@@ -797,46 +631,7 @@ def main() -> None:
                 ratios[name] = None
                 ratios[f"{name}_error"] = (proc.stderr or proc.stdout)[-300:]
 
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    summary = {
-        "metric": "headline_queries_total",
-        "value": round(sum(timings.values()), 4),
-        "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        "sf": float(sf),
-        # r13 contention sentinel: spread of a fixed driver-side CPU
-        # canary timed between queries. contended=true means the box
-        # ran ≥2× slower at some point during the headline window —
-        # treat per-query deltas in THIS record as suspect and rerun
-        # idle (r12's driver record was ~26% inflated with no way to
-        # tell from the record itself).
-        "contended": contended,
-        "canary_spread": canary_spread,
-        # absolute anchor: cross-round comparison catches uniform
-        # slowness the within-run spread can't see
-        "canary_median_sec": round(
-            float(
-                statistics.median(canary_draws["st"][1:] or canary_draws["st"])
-            ),
-            4,
-        ),
-        # r14: the absolute bar the median was judged against names its
-        # own source (env override / recorded-anchor×1.5 / fallback)
-        "canary_bar_sec": canary_bar,
-        "canary_bar_source": canary_bar_source,
-        # r14 parallel canary: median wall of cpu_count() concurrent
-        # single-draw sha256 loops / the single-thread median. ~1 on
-        # healthy hardware (≤ ~1.5 with SMT); rises with host core
-        # oversubscription, which the single-thread canary cannot see
-        "canary_mt_ratio": canary_mt_ratio,
-        "canary_mt_median_sec": canary_mt_median,
-        "canary_mt_bar": canary_mt_bar,
-        "canary_mt_bar_source": canary_mt_bar_source,
-        # queries whose tiebreak draw STILL disagreed >1.5× — movement
-        # inside the query window the between-query canary cannot see
-        "suspect_queries": suspects,
-        "vs_pandas_speedup": ratios,
-    }
+    summary = _summary(SF_DIR, timings, headline, suspects, ratios)
     # Full record (variance bands, methodology, exact timings) goes to a
     # FILE — r6's single fat JSON line outgrew the driver's stdout-tail
     # capture and the round's headline total was lost (BENCH_r06.json
@@ -854,29 +649,19 @@ def main() -> None:
         ),
         variance={
             "query_draws_sec": query_bands,
-            "canary_draws_sec": canary_draws["st"],
-            "canary_mt_draws_sec": canary_draws["mt"],
             "ratio_draws_sec": ratio_bands,
         },
+        host_by_query=host,
         methodology=(
             "headline: min-of-2 per query (build+count), System.gc() "
             "between, one shared session; a 3rd draw (still min) when "
-            "the first two disagree >1.5x (still >1.5x after 3 draws "
-            "-> suspect_queries); contended = a fixed driver-side "
-            "sha256 canary timed between queries, flagged on spread "
-            ">2x vs the run median (slow window) OR median > "
-            "canary_bar_sec (uniform load; bar = 1.5x the newest clean "
-            "recorded anchor, SPARK_GRAFT_CANARY_BAR override, 0.45s "
-            "no-history fallback — see canary_bar_source) OR "
-            "canary_mt_ratio > canary_mt_bar (r14: cpu_count() "
-            "concurrent sha256 loops vs one — host core "
-            "oversubscription/steal slows parallel stages while a "
-            "single busy thread still schedules; bar = 1.5x the newest "
-            "clean recorded canary_mt_ratio anchor, "
-            "SPARK_GRAFT_CANARY_MT_BAR override, 2.5 no-history "
-            "fallback). Canaries "
-            "sample BETWEEN queries only: a burst contained inside one "
-            "query window shows up in suspect_queries, not contended. "
+            "the first two disagree >1.5x. host_steal_frac / "
+            "host_busy_frac: shares of all host CPU time from /proc/stat "
+            "deltas over the headline window, and per query over its "
+            "draws (host_by_query); contended = headline steal > "
+            f"{STEAL_BAR}; suspect_queries = queries whose own window's "
+            f"steal > {STEAL_BAR}, or whose warm draws still disagree "
+            ">1.5x after the 3rd draw. "
             "ratios: one fresh-JVM "
             "process per workload (reference forks a fresh pool per "
             "call; reused-worker pollution measured 2x on applymap), "

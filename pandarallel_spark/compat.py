@@ -43,6 +43,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
+from pandarallel_spark.session import _patch_worker_zipimport
+
 _LOCAL_THRESHOLD = 64
 _SPARK: SparkSession | None = None
 _PROGRESS = False
@@ -169,6 +171,7 @@ def _row_apply(pdf: pd.DataFrame, func, args, kwargs):
     in_names = list(pdf.columns)
 
     def run(batches):
+        _patch_worker_zipimport()
         for b in batches:
             res = b[in_names].apply(func, *args, axis=1, **kwargs)
             out = res if frame_out else res.to_frame("__r__")
@@ -233,6 +236,7 @@ def _col_apply(pdf: pd.DataFrame, func, args, kwargs):
         ship_scalar = unified.to_numpy().dtype
 
         def per_col(key, b):
+            _patch_worker_zipimport()
             s = (
                 b.sort_values(_POS)[_VAL]
                 .reset_index(drop=True)
@@ -262,6 +266,7 @@ def _col_apply(pdf: pd.DataFrame, func, args, kwargs):
     ship_dtype = unified.to_numpy().dtype
 
     def per_col_t(key, b):
+        _patch_worker_zipimport()
         b = b.sort_values(_POS)
         s = (
             b[_VAL].reset_index(drop=True)
@@ -314,6 +319,7 @@ def _df_parallel_applymap(self: pd.DataFrame, func, na_action=None, **kwargs):
     schema = _infer_ddl(sample, extra={_IDX: self.index, _POS: None})
 
     def run(batches):
+        _patch_worker_zipimport()
         for b in batches:
             out = b[in_names].map(func, na_action=na_action, **kwargs)
             out[_IDX] = b[_IDX].to_numpy()
@@ -340,6 +346,7 @@ def _series_parallel_apply(self: pd.Series, func, *args, **kwargs):
     schema = f"__r__ {_ddl_type(sample)}, {_IDX} {_ddl_of_index(self.index)}, {_POS} bigint"
 
     def run(batches):
+        _patch_worker_zipimport()
         for b in batches:
             yield pd.DataFrame(
                 {

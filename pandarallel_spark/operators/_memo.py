@@ -21,8 +21,11 @@ Two rules, both learned from review findings:
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from functools import lru_cache
 
 from pyspark.sql import DataFrame
+
+from pandarallel_spark.session import _patch_worker_zipimport
 
 STRICT_LAZY_CONF = "spark.pandarallel_spark.strictLazy"
 
@@ -223,6 +226,48 @@ def bucket_partitioned(df: DataFrame, bucket: str) -> DataFrame:
     return df.repartition(shuffle_partitions(df.sparkSession), F.col(bucket))
 
 
+_M32 = 0xFFFFFFFF
+
+
+def _murmur3_long(v: int, seed: int = 42) -> int:
+    """Spark's ``Murmur3_x86_32.hashLong(v, seed)`` as a signed int:
+    ``F.hash`` of a bigint, and the hash that places a row of
+    ``repartition(n, col)`` on partition ``pmod(hash, n)``."""
+
+    def mix(h: int, k: int) -> int:
+        k = (k * 0xCC9E2D51) & _M32
+        k = ((k << 15) | (k >> 17)) & _M32
+        h ^= (k * 0x1B873593) & _M32
+        h = ((h << 13) | (h >> 19)) & _M32
+        return (h * 5 + 0xE6546B64) & _M32
+
+    v &= (1 << 64) - 1
+    h = mix(mix(seed, v & _M32), v >> 32) ^ 8
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & _M32
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@lru_cache(maxsize=64)
+def placed_bucket_ids(n_buckets: int, n_parts: int) -> tuple[int, ...]:
+    """Bucket id of each coarse bucket ``b`` in ``range(n_buckets)``:
+    the smallest distinct ids that ``repartition(n_parts, id)`` places
+    on partition ``b % n_parts``, so every partition holds the same
+    number of buckets, ±1. Hashing the raw ``b`` instead lets Murmur3
+    pile buckets up: on 4 partitions, ids 0-15 land 6/6/1/3."""
+    need = [n_buckets // n_parts + (p < n_buckets % n_parts) for p in range(n_parts)]
+    placed: list[list[int]] = [[] for _ in range(n_parts)]
+    left, v = n_buckets, 0
+    while left:
+        p = _murmur3_long(v) % n_parts
+        if len(placed[p]) < need[p]:
+            placed[p].append(v)
+            left -= 1
+        v += 1
+    return tuple(placed[b % n_parts][b // n_parts] for b in range(n_buckets))
+
+
 def bucketed_apply(
     df: DataFrame,
     func: Callable,
@@ -238,16 +283,26 @@ def bucketed_apply(
     ``bucket`` names a bucket-id column of ``df`` (range buckets);
     ``func`` sees it. Otherwise the bucket is a coarse hash of the
     ``keys`` columns — ``pmod(xxhash64(keys), n)`` with ``n`` =
-    ``n_buckets`` or ``coarse_group_count`` (read at call time) — in a
-    fresh temporary column that ``func`` never sees. Rows sharing
-    ``keys`` always share a bucket, so ``func`` loops its real groups."""
+    ``n_buckets`` or ``coarse_group_count`` (read at call time), mapped
+    through ``placed_bucket_ids`` so the stage's tasks get equal bucket
+    counts — in a fresh temporary column that ``func`` never sees. Rows
+    sharing ``keys`` always share a bucket, so ``func`` loops its real
+    groups."""
     if bucket is not None:
-        return bucket_partitioned(df, bucket).groupBy(bucket).applyInPandas(func, schema)
+
+        def run(pdf):
+            _patch_worker_zipimport()
+            return func(pdf)
+
+        return bucket_partitioned(df, bucket).groupBy(bucket).applyInPandas(run, schema)
     from pyspark.sql import functions as F
 
     n = coarse_group_count(df.sparkSession) if n_buckets is None else n_buckets
+    ids = placed_bucket_ids(int(n), shuffle_partitions(df.sparkSession))
+    placed = F.expr(f"array({', '.join(f'{i}L' for i in ids)})")
     bkt = fresh_column(df, "__bkt__")
-    hashed = df.withColumn(bkt, F.pmod(F.xxhash64(*keys), F.lit(int(n))))
+    coarse = F.pmod(F.xxhash64(*keys), F.lit(int(n))).cast("int")
+    hashed = df.withColumn(bkt, F.element_at(placed, coarse + 1))
     return bucketed_apply(
         hashed, lambda pdf: func(pdf.drop(columns=bkt)), schema, bucket=bkt
     )

@@ -35,6 +35,7 @@ from pandarallel_spark.plans.schema import (
     infer_schema_from_pandas,
     pandas_dtype_to_spark,
 )
+from pandarallel_spark.session import _patch_worker_zipimport
 
 _SAMPLE_ROWS = 100
 
@@ -149,6 +150,7 @@ def apply_rows(
         return None if vecf is None else pd.Series(vecf, index=pdf.index)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _patch_worker_zipimport()
         fallback = not vectorize  # sticky: one rejection stops retrying
         for pdf in batches:
             if pdf.empty:
@@ -326,6 +328,10 @@ def apply_columns(
         else:
             elementwise = False
 
+    def per_column(s):
+        _patch_worker_zipimport()
+        return func(s)
+
     if elementwise:
         out_cols = []
         for c in columns:
@@ -333,7 +339,7 @@ def apply_columns(
             out_t = pandas_dtype_to_spark(
                 res.dtype, res.dropna().iloc[0] if len(res.dropna()) else None
             )
-            udf = F.pandas_udf(lambda s, _f=func: _f(s), returnType=out_t)
+            udf = F.pandas_udf(per_column, returnType=out_t)
             out_cols.append(udf(F.col(c)).alias(c))
         return df.select(*out_cols)
 
@@ -346,7 +352,7 @@ def apply_columns(
             val = _probe(c) if len(sample) else None
             out_t = pandas_dtype_to_spark(getattr(val, "dtype", type(val)), val)
         udf = F.pandas_udf(
-            lambda s, _f=func: _f(s), returnType=out_t, functionType=F.PandasUDFType.GROUPED_AGG
+            per_column, returnType=out_t, functionType=F.PandasUDFType.GROUPED_AGG
         )
         agg_cols.append(udf(F.col(c)).alias(c))
     return df.agg(*agg_cols)
@@ -392,6 +398,7 @@ def applymap(
     ineligible_cols = {n for n, (elig, _) in _fpt.items() if not elig}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _patch_worker_zipimport()
         from pandarallel_spark.operators._vectorize import validated_vectorized
 
         fallback = {c: not vectorize for c in columns}  # sticky per column

@@ -54,6 +54,7 @@ from pandarallel_spark.operators._memo import (
 )
 from pandarallel_spark.operators.text import BPE_PATTERN as _RAW_PATTERN
 from pandarallel_spark.operators.text import bpe_tokens
+from pandarallel_spark.session import _patch_worker_zipimport
 
 END_OF_WORD = "</w>"
 
@@ -318,6 +319,7 @@ def bpe_encode(
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _encode(words: pd.Series) -> pd.Series:
+        _patch_worker_zipimport()
         # ws arrives as a numpy array (Arrow), whose truthiness is
         # ambiguous — test None explicitly
         return words.apply(

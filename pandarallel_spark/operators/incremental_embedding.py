@@ -76,6 +76,7 @@ from pandarallel_spark.operators.similarity import (
     _require_integral_ids,
     plane_ints,
 )
+from pandarallel_spark.session import _patch_worker_zipimport
 
 _EMB_META_COLS = ("__idx_dim__", "__idx_planes__", "__idx_seed__")
 _SIG_SCHEMA = (
@@ -107,6 +108,7 @@ def _vec_signatures(
     n_words = (planes + 63) // 64
 
     def sig_batches(batches):
+        _patch_worker_zipimport()
         for pdf in batches:
             if pdf.empty:
                 continue

@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pandarallel_spark.session import _patch_worker_zipimport
+
 MEDIA_SCHEMA = (
     "media_id bigint, media_type string, content binary, "
     "meta struct<orig_width:int, orig_height:int, n_bytes:bigint>"
@@ -1449,6 +1451,7 @@ def image_hashes(
     passthrough = list(passthrough or [])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _patch_worker_zipimport()
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -1517,6 +1520,7 @@ def decode_features(
     passthrough = list(passthrough or [])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _patch_worker_zipimport()
         for pdf in batches:
             if pdf.empty:
                 continue

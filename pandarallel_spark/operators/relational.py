@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pandarallel_spark.operators._memo import truncate_lineage
+from pandarallel_spark.session import _patch_worker_zipimport
 
 
 def _key_restore(orig_type, src_name: str, out_name: str) -> Column:
@@ -427,6 +428,7 @@ def heavy_hitters(
     )
 
     def mg_partition(pdf_iter):
+        _patch_worker_zipimport()
         counts = pd.Series(dtype="int64")
         decr = 0
         nrows = 0
@@ -627,6 +629,7 @@ def grouped_heavy_hitters(
     ).filter(F.col("__g__").isNotNull() & F.col("__k__").isNotNull())
 
     def mg_partition(pdf_iter):
+        _patch_worker_zipimport()
         counts = None  # lazily a MultiIndex (group, key) → count Series
         gcounts = pd.Series(dtype="int64")  # exact per-group row counts
         decr = 0

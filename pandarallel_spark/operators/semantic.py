@@ -31,6 +31,7 @@ from pandarallel_spark.operators.similarity import (
     _infer_dim,
     _require_integral_ids,
 )
+from pandarallel_spark.session import _patch_worker_zipimport
 
 
 def _train_centers(
@@ -107,6 +108,7 @@ def prototype_scores(
     )
 
     def score_batches(batches):
+        _patch_worker_zipimport()
         for pdf in batches:
             if pdf.empty:
                 continue

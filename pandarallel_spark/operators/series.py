@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pandarallel_spark.plans.schema import pandas_dtype_to_spark
+from pandarallel_spark.session import _patch_worker_zipimport
 
 # above this many entries a literal create_map stops being sensible plan-side;
 # switch to a broadcast-join against a real (distributed-planner-visible) table
@@ -97,6 +98,7 @@ def series_apply(
     state = {"fallback": not vectorize}  # sticky across batches per worker
 
     def batch_fn(s: pd.Series) -> pd.Series:
+        _patch_worker_zipimport()
         if len(s) == 0:  # don't let an empty batch decide anything
             return s.apply(func, args=args, **kwargs)
         res = None

@@ -38,6 +38,7 @@ from pandarallel_spark.operators._memo import (
     memo_put,
     plan_data_key,
 )
+from pandarallel_spark.session import _patch_worker_zipimport
 
 # vector-width inference memo: plan_data_key(df, vec_col) → int
 _DIM_MEMO: dict = {}
@@ -204,6 +205,7 @@ def topk_numpy(
     )  # (nq, dim)
 
     def score_batches(batches):
+        _patch_worker_zipimport()
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -347,6 +349,7 @@ def cosine_pairs_lsh(
     pw = (1 << np.arange(r)).astype("int64")
 
     def sig_batches(batches):
+        _patch_worker_zipimport()
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -644,6 +647,7 @@ def _ivf_kmeans_refine(
         cb_i = _np_quant(raw)  # closure snapshot: int grid, exact argmax
 
         def partials(batches, cb_i=cb_i):
+            _patch_worker_zipimport()
             sums = np.zeros((n_cent, dim), dtype="int64")
             cnts = np.zeros(n_cent, dtype="int64")
             low: tuple | None = None  # (best_dot, vec-tuple): lexicographic min
@@ -736,6 +740,7 @@ def _ivf_assign(
     assignments cannot drift."""
 
     def assign_batches(batches):
+        _patch_worker_zipimport()
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -1451,6 +1456,7 @@ def pq_list_stats(lists: DataFrame, meta: DataFrame) -> DataFrame:
     src = lists.select("__cvec__", "__cid__", "__codes__")
 
     def partials(batches):
+        _patch_worker_zipimport()
         cnts = np.zeros(n_cent, dtype="int64")
         errs = np.zeros(n_cent, dtype="int64")
         seen = False
@@ -1899,6 +1905,7 @@ def _pq_kmeans_dist_codebooks(
         cb_b = cb.copy()  # closure snapshot for this round
 
         def partials(batches, cb_b=cb_b):
+            _patch_worker_zipimport()
             sums = np.zeros((m, n_codes, sub), dtype="int64")
             cnts = np.zeros((m, n_codes), dtype="int64")
             far_d = np.full(m, -1, dtype="int64")
@@ -2166,6 +2173,7 @@ def _pq_encode(
     m, n_codes, sub = cb.shape
 
     def encode_batches(batches):
+        _patch_worker_zipimport()
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -2361,6 +2369,7 @@ def lsh_bucketed_topk(
     vec_type = dict(corpus.dtypes)[vec_col]
 
     def sign_batches(batches):
+        _patch_worker_zipimport()
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -2468,6 +2477,7 @@ def random_projection(
     ) + f", `{output_col}` array<float>"
 
     def project(batches):
+        _patch_worker_zipimport()
         for pdf in batches:
             if pdf.empty:
                 continue

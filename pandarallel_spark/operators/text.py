@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pandarallel_spark.session import _patch_worker_zipimport
+
 # Small, fixed marker-token profiles per language. A real language-id
 # model would be a character-n-gram classifier; the engine-level contract
 # (deterministic, expression-only, argmax over per-language scores) is
@@ -625,6 +627,7 @@ def normalize_text(
     names = [f.name for f in df.schema.fields] + [output_col]
 
     def unicode_pass(batches):
+        _patch_worker_zipimport()
         for pdf in batches:
             if pdf.empty:
                 continue

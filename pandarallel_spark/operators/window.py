@@ -49,6 +49,7 @@ from pandarallel_spark.operators._memo import (
     shuffle_partitions,
     strict_lazy,
 )
+from pandarallel_spark.session import _patch_worker_zipimport
 
 # _halo_rolling memo: plan_data_key(df, ord, col, ix, pair, n, frame,
 # temp column names) →
@@ -926,6 +927,7 @@ def _single_partition(
     out_names = [f.name for f in out_schema.fields]
 
     def run(batches):
+        _patch_worker_zipimport()
         parts = [b for b in batches if len(b)]
         if not parts:
             return
@@ -1165,6 +1167,8 @@ def rolling_apply(
 
     @F.pandas_udf(return_type)
     def apply_window(arrs: pd.Series) -> pd.Series:
+        _patch_worker_zipimport()
+
         def run(vals):
             # pandas only invokes the func once the window holds
             # min_periods NON-NULL observations (and hands it the window
@@ -2011,6 +2015,7 @@ def _halo_rolling(
         memo["ctx_bc"] = ctx_bc
 
     def roll_buckets(batches):
+        _patch_worker_zipimport()
         ctx_map_x = ctx_bc.value
         parts = [b for b in batches if len(b)]
         if not parts:
@@ -2307,8 +2312,8 @@ def _grouped_pandas_window(
         "Python",
     )
     order_cols = [c if isinstance(c, str) else c._jc.toString() for c in order_by]
-    out_schema = T.StructType(
-        [*df.schema.fields, T.StructField(output_col, _to_dtype(return_type), True)]
+    out_schema = _out_schema(
+        df, T.StructField(output_col, _to_dtype(return_type), True)
     )
     out_names = [f.name for f in out_schema.fields]
 
@@ -2414,6 +2419,8 @@ def expanding_apply(
 
     @F.pandas_udf(return_type)
     def apply_window(arrs: pd.Series) -> pd.Series:
+        _patch_worker_zipimport()
+
         def run(vals):
             # min_periods counts NON-NULL observations and the window
             # keeps its NaN slots, like pandas (struct collection — a

@@ -22,13 +22,16 @@ Per-task worker cost: before every task a PySpark Python worker calls
 holds ~20 of them (pyspark.zip once per imported sub-package, the
 spark-core jar, py4j, this package's shipped zip), ~27k entries that
 cost 0.20-0.23 s of worker CPU per task — most of a small UDF task.
-CPython 3.13 made the re-read lazy. ``_patch_worker_zipimport`` (run
-once per worker process when this package is imported there, as
-unpickling a library UDF does) swaps in a ``zipimporter``
-invalidation that re-reads an archive only when its
-``(st_mtime_ns, st_size)`` changed since that importer last read it,
-so a rewritten zip is still picked up. It never touches the driver
-process or CPython >= 3.13 and has no option.
+CPython 3.13 made the re-read lazy. ``_patch_worker_zipimport`` swaps
+in a ``zipimporter`` invalidation that re-reads an archive only when
+its ``(st_mtime_ns, st_size)`` changed since that importer last read
+it, so a rewritten zip is still picked up. It never touches the driver
+process or CPython >= 3.13 and has no option. It runs when this package
+is imported in a worker, and every library Python UDF body calls it:
+the UDFs are nested functions that cloudpickle ships by value, but a
+module-level function they call is pickled by reference, so unpickling
+any library UDF imports the package and installs the shim before the
+worker's next task.
 """
 
 from __future__ import annotations

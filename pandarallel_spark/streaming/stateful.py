@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pandarallel_spark.session import _patch_worker_zipimport
+
 
 def dedup_stream(stream: DataFrame, key_cols: list[str]) -> DataFrame:
     """Cross-micro-batch exact dedup: emits each key's first-seen row
@@ -33,6 +35,7 @@ def dedup_stream(stream: DataFrame, key_cols: list[str]) -> DataFrame:
     def first_seen(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        _patch_worker_zipimport()
         if state.exists:
             for _ in pdfs:  # drain; key already emitted in a past batch
                 pass
@@ -66,6 +69,7 @@ def running_counts(stream: DataFrame, key_cols: list[str]) -> DataFrame:
     def counter(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        _patch_worker_zipimport()
         n = state.get[0] if state.exists else 0
         batch_n = sum(len(pdf) for pdf in pdfs)
         n += batch_n
@@ -209,6 +213,7 @@ def streaming_heavy_hitters(
     def mg_update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        _patch_worker_zipimport()
         bucket = int(key[0])
         if state.exists:
             keys, counts, decr, n_seen = state.get

@@ -239,3 +239,33 @@ def test_grouped_apply_keeps_user_column_named_like_bucket(spark):
         .toPandas().sort_values("k").reset_index(drop=True)
     )
     assert got["result"].tolist() == [31.0, 30.5, 7.5]
+
+
+
+def test_placed_bucket_ids_balance_every_partition_count(spark):
+    """``_memo.placed_bucket_ids`` puts coarse bucket ``b`` on partition
+    ``b % n`` by Spark's own hash (``F.hash``, the Murmur3 that
+    ``repartition(n, col)`` places rows by), so each of the ``n``
+    partitions holds the same number of buckets, ±1, for every n in
+    1..256 — at ``coarse_group_count``'s 4n buckets and at a count that
+    is no multiple of n."""
+    from pyspark.sql import functions as F
+
+    from pandarallel_spark.operators._memo import placed_bucket_ids
+
+    rows = []
+    for n in range(1, 257):
+        for n_buckets in (4 * n, n + 3):
+            ids = placed_bucket_ids(n_buckets, n)
+            assert len(set(ids)) == n_buckets
+            rows += [(n, n_buckets, b, v) for b, v in enumerate(ids)]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["n", "n_buckets", "b", "id"]))
+    df = df.withColumn("part", F.pmod(F.hash("id"), F.col("n")))
+    assert df.filter(F.col("part") != F.col("b") % F.col("n")).count() == 0
+    per_part = df.groupBy("n", "n_buckets", "part").count()
+    unbalanced = (
+        per_part.groupBy("n", "n_buckets")
+        .agg(F.count("*").alias("parts"), (F.max("count") - F.min("count")).alias("spread"))
+        .filter((F.col("parts") != F.col("n")) | (F.col("spread") > 1))
+    )
+    assert unbalanced.count() == 0

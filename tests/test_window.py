@@ -2570,3 +2570,40 @@ def test_boundary_build_runs_one_aggregate(spark, tmp_path):
     ) == one_agg
     assert _jobs_of(spark, lambda: zorder_key(df, ["a", "b"])) == one_agg
     assert _jobs_of(spark, lambda: zorder_key(df, ["a", "b", "c"])) == one_agg
+
+
+@pytest.mark.parametrize("parts", ["1", "4"])
+@pytest.mark.parametrize("op", ["rolling_udf", "ewm_mean"])
+def test_grouped_window_output_col_replaces_in_place(spark, op, parts):
+    """An ``output_col`` naming an existing column replaces it where it
+    stands, like ``withColumn``, on the grouped per-group pandas
+    windows too, at one shuffle partition and at several."""
+    from pandarallel_spark.operators import window as W
+
+    rng = np.random.default_rng(5)
+    n = 300
+    pdf = pd.DataFrame({"g": rng.integers(0, 7, n), "o": np.arange(n) * 1.0, "x": rng.random(n)})
+    df = spark.createDataFrame(pdf)
+    build, pandas_op = {
+        "rolling_udf": (
+            lambda: W.rolling_apply(
+                df, "x", 4, lambda a: float(a.sum()), "o", partition_by=["g"],
+                raw=True, vectorize=False, output_col="x",
+            ),
+            lambda s: s.rolling(4).sum(),
+        ),
+        "ewm_mean": (
+            lambda: W.ewm_mean(df, "x", "o", partition_by=["g"], alpha=0.3, output_col="x"),
+            lambda s: s.ewm(alpha=0.3).mean(),
+        ),
+    }[op]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    try:
+        out = build()
+        assert out.columns == ["g", "o", "x"]
+        got = out.toPandas().sort_values("o")["x"].to_numpy(dtype="float64")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    want = pdf.groupby("g")["x"].transform(pandas_op).to_numpy()
+    np.testing.assert_allclose(got, want, rtol=1e-9)

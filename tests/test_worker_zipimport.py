@@ -96,3 +96,47 @@ def test_worker_invalidate_caches_is_cheap(spark):
     dt = spark.range(1, numPartitions=1).mapInPandas(probe, "dt double").collect()[0].dt
     assert dt < 0.020, f"per-task invalidate_caches() took {dt * 1000:.1f} ms"
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
+_GROUPED_ONLY = """
+import json, sys, zipimport
+sys.path.insert(0, sys.argv[1])
+import pandas as pd
+from pandarallel_spark import get_spark, parallelize
+
+spark = get_spark("grouped_only", cpus=2, driver_memory="1g")
+pdf = pd.DataFrame({"g": [i % 40 for i in range(400)], "v": range(400)})
+
+
+def report(group):
+    return zipimport.zipimporter.invalidate_caches.__name__
+
+
+rows = parallelize(spark.createDataFrame(pdf)).groupby("g").parallel_apply(
+    report, schema="g bigint, result string", mode="scalar"
+).collect()
+print(json.dumps(sorted({r.result for r in rows})))
+spark.stop()
+"""
+
+
+@needs_eager_zipimport
+def test_grouped_apply_alone_installs_the_shim(tmp_path):
+    """A session that runs only a grouped apply, whose user function
+    never imports the package, still installs the shim in every worker:
+    unpickling the library's UDF imports ``pandarallel_spark``. Runs in
+    a fresh process because the shared test session's workers were
+    patched by earlier tests."""
+    import json
+    import subprocess
+    from pathlib import Path
+
+    script = tmp_path / "grouped_only.py"
+    script.write_text(_GROUPED_ONLY)
+    repo = str(Path(__file__).resolve().parent.parent)
+    proc = subprocess.run(
+        [sys.executable, str(script), repo],
+        capture_output=True, text=True, timeout=300, cwd=tmp_path, check=False,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == ["_zip_invalidate_if_changed"]
