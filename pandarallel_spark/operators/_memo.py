@@ -51,13 +51,13 @@ def eager_build_guard(spark, what: str, skip_hint: str) -> None:
     session should be able to forbid surprise cluster work: set
     ``spark.conf.set("spark.pandarallel_spark.strictLazy", "true")``.
     Global range-bucket windows (halo rolling — builtin and UDF —
-    expanding, time rolling, the ewm carry scans) then fall back to
-    their lazy single-partition plan and warn ``SINGLE-PARTITION``;
-    every other build-time job site (e.g. the global as-of join's
-    boundary sampling) calls this guard, which raises ``RuntimeError``
-    naming the job and the explicit argument that skips it. Memo HITS
-    never trigger either (nothing runs); only a build that would
-    actually launch a job does.
+    expanding, time rolling, the ewm carry scans) and the global as-of
+    join then fall back to their lazy single-partition plan and warn
+    ``SINGLE-PARTITION``; every other build-time job site (e.g. the
+    ngram-Jaccard measurement) calls this guard, which raises
+    ``RuntimeError`` naming the job and the explicit argument that
+    skips it. Memo HITS never trigger either (nothing runs); only a
+    build that would actually launch a job does.
     """
     if strict_lazy(spark):
         raise RuntimeError(
@@ -167,6 +167,15 @@ def shuffle_partitions(spark, default: int = 200) -> int:
 ONE_TASK_BYTES = 1 << 20
 
 
+def _plan_size_bytes(df: DataFrame) -> int | None:
+    """The optimized plan's ``sizeInBytes`` statistic, or None when it
+    cannot be read. Reading it launches no Spark job."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — no readable statistic
+        return None
+
+
 def fits_one_task(df: DataFrame) -> bool:
     """Whether a global window over ``df`` runs as ONE task with no build
     job — the one routing decision of every global range-bucket window
@@ -185,14 +194,45 @@ def fits_one_task(df: DataFrame) -> bool:
     as does a plan whose statistics cannot be read."""
     if shuffle_partitions(df.sparkSession) <= 1:
         return True
+    size = _plan_size_bytes(df)
+    return size is not None and size <= ONE_TASK_BYTES
+
+
+def stage_task_count(df: DataFrame) -> int:
+    """Task count ``n`` of a bucketed stage over ``df``: the shuffle
+    partition count when it is at most the core count
+    (``defaultParallelism``), with no statistic read. Above the core
+    count, ``min(shuffle partitions, max(cores, ceil(sizeInBytes /
+    spark.sql.adaptive.advisoryPartitionSizeInBytes)))`` — the tasks
+    AQE would size a shuffle of ``df`` to, but never fewer than the
+    cores. A session left at Spark's default of 200 partitions
+    otherwise runs 200 Python tasks over a small input: a 30k-group
+    grouped apply took 2.6× the default session's time on 4 cores.
+    Only the task that runs a bucket depends on ``n``, never a result
+    bit."""
+    spark = df.sparkSession
+    n = shuffle_partitions(spark)
     try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — no readable statistic: bucketed
-        return False
-    return size <= ONE_TASK_BYTES
+        cores = int(spark.sparkContext.defaultParallelism)
+    except Exception:  # noqa: BLE001 — no readable core count
+        return n
+    if n <= cores:
+        return n
+    size = _plan_size_bytes(df)
+    if size is None:
+        return n
+    try:
+        advisory = int(
+            spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+                spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
+            )
+        )
+    except Exception:  # noqa: BLE001 — unreadable conf: Spark's default
+        advisory = 64 << 20
+    return min(n, max(cores, -(-size // max(advisory, 1))))
 
 
-def coarse_group_count(spark, factor: int = 4, cap: int = 65536) -> int:
+def coarse_group_count(n: int, factor: int = 4, cap: int = 65536) -> int:
     """Scale-adaptive group count for Python stages keyed on a COARSE
     hash of their real key (r14): grouped ``applyInPandas`` pays a fixed
     per-GROUP boundary cost — Arrow framing, pandas scaffolding and one
@@ -201,15 +241,15 @@ def coarse_group_count(spark, factor: int = 4, cap: int = 65536) -> int:
     keyed on the raw key against 1.7 s on 16 coarse groups, both on
     ``bucket_partitioned`` input), so a stage whose natural key yields
     thousands of tiny groups hashes it into ``factor × shuffle
-    partitions`` groups and loops every real group inside one call.
-    Grows with the cluster via the shuffle partition count; never tuned
-    to one box."""
-    return max(1, min(factor * shuffle_partitions(spark), cap))
+    tasks`` groups (``n``, from ``stage_task_count``) and loops every
+    real group inside one call. Grows with the cluster via the task
+    count; never tuned to one box."""
+    return max(1, min(factor * n, cap))
 
 
-def bucket_partitioned(df: DataFrame, bucket: str) -> DataFrame:
+def bucket_partitioned(df: DataFrame, bucket: str, n: int) -> DataFrame:
     """``df`` hash-partitioned on its ``bucket`` column into exactly
-    ``shuffle_partitions`` partitions: the partition rule of every
+    ``n`` partitions (``stage_task_count``): the partition rule of every
     bucketed stage (the grouped Python stages of ``bucketed_apply`` and
     the range-bucket JVM windows of ``window._over_buckets``).
 
@@ -223,7 +263,7 @@ def bucket_partitioned(df: DataFrame, bucket: str) -> DataFrame:
     every small JVM stage."""
     from pyspark.sql import functions as F
 
-    return df.repartition(shuffle_partitions(df.sparkSession), F.col(bucket))
+    return df.repartition(n, F.col(bucket))
 
 
 _M32 = 0xFFFFFFFF
@@ -282,30 +322,30 @@ def bucketed_apply(
 
     ``bucket`` names a bucket-id column of ``df`` (range buckets);
     ``func`` sees it. Otherwise the bucket is a coarse hash of the
-    ``keys`` columns — ``pmod(xxhash64(keys), n)`` with ``n`` =
-    ``n_buckets`` or ``coarse_group_count`` (read at call time), mapped
-    through ``placed_bucket_ids`` so the stage's tasks get equal bucket
-    counts — in a fresh temporary column that ``func`` never sees. Rows
-    sharing ``keys`` always share a bucket, so ``func`` loops its real
-    groups."""
-    if bucket is not None:
+    ``keys`` columns — ``pmod(xxhash64(keys), m)`` with ``m`` =
+    ``n_buckets`` or ``coarse_group_count`` of the stage's task count,
+    mapped through ``placed_bucket_ids`` so the stage's tasks get equal
+    bucket counts — in a fresh temporary column that ``func`` never
+    sees. Rows sharing ``keys`` always share a bucket, so ``func`` loops
+    its real groups. The stage runs ``stage_task_count(df)`` tasks."""
+    n = stage_task_count(df)
+    call = func
+    if bucket is None:
+        from pyspark.sql import functions as F
 
-        def run(pdf):
-            _patch_worker_zipimport()
-            return func(pdf)
+        m = coarse_group_count(n) if n_buckets is None else int(n_buckets)
+        ids = placed_bucket_ids(m, n)
+        placed = F.expr(f"array({', '.join(f'{i}L' for i in ids)})")
+        bucket = fresh_column(df, "__bkt__")
+        coarse = F.pmod(F.xxhash64(*keys), F.lit(m)).cast("int")
+        df = df.withColumn(bucket, F.element_at(placed, coarse + 1))
+        call = lambda pdf: func(pdf.drop(columns=bucket))  # noqa: E731
 
-        return bucket_partitioned(df, bucket).groupBy(bucket).applyInPandas(run, schema)
-    from pyspark.sql import functions as F
+    def run(pdf):
+        _patch_worker_zipimport()
+        return call(pdf)
 
-    n = coarse_group_count(df.sparkSession) if n_buckets is None else n_buckets
-    ids = placed_bucket_ids(int(n), shuffle_partitions(df.sparkSession))
-    placed = F.expr(f"array({', '.join(f'{i}L' for i in ids)})")
-    bkt = fresh_column(df, "__bkt__")
-    coarse = F.pmod(F.xxhash64(*keys), F.lit(int(n))).cast("int")
-    hashed = df.withColumn(bkt, F.element_at(placed, coarse + 1))
-    return bucketed_apply(
-        hashed, lambda pdf: func(pdf.drop(columns=bkt)), schema, bucket=bkt
-    )
+    return bucket_partitioned(df, bucket, n).groupBy(bucket).applyInPandas(run, schema)
 
 
 def fresh_column(df: DataFrame, base: str) -> str:

@@ -21,11 +21,11 @@ from pyspark.sql import types as T
 
 from pandarallel_spark.operators._memo import (
     constant_partition_key,
-    eager_build_guard,
     fits_one_task,
     memo_put,
     plan_data_key,
     shuffle_partitions,
+    strict_lazy,
 )
 
 # global (key-less) as-of: memoized bucket boundaries per (plan, data)
@@ -90,7 +90,9 @@ def asof_join(
     main shuffle. NULL (and float NaN) left timestamps get NULL matches;
     NULL-timestamp right rows never match (pandas rejects NaN keys
     outright). Boundary sampling is one bounded build-time job, memoized
-    per (plan, data) and guarded by the strictLazy conf.
+    per (plan, data); under the strictLazy conf a cold build runs none
+    and takes the one-bucket plan with a ``SINGLE-PARTITION`` warning,
+    like the global windows.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
@@ -270,12 +272,13 @@ def _global_asof_buckets(
       collect; the spine window sorts ≤1024 rows.
 
     Only the boundary sampling runs at build time (bounded, memoized per
-    plan+data, strictLazy-guarded). When the union fits one task
-    (``_memo.fits_one_task``: one shuffle partition, or at most 1 MiB
-    by the plan's ``sizeInBytes``) — or the timestamp type is not
-    orderable — the sampling is skipped: no build job runs, and a
-    single bucket keeps exact single-partition semantics (bucket ``-1``
-    still routes undefined timestamps).
+    plan+data). When the union fits one task (``_memo.fits_one_task``:
+    one shuffle partition, or at most 1 MiB by the plan's
+    ``sizeInBytes``), the timestamp type is not orderable, or a cold
+    build runs under strictLazy (warned ``SINGLE-PARTITION``), the
+    sampling is skipped: no build job runs, and a single bucket keeps
+    exact single-partition semantics (bucket ``-1`` still routes
+    undefined timestamps). Memo hits keep the bucketed plan.
     """
     spark = unioned.sparkSession
     ts_type = unioned.schema["__t__"].dataType
@@ -286,28 +289,28 @@ def _global_asof_buckets(
     is_float = isinstance(ts_type, (T.DoubleType, T.FloatType))
     bad = t.isNull() | (F.isnan(t) if is_float else F.lit(False))
     unioned = unioned.filter((F.col("__side__") == 1) | ~bad)
+    memo = None
     if orderable and not fits_one_task(unioned):
         n_buckets = max(2, min(1024, shuffle_partitions(spark) * 8))
         key = plan_data_key(unioned, "__global_asof__", n_buckets)
         memo = _ASOF_MEMO.get(key) if key is not None else None
-        if memo is None:
-            eager_build_guard(
-                spark,
-                "global as-of bucket boundary sampling (one quantile-sketch aggregate)",
-                "Pass equi-keys via on=, set spark.sql.shuffle.partitions=1 "
-                "for the single-partition path, or build this join once "
-                "outside strict-lazy scope (boundaries are memoized per "
-                "plan+data).",
+        if memo is None and strict_lazy(spark):
+            from pandarallel_spark.operators.window import _warn_single_partition
+
+            _warn_single_partition(
+                "key-less as-of join",
+                "the plan can run its one boundary aggregate (pre-build "
+                "once outside strict-lazy scope; boundaries are memoized "
+                "per plan+data)",
             )
+        elif memo is None:
             from pandarallel_spark.operators.window import range_boundaries
 
             # the sampler skips NULL/NaN timestamps itself
             (memo,), _ = range_boundaries(unioned, ["__t__"], n_buckets)
             if key is not None:
                 memo_put(_ASOF_MEMO, key, memo)
-        bnds, bexpr = memo["bnds"], memo["bexpr"]
-    else:
-        bnds, bexpr = [], F.lit(0)
+    bnds, bexpr = (memo["bnds"], memo["bexpr"]) if memo else ([], F.lit(0))
 
     u = unioned.withColumn(
         "__bkt__", F.when(~bad, bexpr).otherwise(F.lit(-1)).cast("int")

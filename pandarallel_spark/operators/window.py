@@ -18,14 +18,16 @@ Scale notes:
 - *Grouped* windows partition by key → fully parallel; this is the
   easy 100 TB path. AQE splits skewed keys' partitions for the builtin
   path; arbitrary UDFs run stock pandas rolling inside ``applyInPandas``.
-- *Global* (ungrouped) UDF rolling would be a single task under a naive
-  ``Window.orderBy`` (total order). Instead it runs the reference's own
-  overlap-chunk design (``series_rolling.py:16,47`` over-reads
-  ``window`` rows per chunk and drops them post-compute) as a Spark
-  plan: range-bucket on the order column (sampled quantile boundaries),
-  duplicate each bucket's tail ``window-1`` rows into the next bucket
-  as halo, run pandas rolling per bucket, drop halo rows. Linear, one
-  shuffle, parallel in the bucket count.
+- *Global* (ungrouped) UDF windows run one of two Python plans: one
+  task over the whole sorted frame (``_single_partition``), or one
+  ``_memo.bucketed_apply`` stage over order-key range buckets. Fixed
+  UDF rolling runs the reference's own overlap-chunk design
+  (``series_rolling.py:16,47`` over-reads ``window`` rows per chunk
+  and drops them post-compute) as that stage: range-bucket on the
+  order column (sampled quantile boundaries), union each bucket's
+  neighbouring ``window-1`` rows in as tagged context rows, run pandas
+  rolling per bucket, drop the context rows. Linear, one shuffle,
+  parallel in the bucket count.
 """
 
 from __future__ import annotations
@@ -47,15 +49,17 @@ from pandarallel_spark.operators._memo import (
     memo_put,
     plan_data_key,
     shuffle_partitions,
+    stage_task_count,
     strict_lazy,
 )
 from pandarallel_spark.session import _patch_worker_zipimport
 
 # _halo_rolling memo: plan_data_key(df, ord, col, ix, pair, n, frame,
 # temp column names) →
-# {"bexpr": bucket-assignment Column, "ctx": per-bucket boundary context
-# rows, "ctx_union": context rows as a small pandas frame for the JVM
-# path, "ctx_sdf"/"ctx_bc": their Spark-side forms}. Bounded FIFO;
+# {"bexpr": bucket-assignment Column, "ctx_union": per-bucket boundary
+# context rows as a small pandas frame, "ctx_sdf": its Spark-side form,
+# "starts"/"npre": per-bucket first global row index and context rows
+# before the bucket (weighted var/std)}. Bounded FIFO;
 # entries are session-scoped (Columns hold py4j refs) like any cached
 # plan fragment. Keys include the input FILE LIST, so overwriting the
 # same path with new data misses the memo (see _memo.plan_data_key).
@@ -870,7 +874,7 @@ def _over_buckets(
     advisory partition size (few partitions for narrow data), strangling
     sort parallelism; the window reuses the same hash partitioning
     without re-exchanging."""
-    out = bucket_partitioned(data, bkt).withColumn(output_col, res)
+    out = bucket_partitioned(data, bkt, stage_task_count(data)).withColumn(output_col, res)
     if keep_rows is not None:
         out = out.filter(keep_rows)
     return out.select(*df.columns, *([] if output_col in df.columns else [output_col]))
@@ -910,6 +914,17 @@ def _out_schema(df: DataFrame, field: T.StructField) -> T.StructType:
     if field.name not in df.columns:
         fields.append(field)
     return T.StructType(fields)
+
+
+def _udf_order_cols(df: DataFrame, order_by: Sequence, what: str) -> list[str]:
+    """The order columns of a global UDF window, which pandas sorts in
+    its task: named columns of atomic types, else ``TypeError``."""
+    if not order_by or not all(
+        isinstance(c, str) and isinstance(df.schema[c].dataType, T.AtomicType)
+        for c in order_by
+    ):
+        raise TypeError(f"{what} needs named order columns of atomic types")
+    return list(order_by)
 
 
 def _single_partition(
@@ -964,9 +979,12 @@ def rolling_apply(
     the current row.
 
     ``func``: name of a builtin ("sum", "mean", ...) → JVM window agg;
-    Python callable → ``collect_list`` over the frame + pandas UDF
-    (``raw=True`` hands it a numpy array, else a pd.Series — mirroring
-    pandas ``rolling.apply(raw=...)``). ``center=True`` matches pandas:
+    Python callable → stock pandas ``rolling.apply`` per range bucket
+    or per group (``raw=True`` hands it a numpy array, else a pd.Series
+    — mirroring pandas ``rolling.apply(raw=...)``). A global UDF window
+    sorts its order columns in pandas: they must be named columns of
+    atomic types (``TypeError`` otherwise), and a first order column
+    that is not numeric/date/timestamp runs in one task. ``center=True`` matches pandas:
     the frame spans ``[-(w-1-(w-1)//2), +(w-1)//2]`` around each row.
 
     ``closed`` ('right'|'left'|'both'|'neither') replays pandas frame
@@ -1145,51 +1163,12 @@ def rolling_apply(
             index_col=None if raw else index_col,
         )
 
-    halo = _halo_rolling(
+    return _halo_rolling(
         df, col, order_by, output_col, return_type,
         window=window, min_periods=min_periods, center=center, closed=closed,
         func=func, raw=raw, vectorize=vectorize,
         index_col=None if raw else index_col,
     )
-    if halo is not None:
-        return halo
-    if not fits_one_task(df):
-        _warn_single_partition(
-            f"global rolling({window}) UDF",
-            "the order columns are named, the first is numeric/date/"
-            "timestamp, and the plan can run its bounded build jobs "
-            "(pre-build once outside strict-lazy scope)",
-        )
-
-    idx_expr = F.col(index_col) if index_col else (
-        F.col(order_by[0]) if isinstance(order_by[0], str) else order_by[0]
-    )
-
-    @F.pandas_udf(return_type)
-    def apply_window(arrs: pd.Series) -> pd.Series:
-        _patch_worker_zipimport()
-
-        def run(vals):
-            # pandas only invokes the func once the window holds
-            # min_periods NON-NULL observations (and hands it the window
-            # WITH its NaN slots); Spark evaluates every row's frame, so
-            # both guards live here — struct collection keeps null rows
-            # that a bare collect_list would silently drop.
-            if vals is None:
-                return None
-            x = np.asarray([v["v"] for v in vals], dtype="float64")
-            if np.count_nonzero(~np.isnan(x)) < min_periods:
-                return None
-            if raw:
-                return func(x)
-            return func(pd.Series(x, index=[v["i"] for v in vals]))
-
-        return arrs.apply(run)
-
-    frame_vals = F.collect_list(
-        F.struct(idx_expr.alias("i"), F.col(col).alias("v"))
-    ).over(spec)
-    return df.withColumn(output_col, apply_window(frame_vals))
 
 
 def time_rolling_agg(
@@ -1661,8 +1640,10 @@ def _halo_rolling(
     ``win_type`` window becomes a bucket-partitioned slot expression
     instead of the former always-single-partition total order. var/std's
     rotating weight alignment needs each row's GLOBAL position; it is
-    reconstructed from exact per-bucket row counts (one bounded agg job,
-    memoized) plus the per-bucket context-row offsets.
+    reconstructed from exact per-bucket row counts, which the context
+    collect already holds (a context row's ascending plus descending
+    per-bucket row numbers, minus one), plus the per-bucket context-row
+    offsets.
 
     Shape (the reference's overlap-chunk design, ``series_rolling.py:
     16,47``, restructured so the FULL source lineage is evaluated exactly
@@ -1692,10 +1673,11 @@ def _halo_rolling(
        ``n_parts`` is clamped so the collected context stays ≤ ~2M rows
        even for very large windows.
 
-    EXECUTE time — ONE job, one shuffle, one Python pass: hash-partition
-    on the bucket id, and roll each bucket with its context rows
-    prepended/appended (shipped in the UDF closure — a few KB), then
-    slice the context back off. Every input row is emitted exactly once
+    EXECUTE time — ONE job, one shuffle, one Python pass: the context
+    rows union in as tagged extra rows (``_with_ctx``, the same way the
+    JVM builtin, weighted and symbolic paths reach across boundaries),
+    and one ``_memo.bucketed_apply`` stage sorts each bucket, rolls it
+    and drops the tagged rows. Every input row is emitted exactly once
     with its final value: there is no drop/fix reconciliation between
     branches (the r3 design's row-loss hazard on tied or null order
     keys), no second lineage evaluation, no join.
@@ -1705,40 +1687,41 @@ def _halo_rolling(
     bucket machinery is skipped entirely and no build job runs: a
     single partition already sees the whole order. So is it under a
     strictLazy cold build, warned ``SINGLE-PARTITION`` for UDFs (the
-    caller warns for builtins).
+    caller warns for builtins). A UDF then rolls the whole sorted
+    frame in one task (``_single_partition``).
 
     MULTI-COLUMN order keys (r7): buckets are assigned from the FIRST
     order column alone — bucket-of-first-column is monotone under the
     lexicographic order because ties on the first column always share a
     bucket (strict ``>`` against boundaries) — while every sort (window
     specs, context extraction, per-bucket pandas) uses the full tuple.
-    The first column must be numeric/date/timestamp (it feeds
-    the quantile sampling); later columns may be any atomic orderable
-    type. A constant first column degenerates to one bucket — correct,
-    effectively single-partition.
+    The first column must be numeric/date/timestamp to be bucketed (it
+    feeds the quantile sampling); later columns may be any atomic
+    orderable type. A constant first column degenerates to one bucket —
+    correct, effectively single-partition. A UDF over any other first
+    column of an atomic type rolls in one task; a ``Column`` order
+    expression or a non-atomic order column raises ``TypeError``.
 
-    Returns None when the shape doesn't qualify (non-orderable first
-    order column), and for builtins when the bucket machinery is
-    skipped — caller falls back to the single-partition window form.
+    Returns None for builtins when the bucket machinery is skipped or
+    the shape doesn't qualify — caller falls back to the
+    single-partition window form.
     The order tuple should be a total order; ties make window
     composition nondeterministic (same caveat as pandas on a non-unique
     index) — which tied rows land in a boundary context set is likewise
     arbitrary, affecting window VALUES on ties only, never row
     membership.
     """
-    if not order_by or not all(isinstance(c, str) for c in order_by):
-        return None
-    ord_col = order_by[0]
-    order_cols = list(order_by)
-    if not isinstance(df.schema[ord_col].dataType, _ORDERABLE):
-        return None
-    if not all(
-        isinstance(df.schema[c].dataType, T.AtomicType) for c in order_cols[1:]
-    ):
-        return None
+    try:
+        order_cols = _udf_order_cols(df, order_by, "global rolling UDF")
+    except TypeError:
+        if isinstance(func, str):
+            return None  # the caller's unpartitioned window
+        raise
+    ord_col = order_cols[0]
 
     spark = df.sparkSession
     one_task = fits_one_task(df)
+    bucketable = not one_task and isinstance(df.schema[ord_col].dataType, _ORDERABLE)
     lo, hi = _frame_bounds(window, center, closed)
     halo_before = -lo  # rows whose frame reaches into the previous bucket
     halo_after = max(hi, 0)
@@ -1749,6 +1732,8 @@ def _halo_rolling(
     out_names = [f.name for f in out_schema.fields]
     ix = index_col if (index_col and not raw) else ord_col
     null_msg = _rolling_null_msg(order_cols)
+    # the columns a context row carries
+    narrow_cols = list(dict.fromkeys([*order_cols, col, ix] + ([pair_col] if pair_col else [])))
 
     def roll_bucket(g: pd.DataFrame) -> np.ndarray:
         s = pd.Series(g[col].to_numpy(), index=g[ix].to_numpy())
@@ -1758,8 +1743,8 @@ def _halo_rolling(
 
     # ---- BUILD time (memoized): boundaries, null check, context rows
     bkt, is_ctx = fresh_column(df, "__bkt__"), fresh_column(df, "__ctx__")
-    memo = None
-    if not one_task:
+    memo = plan_key = None
+    if bucketable:
         # more buckets than partitions (16×) so hash collisions on the
         # bucket id average out across tasks instead of doubling a
         # straggler (k/p≈16 → ~25% relative load std; 4× measured a
@@ -1780,7 +1765,7 @@ def _halo_rolling(
             bkt, is_ctx,
         )
         memo = _HALO_MEMO.get(plan_key) if plan_key is not None else None
-    if memo is None and not one_task and not strict_lazy(spark):
+    if memo is None and bucketable and not strict_lazy(spark):
         bounds = _range_bucket_build(df, order_cols, n_buckets, null_msg=null_msg)
         bucket_expr = bounds["bexpr"]
         # per-bucket boundary context rows → driver. A bucket's tail
@@ -1791,12 +1776,8 @@ def _halo_rolling(
         # are picked is arbitrary (row_number), affecting tie VALUES
         # only — membership of real rows is decided in the big pass
         # alone.
-        ctx_map: dict[int, tuple] = {}
-        ctx_union = None
+        ctx_union = starts = npre = None
         if edge and bounds["bnds"]:
-            narrow_cols = list(
-                dict.fromkeys([*order_cols, col, ix] + ([pair_col] if pair_col else []))
-            )
             na, nd = fresh_column(df, "__na__"), fresh_column(df, "__nd__")
             w_a = Window.partitionBy(bkt).orderBy(*[F.col(c) for c in order_cols])
             w_d = Window.partitionBy(bkt).orderBy(
@@ -1808,40 +1789,31 @@ def _halo_rolling(
                 .withColumn(na, F.row_number().over(w_a))
                 .withColumn(nd, F.row_number().over(w_d))
                 .filter((F.col(na) <= halo_after) | (F.col(nd) <= halo_before))
-                .select(*narrow_cols, bkt)
+                .select(*narrow_cols, bkt, na, nd)
                 .toPandas()
                 .sort_values([bkt, *order_cols], kind="mergesort")
             )
             bkts = ctx_pdf[bkt].to_numpy()
-            cvals = np.asarray(ctx_pdf[col].to_numpy(), dtype="float64")
-            ivals = ctx_pdf[ix].to_numpy()
-            union_parts = []
-            for b in range(len(bounds["bnds"]) + 1):
+            n_b = len(bounds["bnds"]) + 1
+            # every non-empty bucket has a context row, and any row of
+            # bucket b gives its row count as na + nd − 1: the weighted
+            # var/std global row index needs no count job
+            first = ctx_pdf.drop_duplicates(bkt)
+            counts = np.zeros(n_b, dtype="int64")
+            counts[first[bkt].to_numpy()] = (first[na] + first[nd] - 1).to_numpy()
+            starts = np.concatenate([[0], np.cumsum(counts)[:-1]]).tolist()
+            npre, union_parts = [], []
+            for b in range(n_b):
                 # bkts is sorted: per-bucket slices via binary search,
                 # not an O(ctx_rows) scan per bucket (O(buckets ×
                 # ctx_rows) total was a review finding at the clamp)
                 pos_l = np.searchsorted(bkts, b, side="left")
                 pos_r = np.searchsorted(bkts, b, side="right")
-                pre = (
-                    np.arange(max(0, pos_l - halo_before), pos_l)
-                    if halo_before
-                    else []
-                )
-                post = (
-                    np.arange(pos_r, min(len(bkts), pos_r + halo_after))
-                    if halo_after
-                    else []
-                )
+                pre = np.arange(max(0, pos_l - halo_before), pos_l)
+                post = np.arange(pos_r, min(len(bkts), pos_r + halo_after))
+                npre.append(len(pre))
                 if len(pre) or len(post):
-                    ctx_map[b] = (
-                        cvals[pre], ivals[pre], cvals[post], ivals[post]
-                    )
-                    sel = ctx_pdf.iloc[list(pre) + list(post)][
-                        list(dict.fromkeys(
-                            [*order_cols, col]
-                            + ([pair_col] if pair_col else [])
-                        ))
-                    ].copy()
+                    sel = ctx_pdf.iloc[np.concatenate([pre, post])][narrow_cols].copy()
                     sel[bkt] = b
                     union_parts.append(sel)
             if union_parts:
@@ -1851,28 +1823,31 @@ def _halo_rolling(
         # would tax every re-build of the same plan. With
         # plan_key=None, memo stays a build-local dict (no caching
         # across builds — data identity couldn't be established).
-        memo = {"bexpr": bucket_expr, "ctx": ctx_map, "ctx_union": ctx_union}
+        memo = {
+            "bexpr": bucket_expr, "ctx_union": ctx_union,
+            "starts": starts, "npre": npre,
+        }
         if plan_key is not None:
             memo_put(_HALO_MEMO, plan_key, memo)
     if memo is None:
         # an input that fits one task (a single partition already sees
-        # the whole order), or a strictLazy cold build. Builtin aggs
-        # take the caller's plain unpartitioned window; UDFs roll the
-        # whole frame in one task. The NULL/NaN order-key contract
-        # still holds, checked in the task — behavior must not diverge
-        # on the input size or spark.sql.shuffle.partitions=1.
+        # the whole order), a first order column the buckets can't
+        # sample, or a strictLazy cold build. Builtin aggs take the
+        # caller's plain unpartitioned window; UDFs roll the whole frame
+        # in one task. The NULL/NaN order-key contract still holds,
+        # checked in the task — behavior must not diverge on the input
+        # size or spark.sql.shuffle.partitions=1.
         if isinstance(func, str):
             return None
         if not one_task:
             _warn_single_partition(
                 f"global rolling({window}) UDF",
-                "the plan can run its bounded build jobs (pre-build once "
+                "the first order column is numeric/date/timestamp and the "
+                "plan can run its bounded build jobs (pre-build once "
                 "outside strict-lazy scope; the result is memoized per "
                 "plan+data)",
             )
-
         return _single_partition(df, order_cols, null_msg, out_field, roll_bucket)
-    ctx_map = memo["ctx"]
     ctx_union = memo["ctx_union"]
 
     # ---- EXECUTE
@@ -1891,7 +1866,7 @@ def _halo_rolling(
         ctx_sdf = memo.get("ctx_sdf")
         if ctx_sdf is None:
             ctx_sdf = spark.createDataFrame(ctx_union)
-            for c in [*order_cols, col] + ([pair_col] if pair_col else []):
+            for c in narrow_cols:
                 ctx_sdf = ctx_sdf.withColumn(c, F.col(c).cast(df.schema[c].dataType))
             ctx_sdf = (
                 ctx_sdf.withColumn(bkt, F.col(bkt).cast("int"))
@@ -1912,44 +1887,23 @@ def _halo_rolling(
                 df, col, func, spec.rowsBetween(lo, hi), min_periods, win_args
             )
         else:
+            # var/std's rotating weight alignment reads each real row's
+            # GLOBAL 0-based index: (rows in earlier buckets) +
+            # (per-bucket row_number, which counts the prepended
+            # context rows) − (context rows before this bucket's real
+            # rows) − 1. One bucket, or window 1 (weights indexed mod
+            # 1), has no context rows and needs only the row_number.
+            gidx = F.lit(0)  # sum/mean never evaluate it
             if func in ("var", "std"):
-                # rotating weight alignment: restore each real row's
-                # GLOBAL 0-based index as (rows in earlier buckets) +
-                # (per-bucket row_number, which counts the prepended
-                # context rows) − (context rows before this bucket's
-                # real rows) − 1. Exact per-bucket counts are one
-                # bounded agg job, memoized with the plan fragments.
-                starts = memo.get("bucket_starts")
-                if starts is None:
-                    if strict_lazy(spark):
-                        return None  # single-partition fallback
-                    cnts = {
-                        int(r[0]): int(r[1])
-                        for r in bucketed.groupBy(bkt)
-                        .agg(F.count(F.lit(1)))
-                        .collect()
-                    }
-                    nb = max([*cnts, *ctx_map, 0]) + 1
-                    starts = []
-                    acc = 0
-                    for b in range(nb):
-                        starts.append(acc)
-                        acc += cnts.get(b, 0)
-                    memo["bucket_starts"] = starts
-                npre = [
-                    len(ctx_map[b][0]) if b in ctx_map else 0
-                    for b in range(len(starts))
-                ]
-                rn_b = F.row_number().over(spec)
-                bix = (F.col(bkt) + F.lit(1)).cast("int")
-                gidx = (
-                    F.element_at(literal_array(starts), bix)
-                    + rn_b
-                    - F.element_at(literal_array(npre), bix)
-                    - F.lit(1)
-                )
-            else:
-                gidx = F.lit(0)  # sum/mean never evaluate it
+                gidx = F.row_number().over(spec) - F.lit(1)
+                if memo["starts"] is not None:
+                    bix = (F.col(bkt) + F.lit(1)).cast("int")
+                    gidx = (
+                        F.element_at(literal_array(memo["starts"]), bix)
+                        + F.row_number().over(spec)
+                        - F.element_at(literal_array(memo["npre"]), bix)
+                        - F.lit(1)
+                    )
             res = _weighted_window_expr(
                 spec, col, window, weighted["wt"], weighted["minp"],
                 weighted["offset"], func, weighted["ddof"], gidx,
@@ -2002,49 +1956,16 @@ def _halo_rolling(
                 sym.cast(_to_dtype(return_type)), ~F.col(is_ctx),
             )
 
-    # Python path: hash-partition on bucket id, roll each bucket with
-    # its boundary context prepended/appended, slice the context back
-    # off. Every row out exactly once, final value. The context map
-    # rides a BROADCAST, not the function closure: a closure would ship
-    # every bucket's context to every task (O(tasks × total_ctx) — up to
-    # ~32 MB × tasks at the clamp), where a broadcast is fetched once
-    # per executor (review finding r4).
-    ctx_bc = memo.get("ctx_bc")
-    if ctx_bc is None:
-        ctx_bc = spark.sparkContext.broadcast(ctx_map)
-        memo["ctx_bc"] = ctx_bc
+    # Python path: one bucketed stage over the same tagged union. Ties
+    # on the first order key share a bucket, so a bucket's context rows
+    # sort strictly before or after its own rows: each bucket rolls its
+    # own rows with the context at both ends, then drops the context.
+    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order_cols, kind="mergesort", ignore_index=True)
+        pdf[output_col] = roll_bucket(pdf)
+        return pdf[~pdf[is_ctx]][out_names]
 
-    def roll_buckets(batches):
-        _patch_worker_zipimport()
-        ctx_map_x = ctx_bc.value
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        for b, g in pdf.groupby(bkt, sort=False):
-            g = g.sort_values(order_cols, kind="mergesort", ignore_index=True)
-            ctx = ctx_map_x.get(int(b))
-            if ctx is not None:
-                pre_c, pre_i, post_c, post_i = ctx
-                n_pre = len(pre_c)
-                gv = np.asarray(g[col].to_numpy(), dtype="float64")
-                gi = g[ix].to_numpy()
-                vals = np.concatenate(
-                    [a for a in (pre_c, gv, post_c) if len(a)]
-                )
-                idxv = np.concatenate(
-                    [a for a in (pre_i, gi, post_i) if len(a)]
-                )
-                rolled = _rolling_series(
-                    pd.Series(vals, index=idxv),
-                    window, min_periods, center, func, raw, vectorize, closed,
-                ).to_numpy()
-                g[output_col] = rolled[n_pre : n_pre + len(g)]
-            else:
-                g[output_col] = roll_bucket(g)
-            yield g[out_names]
-
-    return bucket_partitioned(bucketed, bkt).mapInPandas(roll_buckets, out_schema)
+    return bucketed_apply(_with_ctx(bucketed), per_bucket, out_schema, bucket=bkt)
 
 
 _EXPANDING_COMPOSABLE = frozenset(
@@ -2370,10 +2291,13 @@ def expanding_apply(
     Scale note: the reference only patches *grouped* expanding
     (``core.py:538-545``) — that path partitions by key and scales.
     The ungrouped form with an opaque UDF is inherently a total order
-    whose every row depends on the full prefix (O(n²) work however
-    executed; pandas pays the same serially) — it runs as a
-    single-partition window here and is meant for builtin aggregates
-    (which stay linear, JVM-side) or small/medium data.
+    whose every row depends on the full prefix: it runs stock pandas
+    ``expanding(min_periods).apply(func, raw=raw)`` over the whole
+    frame in one task (``_single_partition``, indexed by the first
+    order column, warned ``SINGLE-PARTITION`` above 1 MiB), exactly
+    what pandas pays serially. NULL/NaN order keys raise
+    ``ValueError`` there, as in the builtin paths. Builtin aggregates
+    stay linear and bucketed, JVM-side.
     """
     order_by = [order_by] if not isinstance(order_by, (list, tuple)) else list(order_by)
     output_col = output_col or f"{col}_expanding_{func if isinstance(func, str) else 'apply'}"
@@ -2415,29 +2339,24 @@ def expanding_apply(
             lambda s: s.expanding(min_periods=min_periods).apply(func, raw=raw),
         )
 
-    idx_expr = F.col(order_by[0]) if isinstance(order_by[0], str) else order_by[0]
+    # GLOBAL UDF: every row depends on the whole prefix — stock pandas
+    # expanding over the sorted frame in one task
+    order_cols = _udf_order_cols(df, order_by, "global expanding UDF")
+    if not fits_one_task(df):
+        _warn_single_partition(
+            "global expanding UDF",
+            "func is a composable builtin name "
+            f"({'/'.join(sorted(_EXPANDING_COMPOSABLE))}) over one order column",
+        )
 
-    @F.pandas_udf(return_type)
-    def apply_window(arrs: pd.Series) -> pd.Series:
-        _patch_worker_zipimport()
+    def expand(pdf: pd.DataFrame) -> np.ndarray:
+        s = pd.Series(pdf[col].to_numpy(), index=pdf[order_cols[0]].to_numpy())
+        return s.expanding(min_periods=min_periods).apply(func, raw=raw).to_numpy()
 
-        def run(vals):
-            # min_periods counts NON-NULL observations and the window
-            # keeps its NaN slots, like pandas (struct collection — a
-            # bare collect_list would drop null rows)
-            if vals is None:
-                return None
-            x = np.asarray([v["v"] for v in vals], dtype="float64")
-            if np.count_nonzero(~np.isnan(x)) < min_periods:
-                return None
-            return func(x if raw else pd.Series(x, index=[v["i"] for v in vals]))
-
-        return arrs.apply(run)
-
-    frame_vals = F.collect_list(
-        F.struct(idx_expr.alias("i"), F.col(col).alias("v"))
-    ).over(spec)
-    return df.withColumn(output_col, apply_window(frame_vals))
+    return _single_partition(
+        df, order_cols, _expanding_null_msg(order_cols),
+        T.StructField(output_col, _to_dtype(return_type), True), expand,
+    )
 
 
 # ewm carry-scan memo: plan_data_key(...) → {bucket-assignment Column, per-bucket seeds}

@@ -134,6 +134,10 @@ def test_strict_lazy_halo_rolling(strict, tmp_path):
 
 
 def test_strict_lazy_global_asof(strict, tmp_path):
+    """A cold key-less as-of build under strictLazy takes the one-bucket
+    plan, like the global windows: it warns SINGLE-PARTITION, building
+    it launches no Spark job, and the result equals the bucketed
+    build's. A memo hit keeps the bucketed plan."""
     import numpy as np
 
     from pandarallel_spark.operators.join import asof_join
@@ -147,16 +151,38 @@ def test_strict_lazy_global_asof(strict, tmp_path):
         strict, tmp_path, "asof_r",
         pd.DataFrame({"t": np.sort(rng.random(100)), "px": rng.random(100)}),
     )
-    with pytest.raises(RuntimeError, match="strictLazy.*as-of"):
-        asof_join(left, right, on=None, left_ts="t", value_cols=["px"])
-    # escape hatch named in the error: single-partition path skips the
-    # quantile job entirely
-    saved = strict.conf.get("spark.sql.shuffle.partitions")
-    try:
-        strict.conf.set("spark.sql.shuffle.partitions", "1")
-        asof_join(left, right, on=None, left_ts="t", value_cols=["px"])
-    finally:
-        strict.conf.set("spark.sql.shuffle.partitions", saved)
+
+    def join():
+        return asof_join(left, right, on=None, left_ts="t", value_cols=["px"])
+
+    def rows(df):
+        return df.toPandas().sort_values("t", ignore_index=True)
+
+    sc = strict.sparkContext
+
+    def build_jobs(build):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        before = sc.statusTracker().getJobIdsForGroup(None)
+        out = build()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(None)) - len(before)
+
+    with pytest.warns(UserWarning, match="as-of join.*SINGLE-PARTITION"):
+        lazy, jobs = build_jobs(join)
+    assert jobs == 0
+    strict.conf.set("spark.pandarallel_spark.strictLazy", "false")
+    bucketed, jobs = build_jobs(join)
+    assert jobs > 0  # the boundary aggregate, now memoized
+    strict.conf.set("spark.pandarallel_spark.strictLazy", "true")
+    pd.testing.assert_frame_equal(rows(lazy), rows(bucketed))
+    # a memo hit keeps the bucketed plan: no warning, no job
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        hit, jobs = build_jobs(join)
+    assert jobs == 0
+    pd.testing.assert_frame_equal(rows(hit), rows(bucketed))
     # keyed as-of never had a build-time job: builds clean under strict
     left2 = left.withColumn("k", left.t * 0)
     right2 = right.withColumn("k", right.t * 0)

@@ -518,8 +518,9 @@ def test_audit_exempts_bounded_scalar_agg_exchanges(spark):
 
 @pytest.mark.parametrize("op", ["grouped_apply", "grouped_rolling_udf", "ewm_mean"])
 def test_bucketed_python_stage_runs_one_task_per_shuffle_partition(spark, op):
-    """A bucketed grouped Python stage runs one task per shuffle
-    partition under the session's default confs (AQE on): a small
+    """A bucketed grouped Python stage runs ``stage_task_count`` tasks —
+    one per shuffle partition in a session whose shuffle partitions
+    are at most its cores — under the default confs (AQE on): a small
     bucketed shuffle is never coalesced into one Python task, and the
     stage reads exactly one Exchange — the bucket repartition, which
     the grouping reuses."""
@@ -531,7 +532,7 @@ def test_bucketed_python_stage_runs_one_task_per_shuffle_partition(spark, op):
 
     from pandarallel_spark.operators import groupby as gb
     from pandarallel_spark.operators import window as W
-    from pandarallel_spark.operators._memo import shuffle_partitions
+    from pandarallel_spark.operators._memo import shuffle_partitions, stage_task_count
 
     n = 600
     pdf = pd.DataFrame(
@@ -572,8 +573,8 @@ def test_bucketed_python_stage_runs_one_task_per_shuffle_partition(spark, op):
     }
     # the Python stage is the result stage: the last one to run
     python_stage = stages[max(s for s, i in stages.items() if i and i.numCompletedTasks)]
-    n_parts = shuffle_partitions(spark)
-    assert n_parts > 2
+    n_parts = stage_task_count(sdf)
+    assert n_parts == shuffle_partitions(spark) > 2  # at most the cores
     assert python_stage.numTasks == n_parts, python_stage
     assert python_stage.numCompletedTasks == n_parts, python_stage
 
@@ -584,3 +585,60 @@ def test_bucketed_python_stage_runs_one_task_per_shuffle_partition(spark, op):
     assert "FlatMapGroupsInPandas" in plan, plan
     assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
     assert "REPARTITION_BY_NUM" in plan, plan
+
+
+def test_stage_task_count_bounds_tasks_by_cores_and_size(spark):
+    """Above the core count, a bucketed stage's task count is the
+    shuffle partitions capped by ``max(cores, ceil(sizeInBytes /
+    advisory partition size))``: a session at 200 shuffle partitions
+    runs a small grouped apply on the cores' worth of tasks, and a
+    larger input (by its size statistic) gets more."""
+    import math
+    import uuid
+
+    import numpy as np
+    import pandas as pd
+
+    from pandarallel_spark.operators import groupby as gb
+    from pandarallel_spark.operators._memo import _plan_size_bytes, stage_task_count
+
+    pdf = pd.DataFrame({"k": np.arange(3000) % 300, "v": np.arange(3000) * 0.5})
+    sdf = spark.createDataFrame(pdf)
+    cores = spark.sparkContext.defaultParallelism
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "200")
+        assert stage_task_count(sdf) == cores
+        out = gb.grouped_apply(
+            sdf, "k", lambda g: float(g.v.sum()),
+            schema="k long, result double", mode="scalar",
+        )
+        sc = spark.sparkContext
+        group = f"task-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            got = out.toPandas().sort_values("k", ignore_index=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        stages = {
+            sid: tracker.getStageInfo(sid)
+            for jid in tracker.getJobIdsForGroup(group)
+            for sid in tracker.getJobInfo(jid).stageIds
+        }
+        # the Python stage is the result stage: the last one to run
+        last = stages[max(s for s, i in stages.items() if i and i.numCompletedTasks)]
+        assert last.numTasks == cores, last
+        want = pdf.groupby("k").v.sum()
+        np.testing.assert_array_equal(got["result"].to_numpy(), want.to_numpy())
+        # a small advisory size makes the same input "large"
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
+        size = _plan_size_bytes(sdf)
+        assert stage_task_count(sdf) == min(200, max(cores, math.ceil(size / 1024)))
+        # at most the cores: the shuffle partitions, no statistic read
+        spark.conf.set("spark.sql.shuffle.partitions", str(cores))
+        assert stage_task_count(sdf) == cores
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

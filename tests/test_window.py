@@ -266,7 +266,7 @@ def test_halo_rolling_is_multi_task(spark):
     with redirect_stdout(buf):
         plan_df.explain("formatted")
     plan = buf.getvalue()
-    assert "MapInPandas" in plan
+    assert "FlatMapGroupsInPandas" in plan
     assert "hashpartitioning(__bkt__" in plan
     # every Window partitions by the bucket id — an empty partition spec
     # would serialize the whole order through one task
@@ -2607,3 +2607,129 @@ def test_grouped_window_output_col_replaces_in_place(spark, op, parts):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     want = pdf.groupby("g")["x"].transform(pandas_op).to_numpy()
     np.testing.assert_allclose(got, want, rtol=1e-9)
+
+
+@pytest.mark.parametrize("parts", ["1", "8"])
+@pytest.mark.parametrize("bad", ["null", "nan"])
+def test_global_expanding_udf_rejects_null_or_nan_order_key(spark, parts, bad):
+    """A global expanding UDF raises the builtin expanding's NULL/NaN
+    order-key ``ValueError`` at one shuffle partition and at several."""
+    import re
+    import warnings
+
+    from pandarallel_spark.operators import window as W
+
+    sdf = _bad_key_frame(spark, "o", bad)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore")  # SINGLE-PARTITION
+            out = W.expanding_apply(sdf, "x", lambda a: float(a.sum()), "o", output_col="r")
+        with pytest.raises(Exception, match=re.escape(W._expanding_null_msg(["o"]))) as e:
+            out.collect()
+        assert "ValueError" in str(e.value)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+@pytest.mark.parametrize("raw", [True, False])
+def test_global_expanding_udf_matches_pandas(spark, raw):
+    """A global expanding UDF over 4,000 rows equals stock pandas
+    ``expanding(min_periods).apply`` on the key-sorted frame, the
+    ``raw=False`` window indexed by the order column."""
+    rng = np.random.default_rng(17)
+    n = 4000
+    vals = rng.standard_normal(n)
+    vals[rng.integers(0, n, 80)] = np.nan
+    pdf = pd.DataFrame({"o": rng.permutation(n) * 0.5, "x": vals})
+    sdf = spark.createDataFrame(pdf).repartition(4)
+    if raw:
+        func = lambda a: float(np.nanmax(a) - np.nanmean(a))  # noqa: E731
+    else:
+        func = lambda s: float(s.sum() + s.index[-1])  # noqa: E731
+    want = pdf.sort_values("o").set_index("o").x.expanding(3).apply(func, raw=raw)
+    with pytest.warns(UserWarning, match="SINGLE-PARTITION"):
+        out = (
+            parallelize(sdf, order_by="o").series("x").expanding(3)
+            .parallel_apply(func, raw=raw, output_col="r")
+        )
+    got = out.toPandas().sort_values("o")["r"].to_numpy(dtype="float64")
+    assert np.array_equal(got, want.to_numpy(), equal_nan=True)
+
+
+def test_rolling_udf_string_order_key_matches_pandas(spark):
+    """A global rolling UDF whose first order column is a string (which
+    range buckets cannot sample) rolls the key-sorted frame in one task
+    and equals pandas, ``raw=True`` and ``raw=False``."""
+    rng = np.random.default_rng(19)
+    n = 1500
+    pdf = pd.DataFrame({
+        "k": [f"key-{i:05d}" for i in rng.permutation(n)],
+        "x": rng.standard_normal(n),
+    })
+    sdf = spark.createDataFrame(pdf).repartition(4)
+    ref = pdf.sort_values("k").set_index("k").x
+    for raw, func in [
+        (True, lambda a: float(a[0] * a[-1] + a.sum())),
+        (False, lambda s: float(s.sum()) + len(s.index[-1])),
+    ]:
+        with pytest.warns(UserWarning, match="SINGLE-PARTITION"):
+            out = (
+                parallelize(sdf, order_by="k").series("x").rolling(5, min_periods=2)
+                .parallel_apply(func, raw=raw, output_col="r")
+            )
+        got = out.toPandas().sort_values("k")["r"].to_numpy(dtype="float64")
+        want = ref.rolling(5, min_periods=2).apply(func, raw=raw).to_numpy()
+        assert np.array_equal(got, want, equal_nan=True), raw
+
+
+@pytest.mark.parametrize("op", ["rolling", "expanding"])
+def test_global_udf_window_needs_named_atomic_order_columns(spark, op):
+    """A global UDF window sorts its order columns in pandas: a
+    ``Column`` order expression or a non-atomic order column raises
+    ``TypeError`` at build."""
+    from pyspark.sql import functions as F
+
+    from pandarallel_spark.operators import window as W
+
+    df = spark.range(50).select(
+        F.col("id").cast("double").alias("o"),
+        F.array(F.col("id")).alias("arr"),
+        F.rand(3).alias("x"),
+    )
+    build = {
+        "rolling": lambda o: W.rolling_apply(df, "x", 3, lambda a: float(a.sum()), o),
+        "expanding": lambda o: W.expanding_apply(df, "x", lambda a: float(a.sum()), o),
+    }[op]
+    for order in (F.col("o"), "arr", ["o", "arr"]):
+        with pytest.raises(TypeError, match="named order columns"):
+            build(order)
+
+
+def test_weighted_var_runs_no_count_job(spark, fake_scipy, tmp_path):
+    """A cold global weighted var build reads every bucket's row count
+    from the context rows it already collects: it runs as many Spark
+    jobs as the weighted mean's build, and both match pandas."""
+    from pandarallel_spark.operators import window as W
+
+    rng = np.random.default_rng(29)
+    n = 3000
+    vals = rng.standard_normal(n)
+    vals[rng.integers(0, n, 60)] = np.nan
+    pdf = pd.DataFrame({"o": rng.permutation(n).astype("float64"), "x": vals})
+    spark.createDataFrame(pdf).repartition(3).write.parquet(str(tmp_path / "w"))
+    sdf = spark.read.parquet(str(tmp_path / "w"))
+    ref = pdf.sort_values("o").x.rolling(5, win_type="triang", min_periods=1)
+    jobs = {}
+    for agg in ("var", "mean"):
+        W._HALO_MEMO.clear()
+        W._EXPB_MEMO.clear()
+        out = []
+        jobs[agg] = _jobs_of(spark, lambda agg=agg: out.append(W.rolling_apply(
+            sdf, "x", 5, agg, "o", win_type="triang", min_periods=1, output_col="r"
+        )))
+        got = out[0].toPandas().sort_values("o")["r"].to_numpy(dtype="float64")
+        want = getattr(ref, agg)().to_numpy()
+        np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-12, equal_nan=True)
+    assert jobs["var"] == jobs["mean"] > 0, jobs
