@@ -167,15 +167,6 @@ def shuffle_partitions(spark, default: int = 200) -> int:
 ONE_TASK_BYTES = 1 << 20
 
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """The optimized plan's ``sizeInBytes`` statistic, or None when it
-    cannot be read. Reading it launches no Spark job."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — no readable statistic
-        return None
-
-
 def fits_one_task(df: DataFrame) -> bool:
     """Whether a global window over ``df`` runs as ONE task with no build
     job — the one routing decision of every global range-bucket window
@@ -194,42 +185,26 @@ def fits_one_task(df: DataFrame) -> bool:
     as does a plan whose statistics cannot be read."""
     if shuffle_partitions(df.sparkSession) <= 1:
         return True
-    size = _plan_size_bytes(df)
-    return size is not None and size <= ONE_TASK_BYTES
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — no readable statistic: bucketed
+        return False
+    return size <= ONE_TASK_BYTES
 
 
 def stage_task_count(df: DataFrame) -> int:
     """Task count ``n`` of a bucketed stage over ``df``: the shuffle
-    partition count when it is at most the core count
-    (``defaultParallelism``), with no statistic read. Above the core
-    count, ``min(shuffle partitions, max(cores, ceil(sizeInBytes /
-    spark.sql.adaptive.advisoryPartitionSizeInBytes)))`` — the tasks
-    AQE would size a shuffle of ``df`` to, but never fewer than the
-    cores. A session left at Spark's default of 200 partitions
-    otherwise runs 200 Python tasks over a small input: a 30k-group
-    grouped apply took 2.6× the default session's time on 4 cores.
-    Only the task that runs a bucket depends on ``n``, never a result
-    bit."""
+    partition count, capped at the core count (``defaultParallelism``).
+    A session left at Spark's default of 200 partitions otherwise runs
+    200 Python tasks over a small input: a 30k-group grouped apply took
+    2.6× the default session's time on 4 cores. Only the task that runs
+    a bucket depends on ``n``, never a result bit."""
     spark = df.sparkSession
     n = shuffle_partitions(spark)
     try:
-        cores = int(spark.sparkContext.defaultParallelism)
+        return min(n, int(spark.sparkContext.defaultParallelism))
     except Exception:  # noqa: BLE001 — no readable core count
         return n
-    if n <= cores:
-        return n
-    size = _plan_size_bytes(df)
-    if size is None:
-        return n
-    try:
-        advisory = int(
-            spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-                spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-            )
-        )
-    except Exception:  # noqa: BLE001 — unreadable conf: Spark's default
-        advisory = 64 << 20
-    return min(n, max(cores, -(-size // max(advisory, 1))))
 
 
 def coarse_group_count(n: int, factor: int = 4, cap: int = 65536) -> int:

@@ -1641,9 +1641,8 @@ def _halo_rolling(
     instead of the former always-single-partition total order. var/std's
     rotating weight alignment needs each row's GLOBAL position; it is
     reconstructed from exact per-bucket row counts, which the context
-    collect already holds (a context row's ascending plus descending
-    per-bucket row numbers, minus one), plus the per-bucket context-row
-    offsets.
+    collect already carries on every context row, plus the per-bucket
+    context-row offsets.
 
     Shape (the reference's overlap-chunk design, ``series_rolling.py:
     16,47``, restructured so the FULL source lineage is evaluated exactly
@@ -1776,31 +1775,37 @@ def _halo_rolling(
         # are picked is arbitrary (row_number), affecting tie VALUES
         # only — membership of real rows is decided in the big pass
         # alone.
-        ctx_union = starts = npre = None
+        # weighted var/std's global row index reads per-bucket offsets:
+        # with one bucket, or no context rows (window 1: weights
+        # indexed mod 1), the zero offsets leave the plain row_number
+        n_b = len(bounds["bnds"]) + 1
+        ctx_union, starts, npre = None, [0] * n_b, [0] * n_b
         if edge and bounds["bnds"]:
-            na, nd = fresh_column(df, "__na__"), fresh_column(df, "__nd__")
+            # one ascending row_number and the bucket's row count pick
+            # both ends: a second, descending row_number would cost a
+            # second sort, and on tied keys its positions need not
+            # mirror the ascending ones
+            na, cnt = fresh_column(df, "__na__"), fresh_column(df, "__cnt__")
             w_a = Window.partitionBy(bkt).orderBy(*[F.col(c) for c in order_cols])
-            w_d = Window.partitionBy(bkt).orderBy(
-                *[F.col(c).desc() for c in order_cols]
-            )
             ctx_pdf = (
                 df.select(*narrow_cols)
                 .withColumn(bkt, bucket_expr)
                 .withColumn(na, F.row_number().over(w_a))
-                .withColumn(nd, F.row_number().over(w_d))
-                .filter((F.col(na) <= halo_after) | (F.col(nd) <= halo_before))
-                .select(*narrow_cols, bkt, na, nd)
+                .withColumn(cnt, F.count(F.lit(1)).over(Window.partitionBy(bkt)))
+                .filter(
+                    (F.col(na) <= halo_after)
+                    | (F.col(na) > F.col(cnt) - F.lit(halo_before))
+                )
+                .select(*narrow_cols, bkt, cnt)
                 .toPandas()
                 .sort_values([bkt, *order_cols], kind="mergesort")
             )
             bkts = ctx_pdf[bkt].to_numpy()
-            n_b = len(bounds["bnds"]) + 1
-            # every non-empty bucket has a context row, and any row of
-            # bucket b gives its row count as na + nd − 1: the weighted
-            # var/std global row index needs no count job
+            # every non-empty bucket has a context row carrying its row
+            # count: the global row index needs no count job
             first = ctx_pdf.drop_duplicates(bkt)
             counts = np.zeros(n_b, dtype="int64")
-            counts[first[bkt].to_numpy()] = (first[na] + first[nd] - 1).to_numpy()
+            counts[first[bkt].to_numpy()] = first[cnt].to_numpy()
             starts = np.concatenate([[0], np.cumsum(counts)[:-1]]).tolist()
             npre, union_parts = [], []
             for b in range(n_b):
@@ -1891,19 +1896,16 @@ def _halo_rolling(
             # GLOBAL 0-based index: (rows in earlier buckets) +
             # (per-bucket row_number, which counts the prepended
             # context rows) − (context rows before this bucket's real
-            # rows) − 1. One bucket, or window 1 (weights indexed mod
-            # 1), has no context rows and needs only the row_number.
+            # rows) − 1.
             gidx = F.lit(0)  # sum/mean never evaluate it
             if func in ("var", "std"):
-                gidx = F.row_number().over(spec) - F.lit(1)
-                if memo["starts"] is not None:
-                    bix = (F.col(bkt) + F.lit(1)).cast("int")
-                    gidx = (
-                        F.element_at(literal_array(memo["starts"]), bix)
-                        + F.row_number().over(spec)
-                        - F.element_at(literal_array(memo["npre"]), bix)
-                        - F.lit(1)
-                    )
+                bix = (F.col(bkt) + F.lit(1)).cast("int")
+                gidx = (
+                    F.element_at(literal_array(memo["starts"]), bix)
+                    + F.row_number().over(spec)
+                    - F.element_at(literal_array(memo["npre"]), bix)
+                    - F.lit(1)
+                )
             res = _weighted_window_expr(
                 spec, col, window, weighted["wt"], weighted["minp"],
                 weighted["offset"], func, weighted["ddof"], gidx,

@@ -137,7 +137,8 @@ def test_strict_lazy_global_asof(strict, tmp_path):
     """A cold key-less as-of build under strictLazy takes the one-bucket
     plan, like the global windows: it warns SINGLE-PARTITION, building
     it launches no Spark job, and the result equals the bucketed
-    build's. A memo hit keeps the bucketed plan."""
+    build's. A memo hit keeps the bucketed plan; one shuffle partition
+    takes the one-task plan with no warning."""
     import numpy as np
 
     from pandarallel_spark.operators.join import asof_join
@@ -183,6 +184,17 @@ def test_strict_lazy_global_asof(strict, tmp_path):
         hit, jobs = build_jobs(join)
     assert jobs == 0
     pd.testing.assert_frame_equal(rows(hit), rows(bucketed))
+    # one shuffle partition: the one-task plan, silent and job-free
+    saved = strict.conf.get("spark.sql.shuffle.partitions")
+    try:
+        strict.conf.set("spark.sql.shuffle.partitions", "1")
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            one, jobs = build_jobs(join)
+    finally:
+        strict.conf.set("spark.sql.shuffle.partitions", saved)
+    assert jobs == 0
+    pd.testing.assert_frame_equal(rows(one), rows(bucketed))
     # keyed as-of never had a build-time job: builds clean under strict
     left2 = left.withColumn("k", left.t * 0)
     right2 = right.withColumn("k", right.t * 0)

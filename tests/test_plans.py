@@ -587,26 +587,22 @@ def test_bucketed_python_stage_runs_one_task_per_shuffle_partition(spark, op):
     assert "REPARTITION_BY_NUM" in plan, plan
 
 
-def test_stage_task_count_bounds_tasks_by_cores_and_size(spark):
-    """Above the core count, a bucketed stage's task count is the
-    shuffle partitions capped by ``max(cores, ceil(sizeInBytes /
-    advisory partition size))``: a session at 200 shuffle partitions
-    runs a small grouped apply on the cores' worth of tasks, and a
-    larger input (by its size statistic) gets more."""
-    import math
+def test_stage_task_count_caps_tasks_at_cores(spark):
+    """A bucketed stage's task count is the shuffle partitions capped at
+    the core count: a session at 200 shuffle partitions runs a grouped
+    apply on the cores' worth of tasks."""
     import uuid
 
     import numpy as np
     import pandas as pd
 
     from pandarallel_spark.operators import groupby as gb
-    from pandarallel_spark.operators._memo import _plan_size_bytes, stage_task_count
+    from pandarallel_spark.operators._memo import stage_task_count
 
     pdf = pd.DataFrame({"k": np.arange(3000) % 300, "v": np.arange(3000) * 0.5})
     sdf = spark.createDataFrame(pdf)
     cores = spark.sparkContext.defaultParallelism
-    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    saved = {k: spark.conf.get(k) for k in keys}
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "200")
         assert stage_task_count(sdf) == cores
@@ -632,13 +628,8 @@ def test_stage_task_count_bounds_tasks_by_cores_and_size(spark):
         assert last.numTasks == cores, last
         want = pdf.groupby("k").v.sum()
         np.testing.assert_array_equal(got["result"].to_numpy(), want.to_numpy())
-        # a small advisory size makes the same input "large"
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
-        size = _plan_size_bytes(sdf)
-        assert stage_task_count(sdf) == min(200, max(cores, math.ceil(size / 1024)))
-        # at most the cores: the shuffle partitions, no statistic read
-        spark.conf.set("spark.sql.shuffle.partitions", str(cores))
-        assert stage_task_count(sdf) == cores
+        # at most the cores: the shuffle partitions
+        spark.conf.set("spark.sql.shuffle.partitions", "2")
+        assert stage_task_count(sdf) == min(2, cores)
     finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+        spark.conf.set("spark.sql.shuffle.partitions", saved)

@@ -2733,3 +2733,38 @@ def test_weighted_var_runs_no_count_job(spark, fake_scipy, tmp_path):
         want = getattr(ref, agg)().to_numpy()
         np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-12, equal_nan=True)
     assert jobs["var"] == jobs["mean"] > 0, jobs
+
+
+@pytest.mark.parametrize("agg", ["var", "std"])
+def test_weighted_var_tied_order_keys_match_pandas(spark, fake_scipy, tmp_path, agg):
+    """Weighted var/std over order keys tied in threes, so ties sit at
+    every bucket's edges: each bucket's row count — and with it every
+    later row's global index and rotating weight — must not depend on
+    how the two context row_numbers order tied rows. Tied rows share
+    their value, so any order of them gives pandas' result."""
+    from pandarallel_spark.operators import window as W
+
+    rng = np.random.default_rng(31)
+    n = 3000
+    base = rng.standard_normal(n // 3)
+    base[rng.integers(0, n // 3, 20)] = np.nan
+    pdf = pd.DataFrame({"o": (np.arange(n) // 3).astype("float64"), "x": np.repeat(base, 3)})
+    pdf = pdf.sample(frac=1.0, random_state=3, ignore_index=True)
+    spark.createDataFrame(pdf).repartition(3).write.parquet(str(tmp_path / "t"))
+    sdf = spark.read.parquet(str(tmp_path / "t"))
+    W._HALO_MEMO.clear()
+    W._EXPB_MEMO.clear()
+    out = W.rolling_apply(
+        sdf, "x", 5, agg, "o", win_type="triang", min_periods=1, output_col="r"
+    )
+    want = pdf.sort_values("o", kind="mergesort")
+    want["r"] = getattr(want.x.rolling(5, win_type="triang", min_periods=1), agg)()
+    # a tie group's results may land on its rows in any order
+    got, want = (
+        f.sort_values(["o", "r"])["r"].to_numpy(dtype="float64")
+        for f in (out.toPandas(), want)
+    )
+    # windows of one repeated value have variance 0 up to the last ulp,
+    # which std's square root lifts to ~1e-7
+    atol = 1e-12 if agg == "var" else 1e-6
+    np.testing.assert_allclose(got, want, rtol=1e-9, atol=atol, equal_nan=True)
