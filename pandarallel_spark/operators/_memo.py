@@ -23,7 +23,8 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 from functools import lru_cache
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from pandarallel_spark.session import _patch_worker_zipimport
 
@@ -144,9 +145,6 @@ def constant_partition_key(col):
     can fold it, and costs one hash per row on frames that are tiny by
     contract. Use it ONLY where the docstring of the call site states
     why the frame is bounded."""
-    from pyspark.sql import Column
-    from pyspark.sql import functions as F
-
     c = col if isinstance(col, Column) else F.col(col)
     return F.pmod(F.hash(c), F.lit(1))
 
@@ -167,29 +165,32 @@ def shuffle_partitions(spark, default: int = 200) -> int:
 ONE_TASK_BYTES = 1 << 20
 
 
-def fits_one_task(df: DataFrame) -> bool:
-    """Whether a global window over ``df`` runs as ONE task with no build
-    job — the one routing decision of every global range-bucket window
-    (halo rolling, time rolling, expanding, the ewm carry scans) and the
-    global as-of join. True with one shuffle partition, or when the
-    optimized plan's ``sizeInBytes`` is at most ``ONE_TASK_BYTES``
-    (read at call time). A bucketed plan pays fixed per-stage costs —
-    a boundary aggregate, a context or carry collect, hundreds of py4j
-    round trips per cold build — that one task over a small input
-    never does. Reading the statistic launches no Spark job.
+def range_bucket_count(df: DataFrame) -> int:
+    """Range-bucket count of every global window over ``df`` (halo
+    rolling, time rolling, expanding, the ewm carry scans) and of the
+    global as-of join: the number of ``ONE_TASK_BYTES`` pieces of the
+    optimized plan's ``sizeInBytes`` (read at call time, no Spark job),
+    at most 1024. No session setting enters it, so the bucket
+    boundaries, and every result bit, are the same at any shuffle
+    partition count, AQE on or off. A count of 1 is the one-task plan
+    with no build job: below that size a bucketed plan's fixed
+    per-stage costs (a boundary aggregate, a context or carry collect,
+    hundreds of py4j round trips per cold build) exceed the work.
 
-    Known limits: for a file scan ``sizeInBytes`` is the bytes on disk,
-    so a highly compressible large file can still be routed to one
-    task — slower, never wrong. A plan without statistics (an
-    RDD-backed frame) reports Spark's default size and stays bucketed,
-    as does a plan whose statistics cannot be read."""
-    if shuffle_partitions(df.sparkSession) <= 1:
-        return True
+    Known limits: the cap bounds a global window at 1024 tasks, and
+    above 1 GiB one bucket (one Python group of a UDF window) holds
+    1/1024 of the input; it keeps the literal boundary map O(1) per row
+    (a CASE chain from 4096 boundaries) and the carry collects small.
+    For a file scan ``sizeInBytes`` is the bytes on disk, so a highly
+    compressible large file can still run as one task — slower, never
+    wrong. A plan without statistics (an RDD-backed frame) reports
+    ``Long.MaxValue``; it, and a plan whose statistics cannot be read,
+    get the 1024 cap."""
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — no readable statistic: bucketed
-        return False
-    return size <= ONE_TASK_BYTES
+    except Exception:  # noqa: BLE001 — no readable statistic: the cap
+        return 1024
+    return min(1024, max(1, -(-size // ONE_TASK_BYTES)))
 
 
 def stage_task_count(df: DataFrame) -> int:
@@ -197,8 +198,9 @@ def stage_task_count(df: DataFrame) -> int:
     partition count, capped at the core count (``defaultParallelism``).
     A session left at Spark's default of 200 partitions otherwise runs
     200 Python tasks over a small input: a 30k-group grouped apply took
-    2.6× the default session's time on 4 cores. Only the task that runs
-    a bucket depends on ``n``, never a result bit."""
+    2.6× the default session's time on 4 cores. The library's one
+    reader of shuffle partitions: ``n`` decides only which task runs a
+    bucket, never a bucket count or a result bit."""
     spark = df.sparkSession
     n = shuffle_partitions(spark)
     try:
@@ -222,23 +224,32 @@ def coarse_group_count(n: int, factor: int = 4, cap: int = 65536) -> int:
     return max(1, min(factor * n, cap))
 
 
-def bucket_partitioned(df: DataFrame, bucket: str, n: int) -> DataFrame:
-    """``df`` hash-partitioned on its ``bucket`` column into exactly
-    ``n`` partitions (``stage_task_count``): the partition rule of every
-    bucketed stage (the grouped Python stages of ``bucketed_apply`` and
-    the range-bucket JVM windows of ``window._over_buckets``).
+def bucket_partitioned(df: DataFrame, bucket: str) -> DataFrame:
+    """``df`` hash-partitioned into exactly ``stage_task_count(df)``
+    partitions on the first of ``bucket_keys``: the partition rule of
+    every bucketed stage (``bucketed_apply``, ``window._over_buckets``),
+    whose grouping or window on ``bucket_keys`` reuses this exchange.
 
-    Without it the stage's own exchange is sized by AQE, which coalesces
-    small shuffles toward the advisory partition size: a few hundred KB
-    of bucketed rows become ONE task, and one core runs every bucket.
-    AQE never coalesces a repartition-by-number shuffle, and a following
-    ``groupBy(bucket)`` / ``Window.partitionBy(bucket)`` reuses its hash
-    partitioning, so this costs no second exchange. The rule is local
-    to the stage on purpose: a session-wide AQE conf would also split
-    every small JVM stage."""
-    from pyspark.sql import functions as F
+    Without it AQE sizes the stage's own exchange toward the advisory
+    partition size: a few hundred KB of bucketed rows become ONE task,
+    and one core runs every bucket. AQE never coalesces a
+    repartition-by-number shuffle. The rule is local to the stage on
+    purpose: a session-wide AQE conf would also split every small JVM
+    stage."""
+    return df.repartition(stage_task_count(df), bucket_keys(df, bucket)[0])
 
-    return df.repartition(n, F.col(bucket))
+
+def bucket_keys(df: DataFrame, bucket: str) -> list[Column]:
+    """The keys a bucketed stage over ``df`` groups or windows by: the
+    ``placed_bucket_ids`` id that puts bucket ``b`` of the int column
+    ``bucket`` on task ``pmod(b, n)`` of its ``n`` tasks, then
+    ``bucket``. Buckets go round robin, so every task holds the same
+    number of buckets, ±1; hashing ``b`` itself put 35 range buckets
+    5/10/8/12 on 4 tasks. The groups are ``bucket``'s: the first key
+    decides only which task runs a bucket."""
+    n = stage_task_count(df)
+    placed = F.expr(f"array({', '.join(f'{i}L' for i in placed_bucket_ids(n))})")
+    return [F.element_at(placed, F.pmod(F.col(bucket), F.lit(n)).cast("int") + 1), F.col(bucket)]
 
 
 _M32 = 0xFFFFFFFF
@@ -265,22 +276,18 @@ def _murmur3_long(v: int, seed: int = 42) -> int:
 
 
 @lru_cache(maxsize=64)
-def placed_bucket_ids(n_buckets: int, n_parts: int) -> tuple[int, ...]:
-    """Bucket id of each coarse bucket ``b`` in ``range(n_buckets)``:
-    the smallest distinct ids that ``repartition(n_parts, id)`` places
-    on partition ``b % n_parts``, so every partition holds the same
-    number of buckets, ±1. Hashing the raw ``b`` instead lets Murmur3
-    pile buckets up: on 4 partitions, ids 0-15 land 6/6/1/3."""
-    need = [n_buckets // n_parts + (p < n_buckets % n_parts) for p in range(n_parts)]
-    placed: list[list[int]] = [[] for _ in range(n_parts)]
-    left, v = n_buckets, 0
+def placed_bucket_ids(n: int) -> tuple[int, ...]:
+    """For each partition ``p`` in ``range(n)``, the smallest bigint id
+    that ``repartition(n, id)`` places on ``p``."""
+    ids: list = [None] * n
+    left, v = n, 0
     while left:
-        p = _murmur3_long(v) % n_parts
-        if len(placed[p]) < need[p]:
-            placed[p].append(v)
+        p = _murmur3_long(v) % n
+        if ids[p] is None:
+            ids[p] = v
             left -= 1
         v += 1
-    return tuple(placed[b % n_parts][b // n_parts] for b in range(n_buckets))
+    return tuple(ids)
 
 
 def bucketed_apply(
@@ -298,29 +305,25 @@ def bucketed_apply(
     ``bucket`` names a bucket-id column of ``df`` (range buckets);
     ``func`` sees it. Otherwise the bucket is a coarse hash of the
     ``keys`` columns — ``pmod(xxhash64(keys), m)`` with ``m`` =
-    ``n_buckets`` or ``coarse_group_count`` of the stage's task count,
-    mapped through ``placed_bucket_ids`` so the stage's tasks get equal
-    bucket counts — in a fresh temporary column that ``func`` never
-    sees. Rows sharing ``keys`` always share a bucket, so ``func`` loops
-    its real groups. The stage runs ``stage_task_count(df)`` tasks."""
-    n = stage_task_count(df)
+    ``n_buckets`` or ``coarse_group_count`` of the stage's task count —
+    in a fresh temporary column that ``func`` never sees. Rows sharing
+    ``keys`` always share a bucket, so ``func`` loops its real groups.
+    The stage runs ``stage_task_count(df)`` tasks, each holding the
+    same number of buckets, ±1 (``bucket_keys``)."""
     call = func
     if bucket is None:
-        from pyspark.sql import functions as F
-
+        n = stage_task_count(df)
         m = coarse_group_count(n) if n_buckets is None else int(n_buckets)
-        ids = placed_bucket_ids(m, n)
-        placed = F.expr(f"array({', '.join(f'{i}L' for i in ids)})")
         bucket = fresh_column(df, "__bkt__")
-        coarse = F.pmod(F.xxhash64(*keys), F.lit(m)).cast("int")
-        df = df.withColumn(bucket, F.element_at(placed, coarse + 1))
+        df = df.withColumn(bucket, F.pmod(F.xxhash64(*keys), F.lit(m)).cast("int"))
         call = lambda pdf: func(pdf.drop(columns=bucket))  # noqa: E731
 
     def run(pdf):
         _patch_worker_zipimport()
         return call(pdf)
 
-    return bucket_partitioned(df, bucket, n).groupBy(bucket).applyInPandas(run, schema)
+    stage = bucket_partitioned(df, bucket).groupBy(*bucket_keys(df, bucket))
+    return stage.applyInPandas(run, schema)
 
 
 def fresh_column(df: DataFrame, base: str) -> str:

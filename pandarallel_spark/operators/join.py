@@ -21,10 +21,9 @@ from pyspark.sql import types as T
 
 from pandarallel_spark.operators._memo import (
     constant_partition_key,
-    fits_one_task,
     memo_put,
     plan_data_key,
-    shuffle_partitions,
+    range_bucket_count,
     strict_lazy,
 )
 
@@ -271,14 +270,15 @@ def _global_asof_buckets(
       through the spine's running fill) and broadcast back. No driver
       collect; the spine window sorts ≤1024 rows.
 
-    Only the boundary sampling runs at build time (bounded, memoized per
-    plan+data). When the union fits one task (``_memo.fits_one_task``:
-    one shuffle partition, or at most 1 MiB by the plan's
-    ``sizeInBytes``), the timestamp type is not orderable, or a cold
-    build runs under strictLazy (warned ``SINGLE-PARTITION``), the
-    sampling is skipped: no build job runs, and a single bucket keeps
-    exact single-partition semantics (bucket ``-1`` still routes
-    undefined timestamps). Memo hits keep the bucketed plan.
+    The bucket count is ``_memo.range_bucket_count`` of the union, from
+    its size alone. Only the boundary sampling runs at build time
+    (bounded, memoized per plan+data). When that count is 1 (at most
+    1 MiB by the plan's ``sizeInBytes``), the timestamp type is not
+    orderable, or a cold build runs under strictLazy (warned
+    ``SINGLE-PARTITION``), the sampling is skipped: no build job runs,
+    and a single bucket keeps exact single-partition semantics (bucket
+    ``-1`` still routes undefined timestamps). Memo hits keep the
+    bucketed plan.
     """
     spark = unioned.sparkSession
     ts_type = unioned.schema["__t__"].dataType
@@ -290,8 +290,8 @@ def _global_asof_buckets(
     bad = t.isNull() | (F.isnan(t) if is_float else F.lit(False))
     unioned = unioned.filter((F.col("__side__") == 1) | ~bad)
     memo = None
-    if orderable and not fits_one_task(unioned):
-        n_buckets = max(2, min(1024, shuffle_partitions(spark) * 8))
+    n_buckets = range_bucket_count(unioned) if orderable else 1
+    if n_buckets > 1:
         key = plan_data_key(unioned, "__global_asof__", n_buckets)
         memo = _ASOF_MEMO.get(key) if key is not None else None
         if memo is None and strict_lazy(spark):

@@ -41,15 +41,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pandarallel_spark.operators._memo import (
+    bucket_keys,
     bucket_partitioned,
     bucketed_apply,
     constant_partition_key,
-    fits_one_task,
     fresh_column,
     memo_put,
     plan_data_key,
-    shuffle_partitions,
-    stage_task_count,
+    range_bucket_count,
     strict_lazy,
 )
 from pandarallel_spark.session import _patch_worker_zipimport
@@ -113,7 +112,7 @@ class _SlotProxy:
 
 
 def _symbolic_rolling_expr(
-    spark,
+    df: DataFrame,
     func: Callable,
     col: str,
     ord_col: str,
@@ -133,7 +132,7 @@ def _symbolic_rolling_expr(
     callers never get here — they keep strict pandas bit parity on the
     Python path)."""
     n_slots = hi - lo + 1
-    over = Window.partitionBy(bkt).orderBy(F.col(ord_col))
+    over = Window.partitionBy(*bucket_keys(df, bkt)).orderBy(F.col(ord_col))
     framed = over.rowsBetween(lo, hi)
     col_d = F.col(col).cast("double")
     try:
@@ -173,7 +172,7 @@ def _symbolic_rolling_expr(
             .to_numpy(dtype="float64")
         )
         got = (
-            spark.createDataFrame(probe)
+            df.sparkSession.createDataFrame(probe)
             .select(F.col(ord_col), gated.alias("__r__"))
             .orderBy(ord_col)
             .toPandas()["__r__"]
@@ -506,12 +505,11 @@ def weighted_rolling_agg(
     across bucket boundaries complete the truncated leading frames —
     zero single-partition exchanges. It falls back to a total-order
     window (single sort task, with a ``UserWarning`` naming the
-    bucketed alternative) only when the halo path can't run: one
-    shuffle partition configured, a non-orderable order key, or
-    strictLazy forbidding the bucket-boundary build job on a cold
-    memo. Windows wider than 512 slots are rejected (the expression
-    tree and codegen cost grow linearly; use a grouped UDF path at
-    that width).
+    bucketed alternative) only when the halo path can't run: one range
+    bucket, a non-orderable order key, or strictLazy forbidding the
+    bucket-boundary build job on a cold memo. Windows wider than 512
+    slots are rejected (the expression tree and codegen cost grow
+    linearly; use a grouped UDF path at that width).
     """
     if agg not in ("sum", "mean", "var", "std"):
         raise NotImplementedError(
@@ -553,7 +551,7 @@ def weighted_rolling_agg(
         )
         if halo is not None:
             return halo
-        if not fits_one_task(df):
+        if range_bucket_count(df) > 1:
             _warn_single_partition(
                 f"global weighted (win_type={win_type!r}) rolling {agg}",
                 "the order column is numeric/date/timestamp and the plan "
@@ -812,8 +810,7 @@ def _builtin_over(func: str, v: Column, spec, args: dict | None = None) -> Colum
 
 
 def _window_spec(order_by: Sequence[str | Column], partition_by: Sequence[str | Column]):
-    w = Window.partitionBy(*partition_by) if partition_by else Window.partitionBy()
-    return w.orderBy(*order_by)
+    return Window.partitionBy(*partition_by).orderBy(*order_by)
 
 
 def _minp0_sum_fix(result: Column, func, min_periods) -> Column:
@@ -872,9 +869,9 @@ def _over_buckets(
     ``_memo.bucket_partitioned`` — the partition rule of every bucketed
     stage: the window's own exchange would be AQE-coalesced toward the
     advisory partition size (few partitions for narrow data), strangling
-    sort parallelism; the window reuses the same hash partitioning
-    without re-exchanging."""
-    out = bucket_partitioned(data, bkt, stage_task_count(data)).withColumn(output_col, res)
+    sort parallelism. ``res`` windows over ``_memo.bucket_keys(df,
+    bkt)``, which reuse that exchange."""
+    out = bucket_partitioned(data, bkt).withColumn(output_col, res)
     if keep_rows is not None:
         out = out.filter(keep_rows)
     return out.select(*df.columns, *([] if output_col in df.columns else [output_col]))
@@ -1008,18 +1005,17 @@ def rolling_apply(
     parity.
 
     Build-time behavior (global windows): an input of at most 1 MiB
-    (the optimized plan's ``sizeInBytes``; ``_memo.fits_one_task``),
-    or any input at one shuffle partition, runs as one task and
-    constructing its plan runs no Spark job. A larger input's build
-    runs bounded Spark jobs (one aggregate that samples the bucket
-    boundaries and flags NULL/NaN order keys, then boundary-context
-    extraction), memoized per plan+data so re-building the same
-    rolling is free. NULL order keys raise ``ValueError`` — window
-    membership is undefined for them and pandas/Spark disagree on where
-    nulls sort — at build on the bucketed plan, when the one-task plan
-    executes. Under strictLazy a cold build of a larger input runs no
-    job: it warns ``SINGLE-PARTITION`` and returns the lazy
-    single-partition plan.
+    (the optimized plan's ``sizeInBytes``; ``_memo.range_bucket_count``
+    gives one bucket) runs as one task and constructing its plan runs
+    no Spark job. A larger input's build runs bounded Spark jobs (one
+    aggregate that samples the bucket boundaries and flags NULL/NaN
+    order keys, then boundary-context extraction), memoized per
+    plan+data so re-building the same rolling is free. NULL order keys
+    raise ``ValueError`` — window membership is undefined for them and
+    pandas/Spark disagree on where nulls sort — at build on the bucketed
+    plan, when the one-task plan executes. Under strictLazy a cold build
+    of a larger input runs no job: it warns ``SINGLE-PARTITION`` and
+    returns the lazy single-partition plan.
     """
     if not isinstance(window, (int, np.integer)):
         # time-offset window (pandas rolling("1h") / Timedelta): builtin
@@ -1058,7 +1054,7 @@ def rolling_apply(
         # GLOBAL time-offset rolling UDF: explode-to-reachable-buckets
         # with stock pandas per target bucket; lazy single-partition
         # scan when the bucketed shape doesn't qualify (strictLazy cold
-        # build, one shuffle partition, span ≲ one window)
+        # build, one range bucket, span ≲ one window)
         ord_name = order_by if isinstance(order_by, str) else None
         if ord_name is None:
             raise TypeError("time-offset rolling needs a named order column")
@@ -1139,7 +1135,7 @@ def rolling_apply(
             )
             if halo is not None:
                 return halo
-            if not fits_one_task(df):
+            if range_bucket_count(df) > 1:
                 _warn_single_partition(
                     f"global rolling({window}) builtin {func!r}",
                     "the order columns are named, the first is numeric/"
@@ -1280,7 +1276,7 @@ def time_rolling_agg(
             res = _checked_order(df, [ord_col], _time_rolling_null_msg(ord_col), res)
         return df.withColumn(output_col, res)
     data, src, tgt = ex
-    spec = _window_spec([ord_axis], [tgt]).rangeBetween(lo, hi)
+    spec = Window.partitionBy(*bucket_keys(df, tgt)).orderBy(ord_axis).rangeBetween(lo, hi)
     res = _gated_builtin(df, col, func, spec, minp, agg_args, offset_frames=True)
     return _over_buckets(df, data, tgt, output_col, res, F.col(tgt) == F.col(src))
 
@@ -1332,18 +1328,19 @@ def _explode_to_time_buckets(
     duplicate factor is ≈1 + window/bucket-span, capped at 2 (3
     centered) by ``_offset_bucket_exprs``.
 
-    Returns ``(data, src, tgt)``, or None when the input fits one task
-    (``_memo.fits_one_task``: one shuffle partition, or at most 1 MiB by
-    the plan's ``sizeInBytes`` — no build job runs), under a strictLazy
-    cold build, or when the data spans ≲ one window; the last two warn
-    ``SINGLE-PARTITION`` (``what`` names the window) because the caller
-    then runs its lazy single-partition plan. NULL order keys are
-    rejected at build.
+    The bucket count is ``_memo.range_bucket_count``, from the input's
+    size alone. Returns ``(data, src, tgt)``, or None when that count
+    is 1 (at most 1 MiB by the plan's ``sizeInBytes`` — one task, no
+    build job runs), under a strictLazy cold build, or when the data
+    spans ≲ one window; the last two warn ``SINGLE-PARTITION``
+    (``what`` names the window) because the caller then runs its lazy
+    single-partition plan. NULL order keys are rejected at build.
     """
-    if fits_one_task(df):
+    n_buckets = range_bucket_count(df)
+    if n_buckets == 1:
         return None
     memo = _range_bucket_build(
-        df, [ord_col], shuffle_partitions(df.sparkSession) * 16, micros=True,
+        df, [ord_col], n_buckets, micros=True,
         null_msg=_time_rolling_null_msg(ord_col),
     )
     back_off = (d + 1) // 2 if center else 0
@@ -1570,15 +1567,17 @@ def bucket_assignment_expr(
 
 def range_boundaries(
     df: DataFrame, cols: Sequence[str], n_buckets: int, *, micros: bool = False,
-    accuracy: int | None = None, bad: Column | None = None,
+    accuracy: int = 10_000, bad: Column | None = None,
 ) -> tuple[list[dict], bool]:
     """Sample ``n_buckets`` range buckets over a numeric view of each of
     ``cols`` in ONE aggregate (one Spark action, however many columns):
     the number itself, epoch seconds for dates and timestamps, or epoch
     µs with ``micros``. Each view goes to ``percentile_approx`` at
-    ``accuracy`` (default ``n_buckets``: relative error
-    ``1/accuracy``) with NaN mapped to NULL, so the sketch skips NULL
-    and NaN alike; ``probs`` crosses py4j once, as a ``literal_array``.
+    ``accuracy`` (Spark's default 10,000: relative error
+    ``1/accuracy``, far below one bucket) with NaN mapped to NULL, so
+    the sketch skips NULL and NaN alike; ``probs`` crosses py4j once,
+    as a ``literal_array``. At ``accuracy = n_buckets`` 35 buckets of
+    a 2M-row input came back as 33, the largest 2.6× the mean.
     Returns one dict per column — ``{"num", "bnds", "vlo", "vhi",
     "bexpr"}``: the numeric view, the sorted distinct inner boundaries,
     the exact min/max (sketch endpoints at probs 0 and 1, which the
@@ -1599,7 +1598,7 @@ def range_boundaries(
         else:
             views.append(v.cast("timestamp").cast("double"))
     probs = literal_array([i / n_buckets for i in range(n_buckets + 1)])
-    acc = F.lit(accuracy or n_buckets)
+    acc = F.lit(accuracy)
     aggs = [F.percentile_approx(F.when(~F.isnan(n), n), probs, acc) for n in views]
     row = df.agg(*aggs, F.bool_or(bad if bad is not None else F.lit(False))).first()
     out = []
@@ -1668,9 +1667,9 @@ def _halo_rolling(
        (chained across buckets smaller than the halo, so context is
        complete by induction). This is the reference's overlap-chunk
        over-read (``series_rolling.py:16,47``) hoisted to build time.
-       The extraction is a narrow-projection shuffle + per-bucket sort;
-       ``n_parts`` is clamped so the collected context stays ≤ ~2M rows
-       even for very large windows.
+       The extraction is a narrow-projection shuffle + per-bucket sort
+       over ``_memo.range_bucket_count`` buckets, clamped so the
+       collected context stays ≤ ~2M rows even for very large windows.
 
     EXECUTE time — ONE job, one shuffle, one Python pass: the context
     rows union in as tagged extra rows (``_with_ctx``, the same way the
@@ -1681,13 +1680,12 @@ def _halo_rolling(
     branches (the r3 design's row-loss hazard on tied or null order
     keys), no second lineage evaluation, no join.
 
-    When the input fits one task (``_memo.fits_one_task``: one shuffle
-    partition, or at most 1 MiB by the plan's ``sizeInBytes``) the
-    bucket machinery is skipped entirely and no build job runs: a
-    single partition already sees the whole order. So is it under a
-    strictLazy cold build, warned ``SINGLE-PARTITION`` for UDFs (the
-    caller warns for builtins). A UDF then rolls the whole sorted
-    frame in one task (``_single_partition``).
+    When the input is one range bucket (at most 1 MiB by the plan's
+    ``sizeInBytes``) the bucket machinery is skipped entirely and no
+    build job runs: a single partition already sees the whole order.
+    So is it under a strictLazy cold build, warned ``SINGLE-PARTITION``
+    for UDFs (the caller warns for builtins). A UDF then rolls the
+    whole sorted frame in one task (``_single_partition``).
 
     MULTI-COLUMN order keys (r7): buckets are assigned from the FIRST
     order column alone — bucket-of-first-column is monotone under the
@@ -1719,7 +1717,8 @@ def _halo_rolling(
     ord_col = order_cols[0]
 
     spark = df.sparkSession
-    one_task = fits_one_task(df)
+    n_buckets = range_bucket_count(df)
+    one_task = n_buckets == 1
     bucketable = not one_task and isinstance(df.schema[ord_col].dataType, _ORDERABLE)
     lo, hi = _frame_bounds(window, center, closed)
     halo_before = -lo  # rows whose frame reaches into the previous bucket
@@ -1744,14 +1743,8 @@ def _halo_rolling(
     bkt, is_ctx = fresh_column(df, "__bkt__"), fresh_column(df, "__ctx__")
     memo = plan_key = None
     if bucketable:
-        # more buckets than partitions (16×) so hash collisions on the
-        # bucket id average out across tasks instead of doubling a
-        # straggler (k/p≈16 → ~25% relative load std; 4× measured a
-        # visible straggler tail on the bench: last 2 of 32 tasks ran
-        # ~2× the median); clamped so the collected context stays
-        # bounded even for very large windows (≈ n_buckets × 2·edge
-        # narrow rows)
-        n_buckets = shuffle_partitions(spark) * 16
+        # clamped so the collected context stays bounded even for very
+        # large windows (≈ n_buckets × 2·edge narrow rows)
         if edge:
             n_buckets = max(2, min(n_buckets, 2_000_000 // (2 * edge)))
         # Memo key = plan identity AND data identity (semanticHash alone
@@ -1841,7 +1834,7 @@ def _halo_rolling(
         # caller's plain unpartitioned window; UDFs roll the whole frame
         # in one task. The NULL/NaN order-key contract still holds,
         # checked in the task — behavior must not diverge on the input
-        # size or spark.sql.shuffle.partitions=1.
+        # size.
         if isinstance(func, str):
             return None
         if not one_task:
@@ -1886,7 +1879,7 @@ def _halo_rolling(
         # the unpartitioned form (pandas NaN-skip, count's row gate),
         # frames completed across boundaries by the context rows. One
         # shuffle on the bucket id, whole-stage codegen, no Python.
-        spec = Window.partitionBy(bkt).orderBy(*[F.col(c) for c in order_cols])
+        spec = Window.partitionBy(*bucket_keys(df, bkt)).orderBy(*[F.col(c) for c in order_cols])
         if weighted is None:
             res = _gated_builtin(
                 df, col, func, spec.rowsBetween(lo, hi), min_periods, win_args
@@ -1947,7 +1940,7 @@ def _halo_rolling(
             sym = None
         else:
             sym = _symbolic_rolling_expr(
-                spark, func, col, ord_col, window,
+                df, func, col, ord_col, window,
                 min_periods, center, closed, lo, hi, bkt,
             )
             if sym_key is not None:
@@ -2047,15 +2040,15 @@ def _bucketed_expanding(
     build returns None (the single-partition window is correct and
     fully lazy). NULL/NaN order keys are rejected, as in halo rolling.
 
-    Returns None when the input fits one task (``_memo.fits_one_task``:
-    one shuffle partition, or at most 1 MiB by the plan's
-    ``sizeInBytes``; the caller's unpartitioned window then runs with
-    no build job) or when the shape doesn't qualify.
+    The bucket count is ``_memo.range_bucket_count``, from the input's
+    size alone. Returns None when that count is 1 (at most 1 MiB by the
+    plan's ``sizeInBytes``; the caller's unpartitioned window then runs
+    with no build job) or when the shape doesn't qualify.
     """
     spark = df.sparkSession
-    if not isinstance(df.schema[ord_col].dataType, _ORDERABLE) or fits_one_task(df):
+    n_buckets = range_bucket_count(df)
+    if n_buckets == 1 or not isinstance(df.schema[ord_col].dataType, _ORDERABLE):
         return None
-    n_buckets = shuffle_partitions(spark) * 16
     memo = _range_bucket_build(
         df, [ord_col], n_buckets, null_msg=_expanding_null_msg([ord_col])
     )
@@ -2068,7 +2061,7 @@ def _bucketed_expanding(
     bkt = fresh_column(df, "__bkt__")
     data = df.withColumn(bkt, memo["bexpr"].cast("int"))
     wb = (
-        Window.partitionBy(bkt)
+        Window.partitionBy(*bucket_keys(df, bkt))
         .orderBy(F.col(ord_col))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -2321,7 +2314,7 @@ def expanding_apply(
             )
             if out is not None:
                 return out
-            if not fits_one_task(df):
+            if range_bucket_count(df) > 1:
                 _warn_single_partition(
                     f"global expanding {func!r}",
                     "the order column is numeric/date/timestamp and the "
@@ -2344,7 +2337,7 @@ def expanding_apply(
     # GLOBAL UDF: every row depends on the whole prefix — stock pandas
     # expanding over the sorted frame in one task
     order_cols = _udf_order_cols(df, order_by, "global expanding UDF")
-    if not fits_one_task(df):
+    if range_bucket_count(df) > 1:
         _warn_single_partition(
             "global expanding UDF",
             "func is a composable builtin name "
@@ -2885,16 +2878,15 @@ def _carry_scan(
 
     The order column is viewed as epoch seconds (numeric, date or
     timestamp), or epoch µs for ``times``. Build: range boundaries from
-    ``_range_bucket_build`` (NULL/NaN order keys raise), then one
-    bounded summary row per bucket (≤ 1024 collected, by
-    construction) and the seed chain, memoized per plan+data and
-    ``tag``. Execute: one ``applyInPandas`` keyed on the bucket id.
-    Two linear passes, parallel in the bucket count. When the input
-    fits one task (``_memo.fits_one_task``: one shuffle partition, or
-    at most 1 MiB by the plan's ``sizeInBytes``) no build job runs, and
-    ``single`` runs over the whole frame in one task — exact and lazy;
-    so it does on a cold build under strictLazy, warned
-    ``SINGLE-PARTITION``.
+    ``_range_bucket_build`` over ``_memo.range_bucket_count`` buckets
+    (NULL/NaN order keys raise), then one bounded summary row per
+    bucket (≤ 1024 collected, by construction) and the seed chain,
+    memoized per plan+data and ``tag``. Execute: one ``applyInPandas``
+    keyed on the bucket id. Two linear passes, parallel in the bucket
+    count. When the input is one bucket (at most 1 MiB by the plan's
+    ``sizeInBytes``) no build job runs, and ``single`` runs over the
+    whole frame in one task — exact and lazy; so it does on a cold
+    build under strictLazy, warned ``SINGLE-PARTITION``.
     """
     spark = df.sparkSession
     ord_type = df.schema[ord_col].dataType
@@ -2904,8 +2896,8 @@ def _carry_scan(
             f"{ord_type.simpleString()}"
         )
     memo = None
-    if not fits_one_task(df):
-        n_buckets = max(2, min(1024, shuffle_partitions(spark) * 8))
+    n_buckets = range_bucket_count(df)
+    if n_buckets > 1:
         key = plan_data_key(df, *tag, ord_col, col, n_buckets)
         memo = _EWM_MEMO.get(key) if key is not None else None
         if memo is None:

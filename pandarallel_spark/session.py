@@ -8,9 +8,13 @@ AQE replaces static equal-count chunking.
 
 Scale notes (targets a 1000-executor cluster even though tests run
 ``local[32]``):
-- ``spark.sql.shuffle.partitions`` defaults to the local core count here;
-  on a real cluster leave AQE's coalescing to right-size post-shuffle
-  partitions instead of hand-tuning.
+- ``spark.sql.shuffle.partitions`` (the local core count here) sizes
+  tasks, never range buckets; on a real cluster leave AQE's coalescing
+  to right-size post-shuffle partitions instead of hand-tuning.
+- A global (key-less) window or as-of join takes one range bucket per
+  MiB of input, at most 1024 (``_memo.range_bucket_count``): above
+  1 GiB a bucket, one Python group of a UDF window, holds 1/1024 of
+  the input (~1 GiB at 1 TB). Keyed windows have no such bound.
 - AQE is always on: runtime partition coalescing, skew-join splitting.
 - Arrow batch size bounds per-batch memory for pandas UDFs so a 100 TB
   scan never materializes unbounded batches in a Python worker.

@@ -1,4 +1,5 @@
 import os
+import re
 
 import pytest
 
@@ -148,6 +149,17 @@ def sf_dir():
     return SF_DIR
 
 
+# ``_memo.ONE_TASK_BYTES`` under ``bucketed``: one range bucket per KiB
+BUCKET_BYTES = 1024
+
+
+def bucket_partitioned_on(plan: str, bucket: str) -> bool:
+    """Whether ``plan`` (an explain string) hash-partitions rows on
+    ``_memo.bucket_key`` of the column ``bucket``: the exchange of a
+    bucketed stage."""
+    return re.search(rf"hashpartitioning\(element_at\([^\n]*pmod\({bucket}#", plan) is not None
+
+
 @pytest.fixture
 def bucketed(monkeypatch):
     """Route every global window over the bucketed plan — the plan
@@ -155,7 +167,19 @@ def bucketed(monkeypatch):
     test's frame. It pins which plan runs and loosens no assertion:
     tests of bucket boundaries, build-time errors, build jobs and
     strictLazy warnings need frames of a few thousand rows, which would
-    otherwise run as one task."""
+    otherwise run as one task. At ``BUCKET_BYTES`` per range bucket
+    (``_memo.range_bucket_count``) a 2,000-row, three-column in-memory
+    frame (64 kB by its plan) gets 63 buckets of ~32 rows, smaller than
+    the halo of a ``rolling(50)``."""
     from pandarallel_spark.operators import _memo
 
-    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 0)
+    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", BUCKET_BYTES)
+
+
+@pytest.fixture
+def tiny_buckets(bucketed, monkeypatch):
+    """``bucketed`` for frames of a few rows (under 1 KiB by their
+    plan): 16 bytes per range bucket, a row or two per bucket."""
+    from pandarallel_spark.operators import _memo
+
+    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 16)

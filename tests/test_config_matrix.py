@@ -5,11 +5,13 @@ the reference's progress-bar × data-plane × worker-count matrix
 """
 
 import math
+import warnings
 
 import pandas as pd
 import pytest
 
 from pandarallel_spark import parallelize
+from pandarallel_spark.operators import _memo
 
 # global windows on these small frames run the bucketed plan that inputs
 # above _memo.ONE_TASK_BYTES take (conftest ``bucketed``)
@@ -133,12 +135,12 @@ def test_strict_lazy_halo_rolling(strict, tmp_path):
     )
 
 
-def test_strict_lazy_global_asof(strict, tmp_path):
+def test_strict_lazy_global_asof(strict, tmp_path, monkeypatch):
     """A cold key-less as-of build under strictLazy takes the one-bucket
     plan, like the global windows: it warns SINGLE-PARTITION, building
     it launches no Spark job, and the result equals the bucketed
-    build's. A memo hit keeps the bucketed plan; one shuffle partition
-    takes the one-task plan with no warning."""
+    build's. A memo hit keeps the bucketed plan; an input within
+    ``ONE_TASK_BYTES`` takes the one-task plan with no warning."""
     import numpy as np
 
     from pandarallel_spark.operators.join import asof_join
@@ -177,22 +179,17 @@ def test_strict_lazy_global_asof(strict, tmp_path):
     strict.conf.set("spark.pandarallel_spark.strictLazy", "true")
     pd.testing.assert_frame_equal(rows(lazy), rows(bucketed))
     # a memo hit keeps the bucketed plan: no warning, no job
-    import warnings
-
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         hit, jobs = build_jobs(join)
     assert jobs == 0
     pd.testing.assert_frame_equal(rows(hit), rows(bucketed))
-    # one shuffle partition: the one-task plan, silent and job-free
-    saved = strict.conf.get("spark.sql.shuffle.partitions")
-    try:
-        strict.conf.set("spark.sql.shuffle.partitions", "1")
-        with warnings.catch_warnings():
-            warnings.simplefilter("error")
-            one, jobs = build_jobs(join)
-    finally:
-        strict.conf.set("spark.sql.shuffle.partitions", saved)
+    # an input within ONE_TASK_BYTES: the one-task plan, silent and
+    # job-free
+    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 1 << 20)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        one, jobs = build_jobs(join)
     assert jobs == 0
     pd.testing.assert_frame_equal(rows(one), rows(bucketed))
     # keyed as-of never had a build-time job: builds clean under strict
@@ -235,7 +232,7 @@ def test_strict_lazy_dim_inference(strict, tmp_path):
     cosine_pairs_q(vecs, threshold=0.5, dim=3)
 
 
-def test_strict_lazy_global_ewm(strict, tmp_path):
+def test_strict_lazy_global_ewm(strict, tmp_path, monkeypatch):
     """A cold global ewm build under strictLazy takes the lazy
     single-partition stock-pandas plan, like the other global
     range-bucket windows: it warns SINGLE-PARTITION, building it
@@ -288,15 +285,14 @@ def test_strict_lazy_global_ewm(strict, tmp_path):
     ewm_mean_times(
         tdf.withColumn("k", tdf.x > 0.5), "x", "ts", "1h", partition_by=["k"]
     )
-    saved = strict.conf.get("spark.sql.shuffle.partitions")
-    try:
-        strict.conf.set("spark.sql.shuffle.partitions", "1")
+    # an input within ONE_TASK_BYTES: the one-task plan, silent
+    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 1 << 20)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
         ewm_mean(sdf, "x", "idx", alpha=0.4)
         ewm_moment(sdf, "x", "idx", "var", alpha=0.4)
         ewm_sum(sdf, "x", "idx", alpha=0.4)
         ewm_mean_times(tdf, "x", "ts", "1h")
-    finally:
-        strict.conf.set("spark.sql.shuffle.partitions", saved)
 
 
 def test_single_partition_fallback_warns(strict, tmp_path):

@@ -243,29 +243,31 @@ def test_grouped_apply_keeps_user_column_named_like_bucket(spark):
 
 
 def test_placed_bucket_ids_balance_every_partition_count(spark):
-    """``_memo.placed_bucket_ids`` puts coarse bucket ``b`` on partition
-    ``b % n`` by Spark's own hash (``F.hash``, the Murmur3 that
-    ``repartition(n, col)`` places rows by), so each of the ``n``
-    partitions holds the same number of buckets, ±1, for every n in
-    1..256 — at ``coarse_group_count``'s 4n buckets and at a count that
-    is no multiple of n."""
+    """``_memo.placed_bucket_ids(n)`` holds, for each partition ``p``
+    of ``n``, an id that Spark's own hash (``F.hash``, the Murmur3 that
+    ``repartition(n, col)`` places rows by) puts on ``p``, for every n
+    in 1..256. So ``bucket_partitioned`` puts bucket ``b`` on partition
+    ``b % n``, and each of the ``n`` partitions holds the same number
+    of buckets, ±1, at any bucket count."""
     from pyspark.sql import functions as F
 
-    from pandarallel_spark.operators._memo import placed_bucket_ids
+    from pandarallel_spark.operators._memo import bucket_partitioned, placed_bucket_ids
 
     rows = []
     for n in range(1, 257):
-        for n_buckets in (4 * n, n + 3):
-            ids = placed_bucket_ids(n_buckets, n)
-            assert len(set(ids)) == n_buckets
-            rows += [(n, n_buckets, b, v) for b, v in enumerate(ids)]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["n", "n_buckets", "b", "id"]))
-    df = df.withColumn("part", F.pmod(F.hash("id"), F.col("n")))
-    assert df.filter(F.col("part") != F.col("b") % F.col("n")).count() == 0
-    per_part = df.groupBy("n", "n_buckets", "part").count()
-    unbalanced = (
-        per_part.groupBy("n", "n_buckets")
-        .agg(F.count("*").alias("parts"), (F.max("count") - F.min("count")).alias("spread"))
-        .filter((F.col("parts") != F.col("n")) | (F.col("spread") > 1))
-    )
-    assert unbalanced.count() == 0
+        ids = placed_bucket_ids(n)
+        assert len(set(ids)) == n
+        rows += [(n, p, v) for p, v in enumerate(ids)]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["n", "p", "id"]))
+    assert df.filter(F.pmod(F.hash("id"), F.col("n")) != F.col("p")).count() == 0
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n, n_buckets in ((4, 35), (4, 16), (3, 7), (2, 3)):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            b = spark.range(10 * n_buckets).select((F.col("id") % n_buckets).cast("int").alias("b"))
+            got = bucket_partitioned(b, "b").select("b", F.spark_partition_id().alias("p"))
+            assert sorted(map(tuple, got.distinct().collect())) == [
+                (v, v % n) for v in range(n_buckets)
+            ]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -138,8 +138,8 @@ def test_asof_equal_ts_matches(spark):
 
 @pytest.fixture(scope="module")
 def global_trades_quotes():
-    """Key-less frames: enough rows to span many range buckets (tests
-    run 8 shuffle partitions → 64 buckets), with tied and duplicate
+    """Key-less frames: enough rows to span many range buckets (one per
+    KiB of input under the ``bucketed`` fixture), with tied and duplicate
     LEFT timestamps; right timestamps unique (the documented as-of
     contract). Sparse right side so many buckets have no right row and
     the carry must chain across empty buckets."""
@@ -222,7 +222,7 @@ def test_asof_global_parallel_plan(spark, global_trades_quotes):
     assert "__bkt__" in plan
 
 
-@pytest.mark.usefixtures("bucketed")
+@pytest.mark.usefixtures("tiny_buckets")
 def test_asof_global_null_ts_routing(spark):
     """NULL left timestamps → NULL match (never a window over Spark's
     nulls-first sort); NULL right timestamps never match anything."""

@@ -1,13 +1,15 @@
-"""The one-task size rule of the global windows (``_memo.fits_one_task``).
+"""The size rule of the global windows (``_memo.range_bucket_count``).
 
 An input of at most ``_memo.ONE_TASK_BYTES`` by its optimized plan's
-``sizeInBytes`` runs every global range-bucket window and the global
-as-of join as one task: building its plan launches no Spark job and
-warns nothing, with or without strictLazy, and the result matches
-pandas. Above the limit (pinned here with ``ONE_TASK_BYTES = 0``) the
-same call builds the bucketed plan. On inputs under the limit the
-carry scans give one result, bit for bit, at every shuffle-partition
-count with AQE on or off.
+``sizeInBytes`` is one range bucket: every global range-bucket window
+and the global as-of join run it as one task, building the plan
+launches no Spark job and warns nothing, with or without strictLazy,
+and the result matches pandas. A larger input gets one bucket per
+``ONE_TASK_BYTES`` (pinned small here) and the same call builds the
+bucketed plan. No session setting enters the count, so on either plan
+the global windows give one result, bit for bit, at every
+shuffle-partition count with AQE on or off, and one boundary build
+serves every window over the same order column.
 """
 
 import hashlib
@@ -20,6 +22,7 @@ import pytest
 from pandarallel_spark.operators import _memo
 from pandarallel_spark.operators import window as W
 from pandarallel_spark.operators.join import asof_join
+from tests.conftest import BUCKET_BYTES
 from tests.test_window import _jobs_of
 
 N = 2000
@@ -177,7 +180,7 @@ def test_small_input_runs_one_task_with_no_build_job(spark, tmp_path, monkeypatc
     build, ref = OPS[op]
     pdf = _pdf()
     df = _parquet(spark, tmp_path / "in", pdf)
-    assert _memo.fits_one_task(df)
+    assert _memo.range_bucket_count(df) == 1
 
     out, jobs, warned = _build_quietly(spark, build, df)
     assert jobs == 0
@@ -195,28 +198,33 @@ def test_small_input_runs_one_task_with_no_build_job(spark, tmp_path, monkeypatc
     assert jobs == 0
     assert not warned, [str(w.message) for w in warned]
 
-    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 0)
-    assert not _memo.fits_one_task(df)
+    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", BUCKET_BYTES)
+    assert _memo.range_bucket_count(df) > 1
     _, jobs, _ = _build_quietly(spark, build, df)
     assert jobs > 0
 
 
-def test_fits_one_task_reads_the_plan_size(spark, tmp_path, monkeypatch):
-    """The rule follows the optimized plan's size and the shuffle
-    partition count, and a plan without statistics stays bucketed."""
+def test_range_bucket_count_reads_the_plan_size(spark, tmp_path, monkeypatch):
+    """The count is ``ceil(sizeInBytes / ONE_TASK_BYTES)``, capped at
+    1024, whatever the shuffle partitions; a plan without statistics
+    gets the cap."""
     df = _parquet(spark, tmp_path / "in", _pdf(n=200))
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", size)
-    assert _memo.fits_one_task(df)
-    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", size - 1)
-    assert not _memo.fits_one_task(df)
     no_stats = spark.createDataFrame(df.rdd, df.schema)
-    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 1 << 20)
-    assert not _memo.fits_one_task(no_stats)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
     try:
-        assert _memo.fits_one_task(no_stats)
+        for parts in ("1", "200"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            monkeypatch.setattr(_memo, "ONE_TASK_BYTES", size)
+            assert _memo.range_bucket_count(df) == 1
+            monkeypatch.setattr(_memo, "ONE_TASK_BYTES", size - 1)
+            assert _memo.range_bucket_count(df) == 2
+            monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 100)
+            assert _memo.range_bucket_count(df) == -(-size // 100)
+            monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 1)
+            assert _memo.range_bucket_count(df) == min(1024, size)
+            monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 1 << 20)
+            assert _memo.range_bucket_count(no_stats) == 1024
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -226,10 +234,10 @@ def test_rolling_udf_output_col_replaces_in_place(spark, monkeypatch, one_task):
     """An ``output_col`` naming an existing column replaces it where it
     stands, like ``withColumn``, on both plans."""
     if not one_task:
-        monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 0)
+        monkeypatch.setattr(_memo, "ONE_TASK_BYTES", BUCKET_BYTES)
     pdf = _by(_pdf(n=600), "o")
     df = spark.createDataFrame(pdf[["idx", "o", "x"]])
-    assert _memo.fits_one_task(df) == one_task
+    assert (_memo.range_bucket_count(df) == 1) == one_task
     out = W.rolling_apply(
         df, "x", 4, lambda a: float(a.sum()), "o", raw=True, vectorize=False,
         output_col="x",
@@ -250,21 +258,18 @@ _CARRY_SCANS = {
 }
 
 
-def test_small_input_carry_scans_do_not_depend_on_layout(spark, tmp_path):
-    """Global expanding sum/var and the four ewm variants over an input
-    under the limit give one sha256 digest each over shuffle partitions
-    {1, 3, 8} × AQE on/off: one task scans the data in key order, so no
-    session setting moves a bit."""
-    df = _parquet(spark, tmp_path / "in", _pdf(seed=11, n=5000, level=1e6, noise=1e-3))
+def _digest_counts(spark, df, ops, parts) -> dict:
+    """Distinct sha256 digests of each op's ``r`` column, in ``idx``
+    order, over shuffle partitions ``parts`` × AQE on/off."""
     confs = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     saved = {k: spark.conf.get(k) for k in confs}
-    digests = {op: set() for op in _CARRY_SCANS}
+    digests = {op: set() for op in ops}
     try:
-        for parts in ("1", "3", "8"):
+        for n in parts:
             for aqe in ("true", "false"):
-                spark.conf.set(confs[0], parts)
+                spark.conf.set(confs[0], n)
                 spark.conf.set(confs[1], aqe)
-                for op, build in _CARRY_SCANS.items():
+                for op, build in ops.items():
                     got = build(df).select("idx", "r").toPandas().sort_values("idx")
                     digests[op].add(
                         hashlib.sha256(got["r"].to_numpy(dtype="float64").tobytes()).hexdigest()
@@ -272,4 +277,77 @@ def test_small_input_carry_scans_do_not_depend_on_layout(spark, tmp_path):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-    assert {op: len(d) for op, d in digests.items()} == {op: 1 for op in _CARRY_SCANS}
+    return {op: len(d) for op, d in digests.items()}
+
+
+def _layout_frame(spark, tmp_path):
+    """Values at ~1e6 scale with 1e-3 noise: a float sum split at
+    another bucket boundary moves its last bits."""
+    return _parquet(spark, tmp_path / "in", _pdf(seed=11, n=5000, level=1e6, noise=1e-3))
+
+
+def test_small_input_carry_scans_do_not_depend_on_layout(spark, tmp_path):
+    """Global expanding sum/var and the four ewm variants over an input
+    under the limit give one sha256 digest each over shuffle partitions
+    {1, 3, 8} × AQE on/off: one task scans the data in key order, so no
+    session setting moves a bit."""
+    df = _layout_frame(spark, tmp_path)
+    assert _digest_counts(spark, df, _CARRY_SCANS, ("1", "3", "8")) == {
+        op: 1 for op in _CARRY_SCANS
+    }
+
+
+_BUCKETED_LAYOUT_OPS = {
+    **_CARRY_SCANS,
+    **{op: OPS[op][0] for op in ("expanding_max", "halo_builtin", "time_rolling_builtin", "asof")},
+}
+
+
+@pytest.mark.parametrize(
+    "parts",
+    [("1", "8"), pytest.param(("1", "3", "8", "32"), marks=pytest.mark.slow)],
+    ids=["1-8", "1-3-8-32"],
+)
+def test_bucketed_windows_do_not_depend_on_layout(spark, tmp_path, monkeypatch, parts):
+    """Above the limit, the carry scans, expanding max, a builtin halo
+    rolling(50) mean, a 1 h time-rolling sum and the key-less as-of join
+    each give one sha256 digest over shuffle partitions ``parts`` × AQE
+    on/off ({1, 8} by default, {1, 3, 8, 32} in the slow sweep). The
+    bucket count comes from the input's size, so every leg splits the
+    scans at the same boundaries; the shuffle partitions only decide
+    which task runs a bucket, and at one partition the bucketed plan
+    runs in one task."""
+    df = _layout_frame(spark, tmp_path)
+    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 8 << 10)
+    assert _memo.range_bucket_count(df) > 8
+    counts = _digest_counts(spark, df, _BUCKETED_LAYOUT_OPS, parts)
+    assert counts == {op: 1 for op in _BUCKETED_LAYOUT_OPS}
+
+
+def test_one_boundary_build_serves_every_window_and_partition_count(
+    spark, tmp_path, monkeypatch
+):
+    """Halo rolling and ewm over one order column share one memoized
+    boundary build: after a rolling mean, a cold ewm_mean runs only its
+    summary jobs, two fewer than the same ewm_mean on an identical but
+    unbuilt frame (the boundary aggregate runs two jobs under AQE). A
+    build at 8 shuffle partitions is a memo hit at 3: no job runs."""
+    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", BUCKET_BYTES)
+    pdf = _pdf(seed=5)
+    df = _parquet(spark, tmp_path / "a", pdf)
+    fresh = _parquet(spark, tmp_path / "b", pdf)
+    assert _memo.range_bucket_count(df) == _memo.range_bucket_count(fresh) > 1
+    rolling = lambda d: W.rolling_apply(d, "x", 50, "mean", "o", output_col="r")  # noqa: E731
+    ewm = lambda d: W.ewm_mean(d, "x", "o", alpha=0.3, output_col="e")  # noqa: E731
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        assert _jobs_of(spark, lambda: rolling(df)) > 0
+        after_rolling = _jobs_of(spark, lambda: ewm(df))
+        assert after_rolling > 0
+        assert _jobs_of(spark, lambda: ewm(fresh)) == after_rolling + 2
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        for build in (rolling, ewm):
+            assert _jobs_of(spark, lambda: build(df)) == 0
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

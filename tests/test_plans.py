@@ -8,6 +8,7 @@ from contextlib import redirect_stdout
 import pytest
 
 from pandarallel_spark.workload import queries
+from tests.conftest import bucket_partitioned_on
 
 # global windows on these small frames run the bucketed plan that inputs
 # above _memo.ONE_TASK_BYTES take (conftest ``bucketed``)
@@ -335,7 +336,7 @@ def test_global_weighted_window_is_bucket_partitioned(spark):
         buf = _io.StringIO()
         with _rs(buf):
             out.explain("formatted")
-        assert "hashpartitioning(__bkt__" in buf.getvalue(), agg
+        assert bucket_partitioned_on(buf.getvalue(), "__bkt__"), agg
 
 
 def test_global_ewm_times_is_bucket_partitioned(spark):
@@ -364,7 +365,7 @@ def test_global_ewm_times_is_bucket_partitioned(spark):
     with _rs(buf):
         out.explain("formatted")
     plan = buf.getvalue()
-    assert "hashpartitioning(__bkt__" in plan
+    assert bucket_partitioned_on(plan, "__bkt__")
     assert "SinglePartition" not in plan
 
 

@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 
 from pandarallel_spark import parallelize
+from tests.conftest import bucket_partitioned_on
 
 # global windows on these small frames run the bucketed plan that inputs
 # above _memo.ONE_TASK_BYTES take (conftest ``bucketed``)
@@ -267,7 +268,7 @@ def test_halo_rolling_is_multi_task(spark):
         plan_df.explain("formatted")
     plan = buf.getvalue()
     assert "FlatMapGroupsInPandas" in plan
-    assert "hashpartitioning(__bkt__" in plan
+    assert bucket_partitioned_on(plan, "__bkt__")
     # every Window partitions by the bucket id — an empty partition spec
     # would serialize the whole order through one task
     for seg in plan.split("Arguments: ")[1:]:
@@ -300,7 +301,7 @@ def test_global_builtin_rolling_is_bucketed_jvm(spark):
     with redirect_stdout(buf):
         plan_df.explain("formatted")
     plan = buf.getvalue()
-    assert "hashpartitioning(__bkt__" in plan
+    assert bucket_partitioned_on(plan, "__bkt__")
     assert "MapInPandas" not in plan  # pure JVM
     for seg in plan.split("Arguments: ")[1:]:
         head = seg.splitlines()[0]
@@ -320,7 +321,7 @@ def test_global_builtin_rolling_is_bucketed_jvm(spark):
     buf2 = io.StringIO()
     with redirect_stdout(buf2):
         corr_df.explain("formatted")
-    assert "hashpartitioning(__bkt__" in buf2.getvalue()
+    assert bucket_partitioned_on(buf2.getvalue(), "__bkt__")
     exp_c = pdf.x.rolling(5, min_periods=3).corr(pdf.y).to_numpy()
     got_c = corr_df.toPandas().sort_values("idx")["r"].to_numpy(dtype="float64")
     fin = np.isfinite(exp_c)
@@ -352,7 +353,7 @@ def test_global_time_rolling_is_bucketed_jvm(spark):
     with redirect_stdout(buf):
         out_df.explain("formatted")
     plan = buf.getvalue()
-    assert "hashpartitioning(__tgt__" in plan
+    assert bucket_partitioned_on(plan, "__tgt__")
     assert "MapInPandas" not in plan
     for seg in plan.split("Arguments: ")[1:]:
         head = seg.splitlines()[0]
@@ -442,7 +443,7 @@ def test_global_expanding_builtin_bucket_carry(spark):
             .parallel_apply("sum", output_col="r")
         ).explain("formatted")
     plan = buf.getvalue()
-    assert "hashpartitioning(__bkt__" in plan
+    assert bucket_partitioned_on(plan, "__bkt__")
     assert "MapInPandas" not in plan
     # integer sums compose exactly — dtype must stay bigint
     idf = spark.createDataFrame(
@@ -595,6 +596,7 @@ def test_halo_rolling_ties_preserve_rows(spark):
     pd.testing.assert_frame_equal(got, exp)
 
 
+@pytest.mark.usefixtures("tiny_buckets")
 def test_rolling_nulls_min_periods_matches_pandas(spark):
     """Null values: min_periods counts non-NaN observations and the UDF
     sees the window WITH its NaN slots, like pandas (review regression
@@ -972,6 +974,7 @@ def test_time_rolling_global_and_min_periods(spark):
     assert np.allclose(out, exp, rtol=1e-12, atol=1e-12, equal_nan=True)
 
 
+@pytest.mark.usefixtures("tiny_buckets")
 def test_time_rolling_count_gate_counts_nan_rows(spark):
     """pandas time-offset rolling ``count`` gates min_periods on frame
     ROWS including NaN (probed: explicit min_periods over an all-NaN
@@ -1116,7 +1119,7 @@ def test_time_rolling_center_global_is_bucketed(spark):
     with redirect_stdout(buf):
         out_df.explain("formatted")
     plan = buf.getvalue()
-    assert "hashpartitioning(__tgt__" in plan
+    assert bucket_partitioned_on(plan, "__tgt__")
     assert "MapInPandas" not in plan
     s = pd.Series(pdf.x.to_numpy(), index=pd.DatetimeIndex(pdf.ts))
     exp = s.rolling("30min", center=True, min_periods=2).sum().to_numpy()
@@ -1164,6 +1167,7 @@ def test_time_rolling_center_udf_vs_pandas(spark):
     assert np.allclose(out, exp, rtol=1e-9, atol=1e-12, equal_nan=True)
 
 
+@pytest.mark.usefixtures("tiny_buckets")
 def test_time_rolling_udf_min_periods_zero(spark):
     """Explicit min_periods=0 must pass through to the per-bucket /
     per-group stock-pandas rolling: pandas applies the UDF to
@@ -1201,7 +1205,7 @@ def test_time_rolling_bursty_fanout_capped(spark):
     span walk guarantees every coarse bucket spans ≥ the reach)."""
     from pyspark.sql import functions as F
 
-    from pandarallel_spark.operators._memo import shuffle_partitions
+    from pandarallel_spark.operators._memo import range_bucket_count
     from pandarallel_spark.operators.window import (
         _offset_bucket_exprs,
         _range_bucket_build,
@@ -1222,7 +1226,7 @@ def test_time_rolling_bursty_fanout_capped(spark):
     t_us = F.unix_micros(F.col("ts").cast("timestamp"))
     d = int(pd.Timedelta("30min").value // 1000)
     memo = _range_bucket_build(
-        sdf, ["ts"], shuffle_partitions(spark) * 16, null_msg="x", micros=True,
+        sdf, ["ts"], range_bucket_count(sdf), null_msg="x", micros=True,
     )
     exprs = _offset_bucket_exprs(memo, t_us, d)
     if exprs is None:
@@ -1245,6 +1249,7 @@ def test_time_rolling_bursty_fanout_capped(spark):
     assert np.allclose(got, exp, rtol=1e-12, atol=1e-9, equal_nan=True)
 
 
+@pytest.mark.usefixtures("tiny_buckets")
 def test_time_rolling_rejections(spark):
     pdf = _ts_frame(n=20, n_keys=1)
     sdf = spark.createDataFrame(pdf)
@@ -1806,6 +1811,7 @@ def test_new_ops_empty_input(spark):
     assert out.count() == 0
 
 
+@pytest.mark.usefixtures("tiny_buckets")
 def test_min_periods_zero_sum_matches_pandas(spark):
     """Explicit min_periods=0: pandas sum returns 0.0 on zero-observation
     windows (all-NaN and EMPTY frames alike); mean stays NaN. ADVICE r6 —
@@ -1895,7 +1901,7 @@ def test_time_rolling_wide_window_fanout_capped(spark):
     rng = np.random.default_rng(77)
     n = 4000
     # 1-second spacing; a 30-minute window spans ~1800 rows — many
-    # quantile buckets at the default 16x-partitions bucket count
+    # quantile buckets at the ``bucketed`` fixture's bucket count
     offs = np.cumsum(rng.integers(1, 3, n))
     ts = pd.Timestamp("2023-05-01") + pd.to_timedelta(offs, unit="s")
     pdf = pd.DataFrame({"i": np.arange(n, dtype="int64"), "ts": ts,
@@ -1925,9 +1931,9 @@ def test_time_rolling_wide_window_fanout_capped(spark):
 
     t_us = F.unix_micros(F.col("ts").cast("timestamp"))
     d = int(pd.Timedelta("30min").value // 1000)
-    from pandarallel_spark.operators._memo import shuffle_partitions
+    from pandarallel_spark.operators._memo import range_bucket_count
     memo = _range_bucket_build(
-        sdf, ["ts"], shuffle_partitions(spark) * 16, null_msg="x", micros=True,
+        sdf, ["ts"], range_bucket_count(sdf), null_msg="x", micros=True,
     )
     src, _own, fwd = _offset_bucket_exprs(memo, t_us, d)
     fan = (
@@ -1971,7 +1977,7 @@ def test_global_rolling_multicol_order_is_bucketed(spark):
     with redirect_stdout(buf):
         out_df.explain("formatted")
     plan = buf.getvalue()
-    assert "hashpartitioning(__bkt__" in plan, "builtin not bucketed"
+    assert bucket_partitioned_on(plan, "__bkt__"), "builtin not bucketed"
     assert "MapInPandas" not in plan
     got = (
         out_df.toPandas().sort_values(["t", "sub"])["r"]
@@ -1990,7 +1996,7 @@ def test_global_rolling_multicol_order_is_bucketed(spark):
     with redirect_stdout(buf):
         out_u.explain("formatted")
     plan_u = buf.getvalue()
-    assert "hashpartitioning(__bkt__" in plan_u, "UDF path not bucketed"
+    assert bucket_partitioned_on(plan_u, "__bkt__"), "UDF path not bucketed"
     got_u = (
         out_u.toPandas().sort_values(["t", "sub"])["r"]
         .to_numpy(dtype="float64")
@@ -2373,28 +2379,32 @@ def _bad_key_frame(spark, bad_col: str, bad: str):
         for bad in (["null"] if order == ["ts"] else ["null", "nan"])
     ],
 )
-def test_range_bucket_window_rejects_null_or_nan_order_key(spark, op, bad):
+def test_range_bucket_window_rejects_null_or_nan_order_key(spark, monkeypatch, op, bad):
     """Every global range-bucket window rejects a NULL order key (and
     NaN in a float one) with its own message: the bucketed plan at build
-    time, from the boundary aggregate's flag; the one-task plan (one
-    shuffle partition) when it executes."""
+    time, from the boundary aggregate's flag, at one shuffle partition
+    too; the one-task plan (an input within ``ONE_TASK_BYTES``) when it
+    executes."""
     import re
 
+    from pandarallel_spark.operators import _memo
     from pandarallel_spark.operators import window as W
 
     build, order, msg = _NULL_KEY_OPS[op]
     sdf = _bad_key_frame(spark, order[-1], bad)
     arg = order if len(order) > 1 else order[0]
-    with pytest.raises(ValueError, match=re.escape(msg)):
-        build(W, sdf, arg)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
     try:
-        out = build(W, sdf, arg)
-        with pytest.raises(Exception, match=re.escape(msg)):
-            out.collect()
+        for parts in (prev, "1"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            with pytest.raises(ValueError, match=re.escape(msg)):
+                build(W, sdf, arg)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    monkeypatch.setattr(_memo, "ONE_TASK_BYTES", 1 << 20)
+    out = build(W, sdf, arg)
+    with pytest.raises(Exception, match=re.escape(msg)):
+        out.collect()
 
 
 def _jobs_of(spark, fn) -> int:
@@ -2458,9 +2468,9 @@ def _same_bounds(got: dict, ref: tuple) -> bool:
 
 @pytest.mark.parametrize("kind", ["int", "float_nan", "ts_s", "ts_us", "date"])
 def test_range_boundaries_match_approx_quantile(spark, tmp_path, kind):
-    """The one-aggregate sampler gives exactly the boundaries of
-    ``DataFrame.approxQuantile`` at relative error ``1/n_buckets``
-    (NULL and NaN skipped), so bucket assignments are unchanged."""
+    """At relative error ``1/n_buckets`` the one-aggregate sampler gives
+    exactly the boundaries of ``DataFrame.approxQuantile`` at that
+    error (NULL and NaN skipped)."""
     from pyspark.sql import functions as F
 
     from pandarallel_spark.operators.window import range_boundaries
@@ -2478,7 +2488,9 @@ def test_range_boundaries_match_approx_quantile(spark, tmp_path, kind):
     else:
         num = c.cast("timestamp").cast("double")
     for n_buckets in (32, 64, 512):
-        (got,), flagged = range_boundaries(sdf, [col], n_buckets, micros=micros)
+        (got,), flagged = range_boundaries(
+            sdf, [col], n_buckets, micros=micros, accuracy=n_buckets
+        )
         assert not flagged
         ref = _approx_quantile_bounds(sdf, num, n_buckets, 1.0 / n_buckets)
         assert _same_bounds(got, ref), (n_buckets, got["bnds"][:5], ref[2][:5])
